@@ -24,8 +24,8 @@ object SqlCatalog {
       "Decode one 32-byte ABI word as address/uint/int/bool/bytes32"),
     "abi_decode_data" -> ("abi_decode_data(hex, types_csv) -> array<string>",
       "Decode an ABI data blob (static+dynamic heads/tails) into string fields"),
-    "ecrecover_sender" -> ("ecrecover_sender(rlp_tx) -> string",
-      "Recover the sending address from a signed RLP transaction (secp256k1)"),
+    "ecrecover_sender" -> ("ecrecover_sender(msg_hash, sig_r, sig_s, rec_id) -> string",
+      "Recover the signer's address from a secp256k1 signature over a 32-byte hash; null if invalid"),
     "vec_dot" -> ("vec_dot(array<float>, array<float>) -> double",
       "Dense dot product over float vectors (codegen, no UDF boxing)"),
     "vec_dot_long" -> ("vec_dot_long(array<bigint>, array<bigint>) -> bigint",

@@ -48,7 +48,10 @@ object Indexer {
     * `msg_hash`, `sig_r`, `sig_s`, `rec_id`). When present, every
     * decoded row is stamped with the recovered `tx_from` — the
     * reference's per-event sender enrichment (parser.go:152-159) in
-    * the distinct-tx → recover-once → broadcast-join form (J2). */
+    * the distinct-tx → recover → broadcast-join form (J2). The sender
+    * dimension is recovered once per run: it is persisted for the
+    * (contract, event) loop, every pair joins against it, and it is
+    * unpersisted when the loop ends. */
   /** `segment`: when set (the resume path, see [[Progress]]), each
     * (contract, event) lands under an additional
     * `segment=<tag>` directory — a continuation run appends new
@@ -96,7 +99,8 @@ object Indexer {
         unk.unpersist(false)
         EventCount(c.name, "_unknown", n)
       }
-    (for {
+    val senders = txs.map(t => LogPipeline.senders(t).persist())
+    try (for {
       c <- job.contracts
       ev <- c.parsedAbi
       if c.events.isEmpty || c.events.contains(ev.name)
@@ -108,7 +112,7 @@ object Indexer {
       val scoped = logs.filter(col("address") === c.address &&
         col("topic0") === ev.topic0)
       val plain = LogPipeline.decodeEvent(binaryTopics(scoped), ev, c.name, chainId)
-      val decoded = txs.fold(plain)(t => LogPipeline.attachTxFrom(plain, t))
+      val decoded = senders.fold(plain)(LogPipeline.joinSenders(plain, _))
         .cache()
       val n = decoded.count()
       Sinks.withRetries(job.retry.attempts, job.retry.delayMs) {
@@ -123,6 +127,7 @@ object Indexer {
       decoded.unpersist(false)
       EventCount(c.name, ev.name, n)
     }) ++ unknownCounts
+    finally senders.foreach(_.unpersist(false))
   }
 
   /** Streaming indexer: the same config-driven decode fan-out over the

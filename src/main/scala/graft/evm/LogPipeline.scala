@@ -206,21 +206,30 @@ object LogPipeline {
 
   /** J2: tx-sender enrichment — the Spark form of the reference's
     * per-event `types.Sender` stamp (`internal/parser/parser.go:152-
-    * 159`). The expensive ECDSA recovery runs ONCE per distinct
-    * transaction on the small dimension side, then broadcast-joins back
-    * onto the (much larger) decoded-log side — same restructuring as
-    * the block-timestamp cache (J1). `txs` carries the signature
-    * material (`tx_hash`, `msg_hash`/`sig_r`/`sig_s` binary, `rec_id`
-    * int); a missing tx or invalid signature leaves tx_from null, the
-    * reference's best-effort `err == nil` guard. At backfill scale the
-    * tx dim is bounded by txs-per-block × block range; drop the
-    * broadcast hint and let AQE pick the join if a range outgrows it. */
-  def attachTxFrom(rows: DataFrame, txs: DataFrame): DataFrame = {
-    val senders = txs.dropDuplicates("tx_hash")
+    * 159`), as [[senders]] then [[joinSenders]]. `txs` carries the
+    * signature material (`tx_hash`, `msg_hash`/`sig_r`/`sig_s` binary,
+    * `rec_id` int); a missing tx or invalid signature leaves tx_from
+    * null, the reference's best-effort `err == nil` guard. A caller
+    * that stamps several row sets against the same `txs` (the indexer's
+    * per-(contract, event) loop) builds the dimension once with
+    * [[senders]], persists it, and joins each set against it. */
+  def attachTxFrom(rows: DataFrame, txs: DataFrame): DataFrame =
+    joinSenders(rows, senders(txs))
+
+  /** The (tx_hash, tx_from) dimension: the expensive ECDSA recovery
+    * runs ONCE per distinct transaction, on the small side. */
+  def senders(txs: DataFrame): DataFrame =
+    txs.dropDuplicates("tx_hash")
       .select(col("tx_hash"),
         expr("ecrecover_sender(msg_hash, sig_r, sig_s, rec_id)").as("tx_from"))
+
+  /** Broadcast-join a [[senders]] dimension onto the (much larger)
+    * decoded-log side — same restructuring as the block-timestamp cache
+    * (J1). At backfill scale the dimension is bounded by txs-per-block ×
+    * block range; drop the broadcast hint and let AQE pick the join if
+    * a range outgrows it. */
+  def joinSenders(rows: DataFrame, senders: DataFrame): DataFrame =
     rows.join(broadcast(senders), Seq("tx_hash"), "left")
-  }
 
   /** Live J2: the reference's `TransactionByHash` → `types.Sender`
     * loop (parser.go:152-159), distributed. Distinct tx hashes fan out

@@ -97,11 +97,15 @@ object Scale {
     * NO-OP (guide §2.2: reducer count must track bytes, both ways).
     * Target bytes per partition: `spark.graft.checkpoint.partition.mb`
     * (default 32 MB of deserialized cache — a few hundred ms of
-    * downstream work per task). */
+    * downstream work per task); anything but a positive whole number
+    * fails the call before it checkpoints. */
   def compactCheckpoint(df: DataFrame): DataFrame = {
+    val key = "spark.graft.checkpoint.partition.mb"
+    val raw = df.sparkSession.conf.get(key, "32")
+    val mb = raw.toLongOption.getOrElse(0L)
+    require(mb > 0, s"$key must be a positive whole number of MB, got '$raw'")
+    val targetBytes = mb << 20
     val cp = df.localCheckpoint(true)
-    val targetBytes = df.sparkSession.conf
-      .get("spark.graft.checkpoint.partition.mb", "32").toLong << 20
     // walk the narrow deserialization wrappers down to the persisted RDD
     var r: org.apache.spark.rdd.RDD[_] = cp.rdd
     var hops = 0

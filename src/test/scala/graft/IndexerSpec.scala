@@ -235,8 +235,19 @@ class IndexerSpec extends SparkSpec {
 
     val job = Config.load(yaml, _ => tokenAbi)
     val txs = LogPipeline.synthesizeTxs(events)
-    Indexer.run(spark, job, dump, endBlock = 99, outDir = out,
-      txs = Some(txs))
+    val plans = new RecoveryPlans
+    spark.listenerManager.register(plans)
+    val counts = try {
+      val c = Indexer.run(spark, job, dump, endBlock = 99, outDir = out,
+        txs = Some(txs))
+      spark.range(1).toDF(RecoveryPlans.Sentinel).collect()
+      assert(plans.drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      c
+    } finally spark.listenerManager.unregister(plans)
+    // the sender dimension is recovered once per run, not once per pair
+    assert(counts.size >= 2)
+    assert(plans.recovering.get() == 1,
+      s"${plans.recovering.get()} executed plans evaluated ecrecover_sender")
 
     val back = spark.read.option("header", "true")
       .option("basePath", out).csv(out)
@@ -311,4 +322,40 @@ class IndexerSpec extends SparkSpec {
     assert(streamed.count() == batchTotal)
     assert(streamed.select("contract_name", "event_name").distinct().count() == 3)
   }
+}
+
+/** Counts the executed plans that evaluate `ecrecover_sender`. A cached
+  * relation's plan runs inside the first execution that reads it; every
+  * later read scans the cached buffers, so each cache is walked once.
+  * Every query before the [[RecoveryPlans.Sentinel]] query has been
+  * counted once `drained` opens. */
+final class RecoveryPlans extends org.apache.spark.sql.util.QueryExecutionListener {
+  import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
+  val recovering = new java.util.concurrent.atomic.AtomicInteger
+  val drained = new java.util.concurrent.CountDownLatch(1)
+  private val walked = java.util.Collections.newSetFromMap(
+    new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+
+  private def evaluates(p: SparkPlan): Boolean = p match {
+    case a: AdaptiveSparkPlanExec => evaluates(a.executedPlan)
+    case q: QueryStageExec => evaluates(q.plan)
+    case c: CommandResultExec => evaluates(c.commandPhysicalPlan)
+    case m: InMemoryTableScanExec =>
+      walked.add(m.relation.cacheBuilder) && evaluates(m.relation.cachedPlan)
+    case other =>
+      val own = other.expressions.exists(_.exists(_.isInstanceOf[graft.evm.EcRecoverExpr]))
+      (other.children ++ other.subqueries).map(evaluates).foldLeft(own)(_ || _)
+  }
+
+  override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+    if (qe.analyzed.output.exists(_.name == RecoveryPlans.Sentinel)) drained.countDown()
+    else if (evaluates(qe.executedPlan)) recovering.incrementAndGet()
+  override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+}
+
+object RecoveryPlans {
+  val Sentinel = "recovery_plans_sentinel"
 }

@@ -271,6 +271,17 @@ class ScaleSpec extends SparkSpec {
       .sameElements(wide.collect().map(_.toString).sorted))
   }
 
+  test("compactCheckpoint: a zero or non-numeric size conf fails loudly") {
+    val key = "spark.graft.checkpoint.partition.mb"
+    val df = spark.range(10).toDF("v")
+    try for (bad <- Seq("0", "32MB")) {
+      spark.conf.set(key, bad)
+      val e = intercept[IllegalArgumentException](Scale.compactCheckpoint(df))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("IVF persisted-list probe equals the inline broadcast-join plan") {
     // one semantics, two physical paths: the bucketed state probe must
     // reproduce ivfTopK row-for-row (its construction already asserts

@@ -40,4 +40,68 @@ class Secp256k1Spec extends AnyFunSuite {
     assert(Secp256k1.recoverAddress(msg, BigInteger.ZERO, BigInteger.ONE, 0) == null)
     assert(Secp256k1.recoverAddress(msg, Secp256k1.N, BigInteger.ONE, 0) == null)
   }
+
+  import Secp256k1.{G, N, P}
+
+  private val rnd = new java.util.Random(20240417L)
+  private def scalar(): BigInteger =
+    Iterator.continually(new BigInteger(256, rnd).mod(N)).find(_.signum() > 0).get
+
+  test("differential: 256 seeded signatures recover the signer, high-s too") {
+    for (i <- 0 until 256) {
+      val priv = scalar()
+      val msg = Keccak.hash256(s"graft differential $i".getBytes("UTF-8"))
+      val want = Secp256k1.address(Secp256k1.mul(priv, G).get)
+      val (r, s, recId) = Secp256k1.sign(msg, priv, scalar())
+      assert(Secp256k1.recoverAddress(msg, r, s, recId) == want, s"triple $i")
+      assert(Secp256k1.recoverAddress(msg, r, s, recId ^ 1) != want, s"triple $i")
+      // (r, n − s) is the same signature with R's parity flipped
+      assert(Secp256k1.recoverAddress(msg, r, N.subtract(s), recId ^ 1) == want,
+        s"triple $i, high-s")
+    }
+  }
+
+  test("external vector: the EIP-155 example signature recovers its sender") {
+    // the published EIP-155 example: v = 37 is chain 1, recId 0, over
+    // the sighash RlpSpec pins for the same transaction
+    val sighash = "daf5a779ae972f972197303d7b574746c7ef83eadac0f2791ad23db92e4c8e53"
+      .grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val r = new BigInteger(
+      "18515461264373351373200002665853028612451056578545711640558177340181847433846")
+    val s = new BigInteger(
+      "46948507304638947509940763649030358759909902576025900602547168820602576006531")
+    assert(Secp256k1.recoverAddress(sighash, r, s, 37 - 35 - 2 * 1) ==
+      "0x9d8a62f656a8d1615c1294fd71e9cfb3e4855a4f")
+  }
+
+  test("edge cases recover to null and never throw") {
+    val msg = Keccak.hash256("edge".getBytes("UTF-8"))
+    val (r, s, recId) = Secp256k1.sign(msg, scalar(), scalar())
+    def none(r: BigInteger, s: BigInteger, recIds: Seq[Int] = 0 to 3): Unit =
+      recIds.foreach(id => assert(Secp256k1.recoverAddress(msg, r, s, id) == null,
+        s"r=$r s=$s recId=$id"))
+    // scalars out of [1, n)
+    for (bad <- Seq(BigInteger.ZERO, N, N.add(BigInteger.ONE), P)) {
+      none(bad, s); none(r, bad)
+    }
+    // recId outside 0..3
+    none(r, s, Seq(-1, 4, 27))
+    // an x with no curve point (x³ + 7 is a non-residue)
+    val offCurve = Iterator.from(1).map(i => BigInteger.valueOf(i.toLong))
+      .find(x => Secp256k1.liftX(x, odd = false).isEmpty).get
+    none(offCurve, s)
+    // recId 2/3 put R at x = r + n, which is no field element once r + n ≥ p
+    for (big <- Seq(P.subtract(N), N.subtract(BigInteger.ONE))) none(big, s, Seq(2, 3))
+    // Q at infinity: R = k·G and s = e·k⁻¹ make s·R = e·G, so
+    // Q = r⁻¹(s·R − e·G) = ∞
+    val k = scalar()
+    val (rx, ry) = Secp256k1.mul(k, G).get
+    assert(rx.compareTo(N) < 0)
+    val sInf = new BigInteger(1, msg).multiply(k.modInverse(N)).mod(N)
+    val parity = if (ry.testBit(0)) 1 else 0
+    assert(Secp256k1.recoverPublicKey(msg, rx, sInf, parity).isEmpty)
+    none(rx, sInf, Seq(parity))
+    // the mirrored R (other parity) gives −2e·r⁻¹·G, a real key
+    assert(Secp256k1.recoverAddress(msg, rx, sInf, parity ^ 1) != null)
+  }
 }
