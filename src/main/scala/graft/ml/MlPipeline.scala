@@ -67,15 +67,20 @@ object MlPipeline {
     * classic 100 TB deadlock. (ts, event_type) is unique on the feature
     * grid, so the total order — and the split — is deterministic. */
   def timeSplit(df: DataFrame, frac: Double, ts: String): (DataFrame, DataFrame) = {
-    val (train, test, _) = timeSplitWithBase(df, frac, ts)
-    (train, test)
+    val sp = timeSplitWithBase(df, frac, ts)
+    (sp.train, sp.test)
   }
+
+  /** A chronological split, its persisted sorted base RDD and its row
+    * counts. The counts fall out of the cut, so nobody recounts a side. */
+  private case class Split(train: DataFrame, test: DataFrame,
+                           base: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
+                           nTrain: Long, nTest: Long)
 
   /** timeSplit plus the persisted sorted base RDD, so callers that cache
     * the split (the fitted-model cache) can release the base explicitly
     * on eviction instead of waiting for the ContextCleaner. */
-  private def timeSplitWithBase(df: DataFrame, frac: Double, ts: String)
-      : (DataFrame, DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+  private def timeSplitWithBase(df: DataFrame, frac: Double, ts: String): Split = {
     val spark = df.sparkSession
     val schema = df.schema
     // The sorted base is consumed three times (count for the cut,
@@ -85,11 +90,12 @@ object MlPipeline {
     // the split's lineage becomes unreachable.
     val base = df.orderBy(col(ts), col("event_type")).rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cut = (base.count() * frac).toLong
+    val total = base.count()
+    val cut = (total * frac).toLong
     val indexed = base.zipWithIndex()
-    (spark.createDataFrame(indexed.filter(_._2 < cut).map(_._1), schema),
-     spark.createDataFrame(indexed.filter(_._2 >= cut).map(_._1), schema),
-     base)
+    Split(spark.createDataFrame(indexed.filter(_._2 < cut).map(_._1), schema),
+      spark.createDataFrame(indexed.filter(_._2 >= cut).map(_._1), schema),
+      base, cut, total - cut)
   }
 
   def pipeline(): Pipeline = {
@@ -120,6 +126,7 @@ object MlPipeline {
     * lives in a separate, briefly-locked structure. */
   private case class Fitted(ds: DataFrame, train: DataFrame, test: DataFrame,
                             base: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
+                            nTrain: Long, nTest: Long,
                             model: org.apache.spark.ml.PipelineModel)
 
   /** LRU capacity; var only so tests can exercise eviction with a
@@ -137,15 +144,15 @@ object MlPipeline {
     val f = fittedCache.computeIfAbsent(key, _ => {
       val ds = dataset(spark, dir)
         .withColumn("pair_id", col("pair_id").cast("double")).cache()
-      val (train0, test0, base) = timeSplitWithBase(ds, 0.7, "bucket")
+      val sp = timeSplitWithBase(ds, 0.7, "bucket")
       // LBFGS runs one treeAggregate job per iteration; right-size the
       // train partitioning to the data (~100k rows/task) or per-task
       // scheduling overhead dominates the fit on small feature sets.
       val parts = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong, train0.count() / 100000L)).toInt
-      val train = train0.coalesce(parts).cache()
-      val test = test0.cache()
-      Fitted(ds, train, test, base, pipeline().fit(train))
+        spark.sparkContext.defaultParallelism.toLong, sp.nTrain / 100000L)).toInt
+      val train = sp.train.coalesce(parts).cache()
+      val test = sp.test.cache()
+      Fitted(ds, train, test, sp.base, sp.nTrain, sp.nTest, pipeline().fit(train))
     })
     recordUse(key)
     f
@@ -192,7 +199,7 @@ object MlPipeline {
         .setLabelCol("y").setMetricName("areaUnderROC").evaluate(scored)
     val base = f.train.agg(avg("y")).head().getDouble(0)
     import spark.implicits._
-    Seq((f.train.count(), f.test.count(), acc, auc, base))
+    Seq((f.nTrain, f.nTest, acc, auc, base))
       .toDF("n_train", "n_test", "accuracy", "auc", "train_base_rate")
   }
 
@@ -360,13 +367,11 @@ object MlPipeline {
 
   private def pinnedSplit(spark: SparkSession, dir: String): PinSplit = {
     val sp = pinCache.computeIfAbsent((spark, dir), _ => {
-      val ds = datasetRounded(spark, dir)
-      val (_, test0, base) = timeSplitWithBase(ds, 0.7, "bucket")
-      val test = test0.persist()
-      val n = base.count()
+      val split = timeSplitWithBase(datasetRounded(spark, dir), 0.7, "bucket")
+      val test = split.test.persist()
       test.count() // materialize test off the persisted base...
-      base.unpersist(false) // ...then release the base eagerly
-      PinSplit(n, test)
+      split.base.unpersist(false) // ...then release the base eagerly
+      PinSplit(split.nTrain + split.nTest, test)
     })
     // repopulate if an external sweep dropped the blocks
     if (sp.test.storageLevel == org.apache.spark.storage.StorageLevel.NONE)

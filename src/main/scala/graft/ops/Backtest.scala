@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Sequential trade-FSM backtests (SURVEY.md §2.6, F1/F2) —
@@ -10,11 +11,15 @@ import org.apache.spark.sql.types._
   * The reference walks the whole price matrix row-by-row in Python. Here
   * each pool's walk is an independent ordered fold, so the operator is a
   * `groupByKey(pool).flatMapGroups` — state per key is O(1) (one open
-  * position), work is distributed across keys, and only one shuffle (on
-  * the key) happens. The group's rows are sorted in-task by timestamp;
-  * a key's series must fit a task (grid length × ~32B — a 10-year 10s
-  * grid is ~250 MB, within executor memory; beyond that, split the fold
-  * into epoch chunks carrying boundary state).
+  * position, plus the trailing window in [[rollingZscoreReversion]]),
+  * work is distributed across keys, and only one shuffle (on the key)
+  * happens. The group's rows are sorted in-task by timestamp; a key's
+  * series must fit a task (grid length × ~32B — a 10-year 10s grid is
+  * ~250 MB, within executor memory; beyond that, split the fold into
+  * epoch chunks carrying boundary state).
+  *
+  * A closed trade's `pct_return` is null when its entry price is 0 (SQL
+  * `x / 0`), never ±inf or NaN.
   */
 object Backtest {
 
@@ -39,6 +44,28 @@ object Backtest {
     case o => o.hashCode().toLong
   }
 
+  /** Return of a position closed at `exit`; null at a zero entry price. */
+  private def pctReturn(side: String, entry: Double, exit: Double): Any =
+    if (entry == 0.0) null
+    else if (side == "long") (exit - entry) / entry
+    else (entry - exit) / entry
+
+  /** The skeleton every FSM here shares: project (key, ts, price,
+    * signal) with price and signal as doubles, shuffle once on the key,
+    * sort each key's rows by `ts` in-task and hand them to `walk`. */
+  private def perKey(df: DataFrame, key: String, ts: String, price: String,
+                     signal: String, schema: StructType)(
+      walk: (String, Array[Row]) => Iterator[Row]): DataFrame = {
+    implicit val enc = Encoders.row(schema)
+    implicit val keyEnc = Encoders.STRING
+    df.select(col(key).cast("string"), col(ts), col(price).cast("double"),
+        col(signal).cast("double"))
+      .groupByKey((r: Row) => r.getString(0))
+      .flatMapGroups { (k: String, rows: Iterator[Row]) =>
+        walk(k, rows.toArray.sortBy(r => tsKey(r.get(1))))
+      }
+  }
+
   /** F1: mean-reversion FSM (`simulate_mean_reversion`, ref `:131-178`).
     *
     * Input: one row per (pool, ts) with `price` and `dev` (fractional
@@ -50,15 +77,9 @@ object Backtest {
     * reference. `thr` is a fraction (reference takes percent/100).
     */
   def meanReversion(df: DataFrame, key: String, ts: String, price: String,
-                    dev: String, thr: Double): DataFrame = {
-    implicit val enc = Encoders.row(tradeSchema(df.schema(ts).dataType))
-    implicit val keyEnc = Encoders.STRING
-    import org.apache.spark.sql.functions.col
-    df.select(col(key).cast("string"), col(ts), col(price).cast("double"),
-        col(dev).cast("double"))
-      .groupByKey((r: Row) => r.getString(0))
-      .flatMapGroups { (pool: String, rows: Iterator[Row]) =>
-        val sorted = rows.toArray.sortBy(r => tsKey(r.get(1)))
+                    dev: String, thr: Double): DataFrame =
+    perKey(df, key, ts, price, dev, tradeSchema(df.schema(ts).dataType)) {
+      (pool, sorted) =>
         var side: String = null
         var entryTs: Any = null
         var entryPrice = 0.0
@@ -70,70 +91,203 @@ object Backtest {
               if (d <= -thr) { side = "long"; entryTs = r.get(1); entryPrice = p }
               else if (d >= thr) { side = "short"; entryTs = r.get(1); entryPrice = p }
             } else if ((side == "long" && d >= 0) || (side == "short" && d <= 0)) {
-              val ret = if (side == "long") (p - entryPrice) / entryPrice
-                        else (entryPrice - p) / entryPrice
-              out += Row(pool, side, entryTs, r.get(1), entryPrice, p, ret)
+              out += Row(pool, side, entryTs, r.get(1), entryPrice, p,
+                pctReturn(side, entryPrice, p))
               side = null
             }
           }
         }
         out.result().iterator
+    }
+
+  /** F2 core: one pool's z-score FSM, fed its rows in time order. A NaN
+    * `z` makes no decision; the caller's `idx` still counts that row, so
+    * it advances the hold clock. */
+  private final class ZscoreFsm(pool: String, entryZ: Double, exitZ: Double,
+                                maxHold: Int) {
+    private var side: String = null
+    private var entryIdx = 0
+    private var entryTs: Any = null
+    private var entryPrice = 0.0
+    private var entryZv = 0.0
+    private val out = Array.newBuilder[Row]
+
+    def step(idx: Int, ts: Any, p: Double, zv: Double): Unit =
+      if (!zv.isNaN) {
+        if (side == null) {
+          if (zv <= -entryZ) open("long", idx, ts, p, zv)
+          else if (zv >= entryZ) open("short", idx, ts, p, zv)
+        } else {
+          val held = idx - entryIdx
+          if ((side == "long" && zv >= -exitZ) || (side == "short" && zv <= exitZ) ||
+              held >= maxHold) {
+            out += Row(pool, side, entryTs, ts, entryPrice, p, entryZv, zv,
+              pctReturn(side, entryPrice, p), held)
+            side = null
+          }
+        }
       }
+
+    private def open(s: String, idx: Int, ts: Any, p: Double, zv: Double): Unit = {
+      side = s; entryIdx = idx; entryTs = ts; entryPrice = p; entryZv = zv
+    }
+
+    def trades: Iterator[Row] = out.result().iterator
   }
 
+  /** Walks each key's rows through [[ZscoreFsm]], `idx` counting every
+    * row. `zOf` makes one per-key transform from the signal column to z
+    * (null signal → NaN); a null price also makes no decision. */
+  private def zscoreWalk(df: DataFrame, key: String, ts: String, price: String,
+                         signal: String, entryZ: Double, exitZ: Double,
+                         maxHold: Int)(zOf: () => Double => Double): DataFrame =
+    perKey(df, key, ts, price, signal, zTradeSchema(df.schema(ts).dataType)) {
+      (pool, sorted) =>
+        val fsm = new ZscoreFsm(pool, entryZ, exitZ, maxHold)
+        val z = zOf()
+        var idx = 0
+        for (r <- sorted) {
+          val zv = z(if (r.isNullAt(3)) Double.NaN else r.getDouble(3))
+          if (!r.isNullAt(2)) fsm.step(idx, r.get(1), r.getDouble(2), zv)
+          idx += 1
+        }
+        fsm.trades
+    }
+
   /** F2: z-score reversion FSM with one-sided exits and a time stop
-    * (`simulate_zscore_reversion`, ref `:182-251`).
+    * (`simulate_zscore_reversion`, ref `:182-251`), for callers that
+    * already hold a z column.
     *
     * Per pool, chronologically, with `idx` counting every grid row (so
     * warm-up rows with null z still advance the hold clock, matching the
-    * reference's global row index): null z rows are skipped; while flat,
-    * `z <= -entryZ` opens LONG, `z >= entryZ` opens SHORT; while
+    * reference's global row index): null or NaN z rows are skipped; while
+    * flat, `z <= -entryZ` opens LONG, `z >= entryZ` opens SHORT; while
     * positioned, LONG exits when `z >= -exitZ`, SHORT when `z <= exitZ`,
     * either exits when `held = idx - entry_idx >= maxHold`.
     */
   def zscoreReversion(df: DataFrame, key: String, ts: String, price: String,
                       z: String, entryZ: Double, exitZ: Double,
-                      maxHold: Int): DataFrame = {
-    implicit val enc = Encoders.row(zTradeSchema(df.schema(ts).dataType))
-    implicit val keyEnc = Encoders.STRING
-    import org.apache.spark.sql.functions.col
-    df.select(col(key).cast("string"), col(ts), col(price).cast("double"),
-        col(z).cast("double"))
-      .groupByKey((r: Row) => r.getString(0))
-      .flatMapGroups { (pool: String, rows: Iterator[Row]) =>
-        val sorted = rows.toArray.sortBy(r => tsKey(r.get(1)))
-        var side: String = null
-        var entryIdx = 0
-        var entryTs: Any = null
-        var entryPrice = 0.0
-        var entryZv = 0.0
-        val out = Array.newBuilder[Row]
-        var idx = 0
-        for (r <- sorted) {
-          if (!r.isNullAt(2) && !r.isNullAt(3) && !r.getDouble(3).isNaN) {
-            val zv = r.getDouble(3); val p = r.getDouble(2)
-            if (side == null) {
-              if (zv <= -entryZ) {
-                side = "long"; entryIdx = idx; entryTs = r.get(1); entryPrice = p; entryZv = zv
-              } else if (zv >= entryZ) {
-                side = "short"; entryIdx = idx; entryTs = r.get(1); entryPrice = p; entryZv = zv
-              }
-            } else {
-              val held = idx - entryIdx
-              val exit = (side == "long" && zv >= -exitZ) ||
-                         (side == "short" && zv <= exitZ) || held >= maxHold
-              if (exit) {
-                val ret = if (side == "long") (p - entryPrice) / entryPrice
-                          else (entryPrice - p) / entryPrice
-                out += Row(pool, side, entryTs, r.get(1), entryPrice, p,
-                  entryZv, zv, ret, held)
-                side = null
-              }
-            }
-          }
-          idx += 1
-        }
-        out.result().iterator
+                      maxHold: Int): DataFrame =
+    zscoreWalk(df, key, ts, price, z, entryZ, exitZ, maxHold)(() => identity)
+
+  /** F2 from the deviation itself: the reference's
+    * `z = (dev − dev.rolling(lookback, min_periods=lookback).mean()) /
+    * ….std(ddof=0)` and the [[zscoreReversion]] FSM, fused into one
+    * per-key pass — one shuffle, and O(rows) work, where
+    * [[TimeSeries.rollingStats]] + [[zscoreReversion]] costs a window
+    * exchange plus the FSM's and O(rows × lookback) frame updates.
+    *
+    * z is null (the row is skipped, its `idx` still counted) while the
+    * trailing `lookback` rows hold a null `dev`, on a null `dev`, and
+    * when the window's σ is 0 — a flat stretch, where pandas gives NaN
+    * and SQL's `x / 0` gives null. Every other z equals pandas' bit for
+    * bit, except where rounding leaves the running variance negative:
+    * pandas clips that to σ 0 and gets ±inf, this pass gives null.
+    */
+  def rollingZscoreReversion(df: DataFrame, key: String, ts: String, price: String,
+                             dev: String, lookback: Int, entryZ: Double,
+                             exitZ: Double, maxHold: Int): DataFrame = {
+    require(lookback >= 1, s"lookback must be at least 1, got $lookback")
+    zscoreWalk(df, key, ts, price, dev, entryZ, exitZ, maxHold)(
+      () => new RollingZ(lookback).next)
+  }
+
+  /** Trailing-`n`-row z-score with one add and at most one remove per
+    * row: a port of pandas' `roll_mean` / `roll_var` (ddof 0) for a
+    * fixed window with `min_periods = n`. Sums are Kahan-compensated
+    * (separate add and remove compensations, as pandas keeps them), the
+    * variance is Welford's, NaN values take a slot but are not
+    * observations, and a run of equal values covering every observation
+    * in the window gives mean exactly that value and σ exactly 0
+    * (pandas GH#42064). A negative variance from rounding clips to σ 0. */
+  private final class RollingZ(n: Int) {
+    private val window = new Array[Double](n)
+    private var rows = 0L
+    private var nobs = 0
+    // roll_mean
+    private var sumX = 0.0
+    private var negCt = 0
+    private var compAddM = 0.0
+    private var compRemM = 0.0
+    // roll_var
+    private var meanX = 0.0
+    private var ssqdm = 0.0
+    private var compAddV = 0.0
+    private var compRemV = 0.0
+    // both: length of the current run of equal observations
+    private var sameRun = 0L
+    private var prevValue = Double.NaN
+
+    /** Push the next row's value and return its z, NaN when undefined. */
+    def next(v: Double): Double = {
+      val slot = (rows % n).toInt
+      // pandas restarts a window that shares no row with the previous
+      // one: every row when n = 1
+      if (rows == 0 || n == 1) reset(v)
+      else if (rows >= n) remove(window(slot))
+      add(v)
+      window(slot) = v
+      rows += 1
+      if (nobs < n || v.isNaN) Double.NaN
+      else {
+        val sd = std
+        if (sd == 0.0 || sd.isNaN) Double.NaN else (v - mean) / sd
       }
+    }
+
+    private def reset(first: Double): Unit = {
+      nobs = 0; sumX = 0.0; negCt = 0; compAddM = 0.0; compRemM = 0.0
+      meanX = 0.0; ssqdm = 0.0; compAddV = 0.0; compRemV = 0.0
+      sameRun = 0L; prevValue = first
+    }
+
+    private def add(v: Double): Unit = if (!v.isNaN) {
+      nobs += 1
+      if (v == prevValue) sameRun += 1 else sameRun = 1
+      prevValue = v
+      val y = v - compAddM
+      val t = sumX + y
+      compAddM = t - sumX - y
+      sumX = t
+      if (java.lang.Double.doubleToRawLongBits(v) < 0) negCt += 1
+      val prevMean = meanX - compAddV
+      val yv = v - compAddV
+      val tv = yv - meanX
+      compAddV = tv + meanX - yv
+      meanX += tv / nobs
+      ssqdm += (v - prevMean) * (v - meanX)
+    }
+
+    private def remove(v: Double): Unit = if (!v.isNaN) {
+      nobs -= 1
+      val y = -v - compRemM
+      val t = sumX + y
+      compRemM = t - sumX - y
+      sumX = t
+      if (java.lang.Double.doubleToRawLongBits(v) < 0) negCt -= 1
+      if (nobs > 0) {
+        val prevMean = meanX - compRemV
+        val yv = v - compRemV
+        val tv = yv - meanX
+        compRemV = tv + meanX - yv
+        meanX -= tv / nobs
+        ssqdm -= (v - prevMean) * (v - meanX)
+      } else {
+        meanX = 0.0; ssqdm = 0.0
+      }
+    }
+
+    private def mean: Double = {
+      val r = sumX / nobs
+      if (sameRun >= nobs) prevValue
+      else if (negCt == 0 && r < 0) 0.0
+      else if (negCt == nobs && r > 0) 0.0
+      else r
+    }
+
+    private def std: Double = {
+      val variance = if (nobs == 1 || sameRun >= nobs) 0.0 else ssqdm / nobs
+      if (variance < 0) 0.0 else math.sqrt(variance)
+    }
   }
 }

@@ -63,23 +63,6 @@ object Scale {
   def fanoutRepartition(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(shufflePartitions(df), keys: _*)
 
-  /** Spread a narrow-split input across the session's cores before a
-    * CPU-heavy map chain (tokenize → shingle → explode, codec kernels):
-    * when the input's PLANNED partition count is below the session
-    * shuffle parallelism — one small parquet file plans as ONE scan
-    * task at test scale (guide §6, input splits), serializing the
-    * chain's whole CPU cost (measured: the two map stages feeding
-    * jaccardPairs' fanout exchanges ran ~0.5 s each in one task at
-    * sf0.1, ~1 s serial inside every graph-family query) — repartition
-    * by the unique row key so the chain runs wide. At cluster scale a
-    * corpus scan already has ≥ cores splits and this is a NO-OP; the
-    * gate reads plan metadata (file splits), never runs a job. */
-  def spreadNarrowScan(df: DataFrame, key: Column): DataFrame = {
-    val target = shufflePartitions(df)
-    if (df.rdd.getNumPartitions >= target) df
-    else df.repartition(target, key)
-  }
-
   /** Eager localCheckpoint whose MATERIALIZED byte size then drives the
     * partition count every downstream stage schedules. An iterative
     * loop's per-round state (labels, ranks, survivor sets, HLL register

@@ -192,17 +192,16 @@ object SeriesQueries {
   }
 
   /** F2: z-score reversion FSM with one-sided exits + time stop.
-    * z from rolling(24, min_periods=24, ddof=0) of absolute deviation. */
+    * z from rolling(24, min_periods=24, ddof=0) of absolute deviation,
+    * computed inside the FSM's per-key pass
+    * ([[Backtest.rollingZscoreReversion]]); a zero-σ window gives null z. */
   def fsmZscore(s: SparkSession, d: String): DataFrame = {
     val f = filled(s, d)
     val consensus = f.groupBy("bucket").agg(avg("value").as("c_mean"))
     val dev = f.join(consensus, Seq("bucket"))
       .withColumn("dev", col("value") - col("c_mean"))
-    val withZ = TimeSeries.rollingStats(dev, "event_type", "bucket", "dev",
-        n = 24, minPeriods = 24, ddofZero = true, meanCol = "rm", stdCol = "rs")
-      .withColumn("z", (col("dev") - col("rm")) / col("rs"))
-    Backtest.zscoreReversion(withZ, "event_type", "bucket", "value", "z",
-        entryZ = 2.0, exitZ = 0.2, maxHold = 48)
+    Backtest.rollingZscoreReversion(dev, "event_type", "bucket", "value", "dev",
+        lookback = 24, entryZ = 2.0, exitZ = 0.2, maxHold = 48)
       .select(col("pool"), col("side"),
         col("entry_ts").cast("timestamp_ntz").as("entry_ts"),
         col("exit_ts").cast("timestamp_ntz").as("exit_ts"),

@@ -80,7 +80,13 @@ object TimeSeries {
   /** A5/A6: rolling mean + stddev over the trailing `n` rows per key, with
     * pandas `min_periods` semantics (null until the window holds at least
     * `minPeriods` rows). `ddofZero=true` → population stddev (pandas
-    * `std(ddof=0)`), else sample. */
+    * `std(ddof=0)`), else sample.
+    *
+    * Costs O(rows × n): Spark's sliding `rowsBetween(-(n-1), 0)` frame
+    * re-aggregates the whole frame for every row. That is cheap at the
+    * n = 24 its callers use; for a long lookback feeding the z-score FSM
+    * use [[Backtest.rollingZscoreReversion]], which keeps the window
+    * up to date in O(rows). */
   def rollingStats(df: DataFrame, key: String, ts: String, value: String,
                    n: Int, minPeriods: Int, ddofZero: Boolean,
                    meanCol: String, stdCol: String): DataFrame = {

@@ -10,8 +10,9 @@ import graft.sources.Sinks
   * (`analytics/stable_eth_meanrevert_bot.py`): discover swap CSVs by
   * filename pattern → read with bad-line skip + numeric coercion →
   * polarity → 60s resample + ffill → tick→price → common grid (the
-  * inner join across pools) → consensus dev → trade FSM → monthly
-  * aggregation. Golden-tested against a pinned run of the reference
+  * inner join across pools) → consensus dev → trade FSM (the z-score
+  * mode computes its rolling z inside the FSM's per-pool pass) →
+  * monthly aggregation. Golden-tested against a pinned run of the reference
   * itself on the same fixture CSVs (EthBotSpec).
   */
 object EthBot {
@@ -67,19 +68,18 @@ object EthBot {
     Backtest.meanReversion(dev, "pool", "bucket", "price", "dev", thrPct / 100.0)
   }
 
-  /** F2 mode: rolling z-score of the absolute deviation (ref `:182-251`). */
+  /** F2 mode: rolling z-score of the absolute deviation (ref `:182-251`),
+    * z and FSM in one per-pool pass ([[Backtest.rollingZscoreReversion]]):
+    * O(rows) for any `lookback` (the reference's 1440), and a flat
+    * stretch of `lookback` rows gives null z instead of a divide by zero. */
   def tradesZscore(spark: SparkSession, dataDir: String, lookback: Int,
                    entryZ: Double, exitZ: Double, maxHold: Int): DataFrame = {
     val grid = commonGrid(poolPrices(spark, dataDir))
     val mean = grid.groupBy("bucket").agg(avg("price").as("mean_price"))
     val dev = grid.join(mean, Seq("bucket"))
       .withColumn("dev", col("price") - col("mean_price"))
-    val withZ = TimeSeries.rollingStats(dev, "pool", "bucket", "dev",
-        n = lookback, minPeriods = lookback, ddofZero = true,
-        meanCol = "rm", stdCol = "rs")
-      .withColumn("z", (col("dev") - col("rm")) / col("rs"))
-    Backtest.zscoreReversion(withZ, "pool", "bucket", "price", "z",
-      entryZ, exitZ, maxHold)
+    Backtest.rollingZscoreReversion(dev, "pool", "bucket", "price", "dev",
+      lookback, entryZ, exitZ, maxHold)
   }
 
   /** A9: monthly / yearly return sums (ref `aggregate_returns`). */

@@ -55,4 +55,33 @@ class EthBotSpec extends SparkSpec {
     assert(monthly.length == 1)
     assert(math.abs(monthly(0).getDouble(1) - 0.107032) < 1e-5)
   }
+
+  test("z-score mode: flat stretches give null z, not a divide by zero") {
+    // two pools on one tick; USDC goes 100 ticks up for minutes 5-8.
+    // With lookback 3 the warm-up and the flat windows (minutes 2-4 and
+    // 7-8) have σ 0; dev = ±d at the jump gives z = ±√2, then ±1/√2,
+    // and −/+√2 when USDC drops back at minute 9
+    val dir = java.nio.file.Files.createTempDirectory("ethbot_flat")
+    val t0 = 1704067200L
+    def write(name: String, tick: Int => Int): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name),
+        ("timestamp,tick,extra" +: (0 until 10).map(m => s"${t0 + 60 * m + 7},${tick(m)},x"))
+          .mkString("", "\n", "\n"))
+    write("DAIETH500_Swap.csv", _ => -80000)
+    write("USDCETH500_Swap.csv", m => if (m >= 5 && m <= 8) -79900 else -80000)
+    val got = EthBot.tradesZscore(spark, dir.toString, lookback = 3,
+        entryZ = 1.4, exitZ = 0.2, maxHold = 100)
+      .orderBy("pool").collect()
+    val up = 1.0 - math.pow(1.0001, -100) // short return on USDC's drop
+    assert(got.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("DAIETH500", "long"), ("USDCETH500", "short")))
+    got.zip(Seq((-1.0, 0.0), (1.0, up))).foreach { case (g, (sign, ret)) =>
+      assert(g.getTimestamp(2).toInstant.getEpochSecond == t0 + 300)
+      assert(g.getTimestamp(3).toInstant.getEpochSecond == t0 + 540)
+      assert(math.abs(g.getDouble(6) - sign * math.sqrt(2)) < 1e-9) // entry_z
+      assert(math.abs(g.getDouble(7) + sign * math.sqrt(2)) < 1e-9) // exit_z
+      assert(math.abs(g.getDouble(8) - ret) < 1e-12)
+      assert(g.getInt(9) == 4)
+    }
+  }
 }
