@@ -18,6 +18,8 @@ object SqlCatalog {
     // name -> (signature, one-line description)
     "keccak256" -> ("keccak256(bytes) -> string",
       "Keccak-256 digest as 0x-hex; constant-folds on literals"),
+    "hex0x" -> ("hex0x(bytes) -> string",
+      "'0x' + lowercase hex of a binary value (data_hex); same as concat('0x', lower(hex(x)))"),
     "evm_topic0" -> ("evm_topic0(signature) -> string",
       "Event-signature hash (topic0) of e.g. 'Transfer(address,address,uint256)'"),
     "abi_decode_word" -> ("abi_decode_word(hex, kind) -> string",

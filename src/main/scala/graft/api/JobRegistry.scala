@@ -70,11 +70,14 @@ class JobRegistry(spark: SparkSession, poolSize: Int = 4) {
   def list(): Seq[JobInfo] = jobs.values().asScala.toSeq.sortBy(_.submittedAt)
 
   /** C3: cooperative cancel — running Spark stages of the job group are
-    * interrupted; a queued job is dropped before it starts. */
+    * interrupted and any Spark job the group starts afterwards fails at
+    * submission (a body that fans out over several jobs, like the
+    * indexer's concurrent pair writes, stops launching work); a queued
+    * job is dropped before it starts. */
   def cancel(id: String): Boolean = status(id) match {
     case Some(j) if j.state == Queued || j.state == Running =>
       cancelled.add(id)
-      spark.sparkContext.cancelJobGroup(id)
+      spark.sparkContext.cancelJobGroupAndFutureJobs(id)
       true
     case _ => false
   }

@@ -20,7 +20,7 @@ object AbiCodec {
 
   final val Word = 32
 
-  def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+  import Keccak.hex
 
   def unhex(s: String): Array[Byte] = {
     val t = if (s.startsWith("0x")) s.substring(2) else s

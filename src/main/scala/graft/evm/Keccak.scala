@@ -106,8 +106,11 @@ object Keccak {
     out
   }
 
-  def hex(bytes: Array[Byte]): String =
-    bytes.map(b => f"${b & 0xff}%02x").mkString
+  private val Hex = java.util.HexFormat.of()
+
+  /** Lowercase hex, no prefix: the one hex renderer of the EVM surface
+    * (topics, addresses, ABI words, `data_hex` via [[Hex0xExpr]]). */
+  def hex(bytes: Array[Byte]): String = Hex.formatHex(bytes)
 
   /** topic0 of an event signature like "Transfer(address,address,uint256)". */
   def eventTopic0(signature: String): String =

@@ -96,6 +96,10 @@ object LogPipeline {
     }: _*)
   }
 
+  /** "0x" + lowercase hex of a binary column ([[Hex0xExpr]]): the raw
+    * rendering of payloads and topics in every decode projection. */
+  def hex0x(c: Column): Column = call_function("hex0x", c)
+
   /** J4: contract-registry enrichment — the configured
     * `map[address]ContractConfig` (`indexer.go:51-62`) as a broadcast
     * dimension join; unknown addresses keep null contract_name (the
@@ -112,13 +116,34 @@ object LogPipeline {
 
   /** C6: per-batch progress metrics — the reference's
     * `[OK] Block a → b | Events: n` chunk log (`indexer.go:160-161`)
-    * becomes an `Observation` on the decoded stream: run any action on
-    * the returned frame, then read `obs.get` for events/blocks counts. */
-  def observed(df: DataFrame, name: String): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation(name)
-    (df.observe(obs, count(lit(1)).as("events"),
-      min(col("block_number")).as("from_block"),
-      max(col("block_number")).as("to_block")), obs)
+    * becomes metrics observed on the decoded stream: `action` runs once
+    * on the observed frame, and its result comes back with the
+    * `events`/`from_block`/`to_block` that action saw.
+    *
+    * The metrics are read by a `QueryExecutionListener` registered for
+    * the call, not through a `sql.Observation`: in Spark 4.1 registering
+    * an Observation initialises the session's `ObservationManager`,
+    * which is not serializable, so every later task that captures the
+    * session (a fitted Spark ML model's training summary does) fails
+    * with "Task not serializable". */
+  def observed[T](df: DataFrame, name: String)(action: DataFrame => T): (T, Map[String, Any]) = {
+    val key = s"$name#${java.util.UUID.randomUUID()}"
+    val metrics = scala.concurrent.Promise[Map[String, Any]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        qe.observedMetrics.get(key).foreach(r =>
+          metrics.trySuccess(r.getValuesMap[Any](r.schema.fieldNames.toSeq)))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      val out = action(df.observe(key, count(lit(1)).as("events"),
+        min(col("block_number")).as("from_block"),
+        max(col("block_number")).as("to_block")))
+      (out, scala.concurrent.Await.result(metrics.future, scala.concurrent.duration.Duration.Inf))
+    } finally df.sparkSession.listenerManager.unregister(listener)
   }
 
   /** Per-block timestamps: the enrichment dimension (stand-in for
@@ -142,7 +167,7 @@ object LogPipeline {
         expr("abi_decode_word(topic2, 'address')").as("to_addr"),
         expr("abi_decode_data(data, 'uint256')").getField("arg0").as("value"),
         coalesce(expr("abi_decode_data(data, 'uint256')").getField("arg0").cast("string"),
-          concat(lit("0x"), lower(hex(col("data"))))).as("value_or_hex"))
+          hex0x(col("data"))).as("value_or_hex"))
   }
 
   /** Generic event decode: given a parsed ABI event, build the full
@@ -170,7 +195,7 @@ object LogPipeline {
       col("__d").getField(s"arg$i").as(p.name)
     }
     withStruct.select(meta ++ indexed ++ payload :+
-      concat(lit("0x"), lower(hex(col("data")))).as("data_hex"): _*)
+      hex0x(col("data")).as("data_hex"): _*)
   }
 
   /** raw_params escape hatch (SURVEY §1.5): logs whose topic0 matches
@@ -185,15 +210,14 @@ object LogPipeline {
     * no join, no shuffle, safe at any scale. */
   def decodeUnknown(logs: DataFrame, knownTopic0s: Seq[String],
                     chainId: String): DataFrame = {
-    val hexOf = (c: Column) => concat(lit("0x"), lower(hex(c)))
     // sources differ in which topic slots they carry (synthesized
     // frames have no topic3); absent slots simply don't enter the map
     val entries =
       Seq(lit("topic0") -> col("topic0").cast("string")) ++
         (1 to 3).collect {
           case i if logs.columns.contains(s"topic$i") =>
-            lit(s"topic$i") -> hexOf(col(s"topic$i"))
-        } :+ (lit("data") -> hexOf(col("data")))
+            lit(s"topic$i") -> hex0x(col(s"topic$i"))
+        } :+ (lit("data") -> hex0x(col("data")))
     val raw = map(entries.flatMap { case (k, v) => Seq(k, v) }: _*)
     logs.filter(!col("topic0").isin(knownTopic0s: _*))
       .select(col("tx_hash"), col("block_number"),

@@ -53,6 +53,10 @@ object AbiRt {
     InternalRow.fromSeq(AbiCodec.decodeData(d, types)
       .toIndexedSeq.zip(types).map { case (v, t) => convert(v, t) })
 
+  /** [[Hex0xExpr]]: "0x" + lowercase hex of a binary value. */
+  def hex0x(b: Array[Byte]): UTF8String =
+    UTF8String.fromString("0x" + Keccak.hex(b))
+
   /** [[EcRecoverExpr]]: best-effort address recovery — any invalid
     * input (bad point, bad recId, out-of-range scalars) yields null,
     * never an exception (parser.go:152-159's tolerance). */
@@ -89,6 +93,26 @@ case class Keccak256Expr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.evm.Keccak.hash256($c)")
   override protected def withNewChildInternal(newChild: Expression): Keccak256Expr =
+    copy(child = newChild)
+}
+
+/** hex0x(binary) → "0x" + lowercase hex string: the lossless raw
+  * rendering of a log's payload and topics (`data_hex`, `raw_params`,
+  * the raw-hex fallback). Same strings as `concat('0x', lower(hex(x)))`,
+  * without `lower`'s collation-aware (ICU) path; null in, null out.
+  * Static call, whole-stage-codegen'd. */
+case class Hex0xExpr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName needs binary input")
+  override def dataType: DataType = StringType
+  override def prettyName: String = "hex0x"
+  override def foldable: Boolean = child.foldable
+  override protected def nullSafeEval(input: Any): Any =
+    AbiRt.hex0x(input.asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.evm.AbiRt.hex0x($c)")
+  override protected def withNewChildInternal(newChild: Expression): Hex0xExpr =
     copy(child = newChild)
 }
 
@@ -289,13 +313,16 @@ case class VecDotExpr(left: Expression, right: Expression)
 }
 
 /** SparkSessionExtensions installer: `GraftSession` wires this in, so
-  * `expr("keccak256(x)")`, `evm_topic0`, `abi_decode_word`,
+  * `expr("keccak256(x)")`, `hex0x`, `evm_topic0`, `abi_decode_word`,
   * `abi_decode_data`, `vec_dot` work in SQL and the Column API alike. */
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((FunctionIdentifier("keccak256"),
       new ExpressionInfo(classOf[Keccak256Expr].getName, "keccak256"),
       (args: Seq[Expression]) => Keccak256Expr(args.head)))
+    ext.injectFunction((FunctionIdentifier("hex0x"),
+      new ExpressionInfo(classOf[Hex0xExpr].getName, "hex0x"),
+      (args: Seq[Expression]) => Hex0xExpr(args.head)))
     ext.injectFunction((FunctionIdentifier("evm_topic0"),
       new ExpressionInfo(classOf[EventTopic0Expr].getName, "evm_topic0"),
       (args: Seq[Expression]) => EventTopic0Expr(args.head)))

@@ -57,15 +57,17 @@ class ConfigSpec extends SparkSpec {
   }
 
   test("chunk progress metrics via Observation (C6)") {
-    // dedicated session: a registered Observation makes the session's
-    // observation manager non-serializable, which would break later
-    // suites that serialize ML model summaries (Spark-side quirk)
+    // dedicated session, so the serializability check below sees only
+    // what `observed` did to it
     val s2 = spark.newSession()
     val logs = LogPipeline.synthesizeLogs(Tables.events(s2, "/root/testdata/sf0.001"))
-    val (df, obs) = LogPipeline.observed(logs, "chunk")
-    df.write.mode("overwrite").format("noop").save()
-    val m = obs.get
+    val (_, m) = LogPipeline.observed(logs, "chunk")(
+      _.write.mode("overwrite").format("noop").save())
     assert(m("events") == 1000L)
     assert(m("from_block") == 0L && m("to_block") == 99L)
+    // a sql.Observation would leave the session unserializable (its
+    // ObservationManager), failing every later task that captures it,
+    // such as a fitted Spark ML model with its training summary
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(s2)
   }
 }

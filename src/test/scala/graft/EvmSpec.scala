@@ -40,9 +40,16 @@ class EvmSpec extends AnyFunSuite {
     assert(AbiCodec.decodeWord(b, "bool") == java.lang.Boolean.TRUE)
   }
 
+  test("Keccak.hex equals the per-byte Formatter rendering it replaced") {
+    val rnd = new scala.util.Random(20261018)
+    val cases = Seq(Array.emptyByteArray, Array.tabulate[Byte](256)(_.toByte)) ++
+      Seq.fill(500)(Array.fill(rnd.nextInt(100))(rnd.nextInt(256).toByte))
+    for (b <- cases) assert(Keccak.hex(b) == b.map(x => f"${x & 0xff}%02x").mkString)
+  }
+
   test("indexed dynamic params decode the topic's keccak hash word") {
     val h = Keccak.hash256("some payload".getBytes("UTF-8"))
-    val hexed = "0x" + AbiCodec.hex(h)
+    val hexed = "0x" + Keccak.hex(h)
     // string/bytes/array/tuple topics carry keccak256(value), not the
     // value — the decoder surfaces the hash instead of nulling it
     assert(AbiCodec.decodeWord(h, "string") == hexed)

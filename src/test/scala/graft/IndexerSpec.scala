@@ -1,9 +1,10 @@
 package graft
 
-import graft.api.Config
+import graft.api.{Config, JobRegistry}
 import graft.evm.{Indexer, Keccak, LogPipeline}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** §3.1 end-to-end: config → pushed scan → decode → partitioned sink. */
 class IndexerSpec extends SparkSpec {
@@ -235,19 +236,14 @@ class IndexerSpec extends SparkSpec {
 
     val job = Config.load(yaml, _ => tokenAbi)
     val txs = LogPipeline.synthesizeTxs(events)
-    val plans = new RecoveryPlans
-    spark.listenerManager.register(plans)
-    val counts = try {
-      val c = Indexer.run(spark, job, dump, endBlock = 99, outDir = out,
-        txs = Some(txs))
-      spark.range(1).toDF(RecoveryPlans.Sentinel).collect()
-      assert(plans.drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      c
-    } finally spark.listenerManager.unregister(plans)
+    val recoveries = new ExecutedNodes(
+      _.expressions.exists(_.exists(_.isInstanceOf[graft.evm.EcRecoverExpr])))
+    val counts = recoveries.around(spark)(Indexer.run(spark, job, dump,
+      endBlock = 99, outDir = out, txs = Some(txs)))
     // the sender dimension is recovered once per run, not once per pair
     assert(counts.size >= 2)
-    assert(plans.recovering.get() == 1,
-      s"${plans.recovering.get()} executed plans evaluated ecrecover_sender")
+    assert(recoveries.count.get() == 1,
+      s"${recoveries.count.get()} executed plan nodes evaluated ecrecover_sender")
 
     val back = spark.read.option("header", "true")
       .option("basePath", out).csv(out)
@@ -278,6 +274,107 @@ class IndexerSpec extends SparkSpec {
       .join(expected, Seq("tx_hash")).join(keyAddr, Seq("k"))
       .filter(col("tx_from") =!= col("want"))
     assert(bad.count() == 0)
+  }
+
+  /** 1,000 synthesized logs over blocks 0..99, every configured
+    * (contract, event) pair populated, as the hex-string JSON dump the
+    * source replays; read-only, shared by the tests below. */
+  private lazy val smallDump: String = {
+    val dir = Files.createTempDirectory("idx_small").toString
+    val kinds = array(Seq("click", "purchase", "view", "error", "signup").map(lit): _*)
+    val events = spark.range(1000).select(col("id").as("event_id"),
+      (col("id") * 7 % 31).as("user_id"),
+      element_at(kinds, (col("id") % 5 + 1).cast("int")).as("event_type"),
+      (col("id") % 97 * 1.25).as("value"), lit(null).cast("timestamp").as("ts"))
+    LogPipeline.synthesizeLogs(events)
+      .select(col("block_number"), col("tx_hash"), col("address"), col("topic0"),
+        lower(hex(col("topic1"))).as("topic1"), lower(hex(col("topic2"))).as("topic2"),
+        lit(null).cast("string").as("topic3"), lower(hex(col("data"))).as("data"))
+      .coalesce(1).write.mode("overwrite").json(dir)
+    dir
+  }
+
+  private val pairDirs = Seq(("TokenA", "Transfer"), ("TokenB", "Transfer"),
+    ("TokenB", "Approval"))
+  private def landed(out: String, c: String, e: String) =
+    Files.exists(Paths.get(out, s"contract_name=$c", s"event_name=$e", "_SUCCESS"))
+  /** Persisted RDD ids; a run must leave none of its own behind (the
+    * session is shared, so other suites' entries may come and go). */
+  private def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def causes(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+  /** The thrown pair error plus the other pairs' errors it carries as
+    * suppressed (Spark attaches a caller-stack marker of its own). */
+  private def pairErrors(e: Throwable) = e +: e.getSuppressed.toSeq
+    .filterNot(_.getClass.getName.endsWith("OriginalTryStackTraceException"))
+
+  test("one shared evm-logs scan per run, however many pairs and _unknown sinks") {
+    val job = Config.load(yaml, _ => tokenAbi)
+    for (emitUnknown <- Seq(false, true)) {
+      val out = Files.createTempDirectory("idx_scan").toString
+      val scans = new ExecutedNodes({
+        case b: BatchScanExec => b.scan.isInstanceOf[graft.evm.LogScan]
+        case _ => false
+      })
+      val counts = scans.around(spark)(Indexer.run(spark, job, smallDump,
+        endBlock = 99, outDir = out, emitUnknown = emitUnknown))
+      assert(counts.size == (if (emitUnknown) 5 else 3))
+      assert(scans.count.get() == 1,
+        s"${scans.count.get()} evm-logs scans executed (emitUnknown=$emitUnknown)")
+    }
+  }
+
+  test("a failing pair's error is thrown only after every pair has settled") {
+    val out = Files.createTempDirectory("idx_fail").toString
+    // a plain file where TokenA's contract directory belongs: its one
+    // pair cannot write, TokenB's two pairs can
+    Files.createFile(Paths.get(out, "contract_name=TokenA"))
+    val job = Config.load(yaml + "retry:\n  attempts: 1\n", _ => tokenAbi)
+    val before = persisted
+    val err = intercept[Exception](
+      Indexer.run(spark, job, smallDump, endBlock = 99, outDir = out))
+    assert(causes(err).exists(e => String.valueOf(e.getMessage).contains("TokenA")), err)
+    assert(pairErrors(err).size == 1, "only TokenA's pair failed")
+    // thrown after the other pairs' writes completed, and the shared
+    // scan was released
+    assert(landed(out, "TokenB", "Transfer") && landed(out, "TokenB", "Approval"))
+    assert((persisted -- before).isEmpty, "the run left RDDs persisted")
+  }
+
+  test("a JobRegistry cancel reaches every pair's Spark job") {
+    val out = Files.createTempDirectory("idx_cancel").toString
+    val job = Config.load(yaml + "retry:\n  attempts: 1\n", _ => tokenAbi)
+    val before = persisted
+    val reg = new JobRegistry(spark)
+    val parked = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val id = reg.submit("indexer") { s =>
+      parked.countDown()
+      release.await()
+      try Indexer.run(s, job, smallDump, endBlock = 99, outDir = out)
+      catch { case e: Throwable => thrown.set(e); throw e }
+    }
+    try {
+      // cancelled once running, before the body starts any Spark job:
+      // every job the group starts afterwards must fail
+      parked.await()
+      assert(reg.cancel(id))
+      release.countDown()
+      val deadline = System.currentTimeMillis() + 60000
+      while (System.currentTimeMillis() < deadline &&
+        !reg.status(id).exists(_.finishedAt.isDefined)) Thread.sleep(50)
+      assert(reg.status(id).exists(_.state == reg.Cancelled))
+    } finally reg.shutdown()
+    // each pair's write ran in the caller's job group, so each failed
+    // as cancelled: one error per pair (the first plus two suppressed)
+    val err = thrown.get()
+    assert(err != null, "the cancelled run must not succeed")
+    val errors = pairErrors(err)
+    assert(errors.size == pairDirs.size, errors.mkString("\n"))
+    assert(errors.forall(causes(_).exists(e =>
+      String.valueOf(e.getMessage).toLowerCase.contains("cancel"))), errors.mkString("\n"))
+    assert(pairDirs.forall { case (c, e) => !landed(out, c, e) })
+    assert((persisted -- before).isEmpty, "the run left RDDs persisted")
   }
 
   test("indexer scan pushes BOTH address and topic0 into the source") {
@@ -324,38 +421,49 @@ class IndexerSpec extends SparkSpec {
   }
 }
 
-/** Counts the executed plans that evaluate `ecrecover_sender`. A cached
-  * relation's plan runs inside the first execution that reads it; every
-  * later read scans the cached buffers, so each cache is walked once.
-  * Every query before the [[RecoveryPlans.Sentinel]] query has been
-  * counted once `drained` opens. */
-final class RecoveryPlans extends org.apache.spark.sql.util.QueryExecutionListener {
+/** Counts the executed plan nodes that `matches`. A cached relation's
+  * plan runs inside the first execution that reads it; every later read
+  * scans the cached buffers, so each cache is walked once. */
+final class ExecutedNodes(matches: org.apache.spark.sql.execution.SparkPlan => Boolean)
+    extends org.apache.spark.sql.util.QueryExecutionListener {
   import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
   import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
   import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
-  val recovering = new java.util.concurrent.atomic.AtomicInteger
-  val drained = new java.util.concurrent.CountDownLatch(1)
+  val count = new java.util.concurrent.atomic.AtomicInteger
+  private val drained = new java.util.concurrent.CountDownLatch(1)
   private val walked = java.util.Collections.newSetFromMap(
     new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
 
-  private def evaluates(p: SparkPlan): Boolean = p match {
-    case a: AdaptiveSparkPlanExec => evaluates(a.executedPlan)
-    case q: QueryStageExec => evaluates(q.plan)
-    case c: CommandResultExec => evaluates(c.commandPhysicalPlan)
+  private def nodes(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case c: CommandResultExec => nodes(c.commandPhysicalPlan)
     case m: InMemoryTableScanExec =>
-      walked.add(m.relation.cacheBuilder) && evaluates(m.relation.cachedPlan)
+      if (walked.add(m.relation.cacheBuilder)) nodes(m.relation.cachedPlan) else 0
     case other =>
-      val own = other.expressions.exists(_.exists(_.isInstanceOf[graft.evm.EcRecoverExpr]))
-      (other.children ++ other.subqueries).map(evaluates).foldLeft(own)(_ || _)
+      (if (matches(other)) 1 else 0) + (other.children ++ other.subqueries).map(nodes).sum
+  }
+
+  /** `body`'s result, once every query it ran has been counted: the
+    * listener bus delivers in order, so a sentinel query run after
+    * `body` is seen last. */
+  def around[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    spark.listenerManager.register(this)
+    try {
+      val result = body
+      spark.range(1).toDF(ExecutedNodes.Sentinel).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      result
+    } finally spark.listenerManager.unregister(this)
   }
 
   override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-    if (qe.analyzed.output.exists(_.name == RecoveryPlans.Sentinel)) drained.countDown()
-    else if (evaluates(qe.executedPlan)) recovering.incrementAndGet()
+    if (qe.analyzed.output.exists(_.name == ExecutedNodes.Sentinel)) drained.countDown()
+    else count.addAndGet(nodes(qe.executedPlan))
   override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
 }
 
-object RecoveryPlans {
-  val Sentinel = "recovery_plans_sentinel"
+object ExecutedNodes {
+  val Sentinel = "executed_nodes_sentinel"
 }
