@@ -4,9 +4,10 @@ import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Tables
 import graft.ops.TimeSeries
 
@@ -28,36 +29,108 @@ object MlPipeline {
   val SigmaMin = 0.5
 
   /** Deterministic feature/label dataset from the hourly events grid.
-    * Everything here is oracle-checkable (no model involved). */
+    * Everything here is oracle-checkable (no model involved).
+    *
+    * Three passes, each one shuffle:
+    *  1. per key: the hourly resample + ffill fold
+    *     ([[TimeSeries.resampleFfillFold]]);
+    *  2. per bucket: the consensus, `median(value)` over a window;
+    *  3. per key, one sorted walk ([[featureWalk]]): EWM bias (the
+    *     [[TimeSeries.Ewm]] step), devdt, the floored rolling σ, z and
+    *     the forward label.
+    * Its rows equal, bit for bit, those of the operator chain
+    * `resampleFfill` → median join → `ewmMean` → `rollingStats` →
+    * `forwardLabel` (MlSpec). Precondition: a key's grid fits one task.
+    */
   def dataset(spark: SparkSession, dir: String): DataFrame = {
-    val filled = TimeSeries.resampleFfill(Tables.events(spark, dir),
+    val filled = TimeSeries.resampleFfillFold(Tables.events(spark, dir),
       "event_type", "ts", "value", "hour", "event_id")
     // consensus: row-median across keys present at the bucket (A4)
-    val consensus = filled.groupBy("bucket")
-      .agg(median(col("value")).as("consensus"))
-    val dev = filled.join(consensus, Seq("bucket"))
-      .withColumn("dev", col("value") - col("consensus"))
-    val withBias = TimeSeries.ewmMean(dev, "event_type", "bucket", "dev",
-        EwmHalflife, minPeriods = math.max(5, (EwmHalflife / 3).toInt), out = "bias")
-      .withColumn("devdt", col("dev") - col("bias"))
-    val withSigma = TimeSeries.rollingStats(withBias, "event_type", "bucket", "devdt",
-        n = StdWin, minPeriods = math.max(5, StdWin / 3), ddofZero = false,
-        meanCol = "m_unused", stdCol = "sigma_raw")
-      .withColumn("sigma", TimeSeries.sigmaFloor(col("sigma_raw"), SigmaMin))
-      .withColumn("z", col("devdt") / col("sigma"))
+    val dev = filled.select(col("event_type"), unix_micros(col("bucket")).as("bucket"),
+      (col("value") - median(col("value")).over(Window.partitionBy("bucket"))).as("dev"))
     // pair_id: ordinal key id (M1's {DAI/USDC:0,…} map); fee: synthetic tier
     val pairId = when(col("event_type") === "click", 0)
       .when(col("event_type") === "error", 1)
       .when(col("event_type") === "purchase", 2)
       .when(col("event_type") === "signup", 3)
       .when(col("event_type") === "view", 4).otherwise(-1)
-    TimeSeries.forwardLabel(
-        withSigma.filter(col("devdt").isNotNull), "event_type", "bucket", "devdt",
-        Horizon, Target)
-      .select(col("event_type"), col("bucket"),
+    TimeSeries.foldByKey(dev, FeatureSchema)(featureWalk)
+      .select(col("event_type"), timestamp_micros(col("bucket")).as("bucket"),
         col("z"), col("devdt"), col("bias"), col("sigma"),
         pairId.as("pair_id"), col("y"))
   }
+
+  private val EwmMinPeriods = math.max(5, (EwmHalflife / 3).toInt)
+  private val StdMinPeriods = math.max(5, StdWin / 3)
+
+  private val FeatureSchema = StructType(Seq(
+    StructField("event_type", StringType),
+    StructField("bucket", LongType, nullable = false),
+    StructField("z", DoubleType), StructField("devdt", DoubleType),
+    StructField("bias", DoubleType), StructField("sigma", DoubleType, nullable = false),
+    StructField("y", IntegerType)))
+
+  /** One key's features from its (key, bucket µs, dev) rows, the window
+    * chain's semantics in one walk:
+    *  - bias: `ewmMean(dev)`; devdt = dev − bias, null when either is;
+    *  - σ: `stddev_samp(devdt)` over the trailing [[StdWin]] rows when
+    *    they hold ≥ [[StdMinPeriods]] non-null devdt, computed as Spark's
+    *    sliding frame does — `CentralMomentAgg`'s n/avg/m2 update run
+    *    afresh over the frame for each row, so the doubles are identical;
+    *    sigma = σ floored at [[SigmaMin]], z = devdt / sigma;
+    *  - label: over the non-null-devdt rows, fmax = `max` of the next
+    *    [[Horizon]] devdt; rows with devdt < 0 and an fmax are kept, y =
+    *    fmax − devdt ≥ [[Target]].
+    * Comparisons use Spark's double order (NaN largest, −0.0 = 0.0). */
+  private def featureWalk(key: String, rows: Iterator[Row]): Iterator[Row] = {
+    val sorted = rows.toArray.sortBy(_.getLong(1))
+    val n = sorted.length
+    val ewm = new TimeSeries.Ewm(EwmHalflife, EwmMinPeriods)
+    val bias = new Array[Double](n)
+    val devdt = new Array[Double](n)
+    val hasDt = new Array[Boolean](n)
+    for (i <- 0 until n) {
+      val r = sorted(i)
+      val x = if (r.isNullAt(2)) Double.NaN else r.getDouble(2)
+      bias(i) = ewm.next(x)
+      hasDt(i) = !r.isNullAt(2) && !bias(i).isNaN
+      devdt(i) = x - bias(i)
+    }
+    def sigma(i: Int): Double = {
+      val from = math.max(0, i - StdWin + 1)
+      var cnt = 0.0
+      var avg = 0.0
+      var m2 = 0.0
+      for (j <- from to i if hasDt(j)) {
+        val newN = cnt + 1.0
+        val delta = devdt(j) - avg
+        val deltaN = delta / newN
+        avg = avg + deltaN
+        m2 = m2 + delta * (delta - deltaN)
+        cnt = newN
+      }
+      // stddev_samp; null (then floored) below the min periods
+      val sd = if (cnt >= StdMinPeriods) math.sqrt(m2 / (cnt - 1.0)) else SigmaMin
+      if (cmp(SigmaMin, sd) > 0) SigmaMin else sd
+    }
+    val kept = (0 until n).filter(hasDt).toArray
+    val out = Iterator.newBuilder[Row]
+    for (j <- kept.indices) {
+      val i = kept(j)
+      val last = math.min(kept.length - 1, j + Horizon)
+      if (cmp(devdt(i), 0.0) < 0 && j < last) {
+        var fmax = devdt(kept(j + 1))
+        for (k <- j + 2 to last) if (cmp(devdt(kept(k)), fmax) > 0) fmax = devdt(kept(k))
+        val s = sigma(i)
+        out += Row(key, sorted(i).getLong(1), devdt(i) / s, devdt(i), bias(i), s,
+          if (cmp(fmax - devdt(i), Target) >= 0) 1 else 0)
+      }
+    }
+    out.result()
+  }
+
+  private def cmp(a: Double, b: Double): Int =
+    org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
 
   /** M2: chronological 70/30 split — NOT randomSplit; train is the first
     * 70% of rows in (ts, event_type) order. Implemented as a distributed
@@ -75,7 +148,20 @@ object MlPipeline {
     * counts. The counts fall out of the cut, so nobody recounts a side. */
   private case class Split(train: DataFrame, test: DataFrame,
                            base: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-                           nTrain: Long, nTest: Long)
+                           indexed: org.apache.spark.rdd.RDD[(Row, Long)],
+                           nTrain: Long, nTest: Long) {
+    /** The train side's positive labels and whether the test side holds
+      * both labels, in one job over the persisted base. */
+    def labels(): (Long, Boolean) = {
+      val (yi, cut) = (train.schema.fieldIndex("y"), nTrain)
+      val (pos, lo, hi) = indexed.aggregate((0L, Int.MaxValue, Int.MinValue))(
+        { case ((p, l, h), (r, i)) =>
+            val y = r.getInt(yi)
+            if (i < cut) (p + y, l, h) else (p, l min y, h max y) },
+        { case ((p1, l1, h1), (p2, l2, h2)) => (p1 + p2, l1 min l2, h1 max h2) })
+      (pos, lo < hi)
+    }
+  }
 
   /** timeSplit plus the persisted sorted base RDD, so callers that cache
     * the split (the fitted-model cache) can release the base explicitly
@@ -95,7 +181,7 @@ object MlPipeline {
     val indexed = base.zipWithIndex()
     Split(spark.createDataFrame(indexed.filter(_._2 < cut).map(_._1), schema),
       spark.createDataFrame(indexed.filter(_._2 >= cut).map(_._1), schema),
-      base, cut, total - cut)
+      base, indexed, cut, total - cut)
   }
 
   def pipeline(): Pipeline = {
@@ -126,7 +212,8 @@ object MlPipeline {
     * lives in a separate, briefly-locked structure. */
   private case class Fitted(ds: DataFrame, train: DataFrame, test: DataFrame,
                             base: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-                            nTrain: Long, nTest: Long,
+                            nTrain: Long, nTest: Long, trainPos: Long,
+                            testBothLabels: Boolean,
                             model: org.apache.spark.ml.PipelineModel)
 
   /** LRU capacity; var only so tests can exercise eviction with a
@@ -152,7 +239,9 @@ object MlPipeline {
         spark.sparkContext.defaultParallelism.toLong, sp.nTrain / 100000L)).toInt
       val train = sp.train.coalesce(parts).cache()
       val test = sp.test.cache()
-      Fitted(ds, train, test, sp.base, sp.nTrain, sp.nTest, pipeline().fit(train))
+      val (trainPos, testBothLabels) = sp.labels()
+      Fitted(ds, train, test, sp.base, sp.nTrain, sp.nTest, trainPos, testBothLabels,
+        pipeline().fit(train))
     })
     recordUse(key)
     f
@@ -194,10 +283,11 @@ object MlPipeline {
     val acc = new MulticlassClassificationEvaluator()
       .setLabelCol("y").setMetricName("accuracy").evaluate(scored)
     val auc =
-      if (f.test.select("y").distinct().count() < 2) Double.NaN
+      if (!f.testBothLabels) Double.NaN
       else new BinaryClassificationEvaluator()
         .setLabelCol("y").setMetricName("areaUnderROC").evaluate(scored)
-    val base = f.train.agg(avg("y")).head().getDouble(0)
+    // avg("y"): an exact double sum of 0/1 over the count
+    val base = f.trainPos.toDouble / f.nTrain
     import spark.implicits._
     Seq((f.nTrain, f.nTest, acc, auc, base))
       .toDF("n_train", "n_test", "accuracy", "auc", "train_base_rate")

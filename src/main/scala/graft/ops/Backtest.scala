@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -36,14 +36,6 @@ object Backtest {
     StructField("entry_z", DoubleType), StructField("exit_z", DoubleType),
     StructField("pct_return", DoubleType), StructField("held_rows", IntegerType)))
 
-  private def tsKey(v: Any): Long = v match {
-    case t: java.sql.Timestamp =>
-      val i = t.toInstant; i.getEpochSecond * 1000000000L + i.getNano
-    case n: java.lang.Number => n.longValue()
-    case null => Long.MinValue
-    case o => o.hashCode().toLong
-  }
-
   /** Return of a position closed at `exit`; null at a zero entry price. */
   private def pctReturn(side: String, entry: Double, exit: Double): Any =
     if (entry == 0.0) null
@@ -55,16 +47,11 @@ object Backtest {
     * sort each key's rows by `ts` in-task and hand them to `walk`. */
   private def perKey(df: DataFrame, key: String, ts: String, price: String,
                      signal: String, schema: StructType)(
-      walk: (String, Array[Row]) => Iterator[Row]): DataFrame = {
-    implicit val enc = Encoders.row(schema)
-    implicit val keyEnc = Encoders.STRING
-    df.select(col(key).cast("string"), col(ts), col(price).cast("double"),
-        col(signal).cast("double"))
-      .groupByKey((r: Row) => r.getString(0))
-      .flatMapGroups { (k: String, rows: Iterator[Row]) =>
-        walk(k, rows.toArray.sortBy(r => tsKey(r.get(1))))
-      }
-  }
+      walk: (String, Array[Row]) => Iterator[Row]): DataFrame =
+    TimeSeries.foldByKey(df.select(col(key).cast("string"), col(ts),
+        col(price).cast("double"), col(signal).cast("double")), schema) {
+      (k, rows) => walk(k, rows.toArray.sortBy(r => TimeSeries.sortKey(r.get(1))))
+    }
 
   /** F1: mean-reversion FSM (`simulate_mean_reversion`, ref `:131-178`).
     *

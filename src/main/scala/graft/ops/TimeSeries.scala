@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * Scale design: every operator is a declarative plan over (key, bucket)
   * — the only shuffles are on the series key (window functions) or
   * (key, bucket) (resample partial agg). Nothing collects to the driver;
-  * per-key state (EWM fold) is bounded by one series' grid length.
+  * the per-key folds ([[foldByKey]]: the resample + ffill fold, the EWM)
+  * hold one series in a task.
   */
 object TimeSeries {
 
@@ -52,6 +53,97 @@ object TimeSeries {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid.join(bucketed, Seq(key, "bucket"), "left")
       .withColumn(value, last(col(value), ignoreNulls = true).over(w))
+  }
+
+  /** A1 as one per-key fold: the rows of [[resampleFfill]], with the key
+    * cast to string and the value to double, from ONE shuffle on the key
+    * instead of its aggregate, span, grid join and fill window. Per key,
+    * in-task:
+    *  1. sort by (ts, tiebreak), a null tiebreak first;
+    *  2. keep each bucket's last value, i.e. `max_by(value, (ts,
+    *     tiebreak))`, so a null last value still wins its bucket;
+    *  3. walk the dense grid [first bucket, last bucket], carrying the
+    *     last non-null value.
+    * With `polarity`, a key's values are first negated when their median
+    * is ≥ 0 (P10, as [[polarity]] does, over the same rows).
+    *
+    * `freq` is `second`, `minute` or `hour` (a fixed step) and
+    * `tiebreak` an integral column. Rows with a null `ts` fall in no
+    * bucket. Precondition: a key's rows and its dense grid fit one task.
+    */
+  def resampleFfillFold(df: DataFrame, key: String, ts: String, value: String,
+                        freq: String, tiebreak: String,
+                        polarity: Boolean = false): DataFrame = {
+    val stepMicros = freq match {
+      case "second" => 1000000L
+      case "minute" => 60000000L
+      case "hour" => 3600000000L
+      case other => throw new IllegalArgumentException(
+        s"resampleFfillFold: freq must be second, minute or hour, got $other")
+    }
+    require(Seq(ByteType, ShortType, IntegerType, LongType)
+        .contains(df.schema(tiebreak).dataType),
+      s"resampleFfillFold: tiebreak $tiebreak must be integral")
+    val keyed = df.select(col(key).cast("string").as(key),
+      unix_micros(col(ts)).as("__ts"), unix_micros(date_trunc(freq, col(ts))).as("__b"),
+      col(tiebreak).cast("long").as("__tb"), col(value).cast("double").as(value))
+    val out = StructType(Seq(StructField(key, StringType),
+      StructField("bucket", LongType, nullable = false), StructField(value, DoubleType)))
+    foldByKey(keyed, out) { (k, rows) =>
+      val all = rows.toArray
+      val sorted = all.filter(r => !r.isNullAt(1))
+      java.util.Arrays.sort(sorted, (a: Row, b: Row) => {
+        val c = java.lang.Long.compare(a.getLong(1), b.getLong(1))
+        if (c != 0) c
+        else if (a.isNullAt(3)) { if (b.isNullAt(3)) 0 else -1 }
+        else if (b.isNullAt(3)) 1
+        else java.lang.Long.compare(a.getLong(3), b.getLong(3))
+      })
+      val sign = if (polarity && flipSign(all)) -1.0 else 1.0
+      val grid = Iterator.newBuilder[Row]
+      if (sorted.nonEmpty) {
+        var i = 0
+        var carry: java.lang.Double = null
+        var t = sorted(0).getLong(2)
+        val hi = sorted(sorted.length - 1).getLong(2)
+        while (t <= hi) {
+          // skip buckets off the grid, then take this bucket's last row
+          while (sorted(i).getLong(2) < t) i += 1
+          if (sorted(i).getLong(2) == t) {
+            while (i + 1 < sorted.length && sorted(i + 1).getLong(2) == t) i += 1
+            // a null key's grid stays null, as its join in resampleFfill
+            if (!sorted(i).isNullAt(4) && k != null) carry = sign * sorted(i).getDouble(4)
+          }
+          grid += Row(k, t, carry)
+          t += stepMicros
+        }
+      }
+      grid.result()
+    }.withColumn("bucket", timestamp_micros(col("bucket")))
+  }
+
+  /** Spark's `median(v) >= 0` over the non-null values of the rows. */
+  private def flipSign(rows: Array[Row]): Boolean = {
+    val v = rows.filter(r => !r.isNullAt(4)).map(_.getDouble(4))
+    if (v.isEmpty) false
+    else {
+      java.util.Arrays.sort(v)
+      // Percentile's interpolation at position (n − 1) / 2
+      val pos = (v.length - 1) * 0.5
+      val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+      val m = if (lo == hi) v(lo) else (hi - pos) * v(lo) + (pos - lo) * v(hi)
+      m >= 0
+    }
+  }
+
+  /** The per-key skeleton the folds here and in [[Backtest]] share:
+    * `keyed`'s first column is the string key; shuffle once on it and
+    * hand each key's rows, unsorted, to `walk`, whose rows match `out`. */
+  private[graft] def foldByKey(keyed: DataFrame, out: StructType)(
+      walk: (String, Iterator[Row]) => Iterator[Row]): DataFrame = {
+    implicit val rowEnc = Encoders.row(out)
+    implicit val keyEnc = Encoders.STRING
+    keyed.groupByKey((r: Row) => r.getString(0)).flatMapGroups(walk)
   }
 
   /** A2: long→wide pivot with an explicit key list (plan-time column set,
@@ -109,69 +201,52 @@ object TimeSeries {
     *
     * No Spark builtin is exact here, so this is a per-key ordered fold via
     * `groupByKey.flatMapGroups` — distributed across keys, exact recursion
-    * within a key. A key's series (grid length × 24B) must fit one task;
-    * for pathological series lengths switch to the log-domain prefix-scan
-    * form (b_t = (1−α)^t · Σ α(1−α)^{−i}x_i), which windows distribute.
+    * within a key, through the [[Ewm]] step. A key's series (grid
+    * length × 24B) must fit one task.
     */
   def ewmMean(df: DataFrame, key: String, ts: String, value: String,
               halflife: Double, minPeriods: Int, out: String): DataFrame = {
-    val fields = df.select(col(key), col(ts), col(value)).schema.fields
-    val outSchema = StructType(fields :+ StructField(out, DoubleType, nullable = true))
-    implicit val rowEnc = Encoders.row(outSchema)
-    implicit val keyEnc = Encoders.STRING
-    val alpha = 1.0 - math.pow(0.5, 1.0 / halflife)
-    val zeroBias = halflife <= 0.0
-    df.select(col(key).cast("string"), col(ts), col(value).cast("double"))
-      .groupByKey((r: Row) => r.getString(0))
-      .flatMapGroups { (_: String, rows: Iterator[Row]) =>
-        val buf = rows.toArray.sortBy { r =>
-          r.get(1) match {
-            case t: java.sql.Timestamp =>
-              val i = t.toInstant; i.getEpochSecond * 1000000000L + i.getNano
-            case n: java.lang.Number => n.longValue()
-            case null => Long.MinValue
-            case o => o.hashCode().toLong
-          }
-        }
-        var bias: Double = Double.NaN
-        var seen = 0
-        buf.iterator.map { r =>
-          val x = if (r.isNullAt(2)) Double.NaN else r.getDouble(2)
-          if (!x.isNaN) {
-            seen += 1
-            bias = if (seen == 1) x else alpha * x + (1.0 - alpha) * bias
-          }
-          val o: Any =
-            if (zeroBias) 0.0
-            else if (seen >= minPeriods && !bias.isNaN) bias
-            else null
-          Row.fromSeq(r.toSeq :+ o)
-        }
+    val keyed = df.select(col(key).cast("string").as(key), col(ts),
+      col(value).cast("double").as(value))
+    val outSchema = StructType(keyed.schema.fields :+
+      StructField(out, DoubleType, nullable = true))
+    foldByKey(keyed, outSchema) { (_, rows) =>
+      val buf = rows.toArray.sortBy(r => sortKey(r.get(1)))
+      val ewm = new Ewm(halflife, minPeriods)
+      buf.iterator.map { r =>
+        val b = ewm.next(if (r.isNullAt(2)) Double.NaN else r.getDouble(2))
+        Row.fromSeq(r.toSeq :+ (if (b.isNaN) null else b))
       }
+    }
   }
 
-  /** A7 alternative, fully distributed: the same EWM via the closed
-    * form b_t = β^t · (x_0 + Σ_{i≥1} α β^{−i} x_i), β = 1−α — a window
-    * prefix sum instead of a per-key fold, so no per-task series
-    * buffering. Numerically exact to ~1e-13 relative for series shorter
-    * than ~10⁵·halflife steps (β^{−i} stays inside double range);
-    * beyond that use [[ewmMean]] (exact recursion) on epoch chunks.
-    * Requires non-null values (run after gap fill). */
-  def ewmMeanPrefix(df: DataFrame, key: String, ts: String, value: String,
-                    halflife: Double, minPeriods: Int, out: String): DataFrame = {
-    if (halflife <= 0.0) return df.withColumn(out, lit(0.0))
-    val alpha = 1.0 - math.pow(0.5, 1.0 / halflife)
-    val beta = 1.0 - alpha
-    val wOrd = Window.partitionBy(key).orderBy(ts)
-    val wAcc = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__t", row_number().over(wOrd) - 1)
-      .withColumn("__uv",
-        when(col("__t") === 0, col(value))
-          .otherwise(lit(alpha) * pow(lit(beta), -col("__t")) * col(value)))
-      .withColumn(out,
-        when(col("__t") + 1 >= minPeriods,
-          pow(lit(beta), col("__t")) * sum(col("__uv")).over(wAcc)))
-      .drop("__t", "__uv")
+  /** A7's recurrence, one value at a time: `next(x)` folds `x` (NaN =
+    * missing, no observation) into `b_t = α·x_t + (1−α)·b_{t−1}`,
+    * `b_0 = x_0`, and returns the bias, NaN until `minPeriods`
+    * observations; `halflife <= 0` → always 0. */
+  private[graft] final class Ewm(halflife: Double, minPeriods: Int) {
+    private val alpha = 1.0 - math.pow(0.5, 1.0 / halflife)
+    private val zeroBias = halflife <= 0.0
+    private var bias = Double.NaN
+    private var seen = 0
+
+    def next(x: Double): Double = {
+      if (!x.isNaN) {
+        seen += 1
+        bias = if (seen == 1) x else alpha * x + (1.0 - alpha) * bias
+      }
+      if (zeroBias) 0.0 else if (seen >= minPeriods) bias else Double.NaN
+    }
+  }
+
+  /** Ascending order of a timestamp or number column's value (nulls
+    * first), for the in-task sorts of the per-key folds. */
+  private[graft] def sortKey(v: Any): Long = v match {
+    case t: java.sql.Timestamp =>
+      val i = t.toInstant; i.getEpochSecond * 1000000000L + i.getNano
+    case n: java.lang.Number => n.longValue()
+    case null => Long.MinValue
+    case o => o.hashCode().toLong
   }
 
   /** A8: forward-horizon label — `fmax = max(dev) over (1, horizon]`,

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.{Backtest, TimeSeries}
@@ -10,10 +11,20 @@ import graft.sources.Sinks
   * (`analytics/stable_eth_meanrevert_bot.py`): discover swap CSVs by
   * filename pattern → read with bad-line skip + numeric coercion →
   * polarity → 60s resample + ffill → tick→price → common grid (the
-  * inner join across pools) → consensus dev → trade FSM (the z-score
-  * mode computes its rolling z inside the FSM's per-pool pass) →
-  * monthly aggregation. Golden-tested against a pinned run of the reference
+  * inner join across pools) → consensus dev → trade FSM → monthly
+  * aggregation. Golden-tested against a pinned run of the reference
   * itself on the same fixture CSVs (EthBotSpec).
+  *
+  * A trades call is three passes over one CSV scan:
+  *  1. per pool ([[poolPrices]], one shuffle on the pool): polarity,
+  *     resample + ffill and tick→price in one fold
+  *     ([[TimeSeries.resampleFfillFold]]);
+  *  2. per bucket (one shuffle on the bucket): the common-grid count and
+  *     the consensus mean as one window, against the pool count, an
+  *     aggregate broadcast inside the same plan;
+  *  3. per pool: the trade FSM ([[Backtest.rollingZscoreReversion]]
+  *     computes its rolling z in the same pass).
+  * Precondition: a pool's rows fit one task.
   */
 object EthBot {
 
@@ -41,29 +52,37 @@ object EthBot {
       .filter(col("ts_sec").isNotNull && col("tick").isNotNull)
       .withColumn("ts", timestamp_seconds(col("ts_sec")))
       .withColumn("rid", monotonically_increasing_id())
-    // P10 polarity: median >= 0 → flip sign (USD-per-ETH orientation)
-    val signed = TimeSeries.polarity(withPool, "pool", "tick")
-    // A1: 60s grid, last per bucket, ffill; P12: price = 1.0001^tick
-    TimeSeries.resampleFfill(signed, "pool", "ts", "tick", "minute", "rid")
-      .withColumn("price", TimeSeries.tickToPrice(col("tick")))
-      .select("pool", "bucket", "price")
+    // P10 polarity (median >= 0 → flip sign, USD-per-ETH orientation) and
+    // A1 (60s grid, last per bucket, ffill) in one fold; P12 1.0001^tick
+    TimeSeries.resampleFfillFold(withPool, "pool", "ts", "tick", "minute", "rid",
+        polarity = true)
+      .select(col("pool"), col("bucket"), TimeSeries.tickToPrice(col("tick")).as("price"))
   }
 
   /** Common-grid restriction (the reference's iterated inner join,
     * `:120-127`): keep buckets where every pool has a row. */
-  def commonGrid(prices: DataFrame): DataFrame = {
-    val nPools = prices.select("pool").distinct().count()
-    val full = prices.groupBy("bucket").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") === nPools).select("bucket")
-    prices.join(full, Seq("bucket"))
+  def commonGrid(prices: DataFrame): DataFrame =
+    withConsensus(prices).select("pool", "bucket", "price")
+
+  /** [[commonGrid]] plus each bucket's `mean_price`, from one window over
+    * the bucket: a bucket is kept when its row count equals the number
+    * of pools with any row, an aggregate broadcast into the same plan.
+    * The mean sums in pool order. */
+  private def withConsensus(prices: DataFrame): DataFrame = {
+    val w = Window.partitionBy("bucket").orderBy("pool")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val pools = prices.agg(countDistinct("pool").as("__pools"))
+    prices.withColumn("__n", count(lit(1)).over(w))
+      .withColumn("mean_price", avg("price").over(w))
+      .crossJoin(broadcast(pools))
+      .filter(col("__n") === col("__pools"))
+      .select("pool", "bucket", "price", "mean_price")
   }
 
   /** F1 mode: fractional deviation vs row mean, threshold in percent. */
   def tradesMeanReversion(spark: SparkSession, dataDir: String,
                           thrPct: Double): DataFrame = {
-    val grid = commonGrid(poolPrices(spark, dataDir))
-    val mean = grid.groupBy("bucket").agg(avg("price").as("mean_price"))
-    val dev = grid.join(mean, Seq("bucket"))
+    val dev = withConsensus(poolPrices(spark, dataDir))
       .withColumn("dev", (col("price") - col("mean_price")) / col("mean_price"))
     Backtest.meanReversion(dev, "pool", "bucket", "price", "dev", thrPct / 100.0)
   }
@@ -74,9 +93,7 @@ object EthBot {
     * stretch of `lookback` rows gives null z instead of a divide by zero. */
   def tradesZscore(spark: SparkSession, dataDir: String, lookback: Int,
                    entryZ: Double, exitZ: Double, maxHold: Int): DataFrame = {
-    val grid = commonGrid(poolPrices(spark, dataDir))
-    val mean = grid.groupBy("bucket").agg(avg("price").as("mean_price"))
-    val dev = grid.join(mean, Seq("bucket"))
+    val dev = withConsensus(poolPrices(spark, dataDir))
       .withColumn("dev", col("price") - col("mean_price"))
     Backtest.rollingZscoreReversion(dev, "pool", "bucket", "price", "dev",
       lookback, entryZ, exitZ, maxHold)

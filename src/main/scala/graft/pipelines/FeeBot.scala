@@ -14,11 +14,15 @@ import graft.sources.Sinks
 object FeeBot {
 
   /** Train, evaluate, score NOW signals, export them as a single CSV.
-    * Returns (metrics row, signals). */
+    * Returns (metrics row, signals), both local frames: the signals (at
+    * most one row per pair) are computed once, then written and
+    * returned. */
   def run(spark: SparkSession, dataDir: String, outDir: String,
           probThr: Double = 0.6): (DataFrame, DataFrame) = {
     val metrics = MlPipeline.trainEval(spark, dataDir)
-    val signals = MlPipeline.nowSignals(spark, dataDir, probThr)
+    val lazySignals = MlPipeline.nowSignals(spark, dataDir, probThr)
+    val signals = spark.createDataFrame(
+      java.util.Arrays.asList(lazySignals.collect(): _*), lazySignals.schema)
     Sinks.withRetries(attempts = 3, delayMs = 1500) {
       Sinks.writeSingleCsv(signals, s"$outDir/now_signals")
     }

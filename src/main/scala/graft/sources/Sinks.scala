@@ -1,8 +1,10 @@
 package graft.sources
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** File sinks and sources mirroring the reference's I/O surface
   * (SURVEY.md §2.1).
@@ -72,21 +74,26 @@ object Sinks {
   /** S6: driver-side retry decorator for sink actions (fixed-delay, K
     * attempts, last error propagated — `internal/sink/retry.go:29-63`).
     * Task-level transient failures are already covered by
-    * `spark.task.maxFailures`; this guards whole-action failures. */
-  def withRetries[T](attempts: Int, delayMs: Long)(body: => T): T = {
-    var last: Throwable = null
-    var i = 0
-    while (i < attempts) {
-      try return body
-      catch {
-        case e: Throwable =>
-          last = e
-          if (i < attempts - 1) Thread.sleep(delayMs)
-      }
-      i += 1
+    * `spark.task.maxFailures`; this guards whole-action failures. Only
+    * non-fatal failures are retried: an interrupt or a cancelled Spark
+    * job (a job-group cancel: `JobRegistry.cancel`, JobServer DELETE)
+    * is thrown at once, not after the remaining attempts and delays. */
+  def withRetries[T](attempts: Int, delayMs: Long)(body: => T): T =
+    try body
+    catch {
+      case NonFatal(e) if attempts > 1 && !cancelled(e) =>
+        Thread.sleep(delayMs)
+        withRetries(attempts - 1, delayMs)(body)
     }
-    throw last
-  }
+
+  /** Whether `e`, or any cause of it, is an interrupt or a cancelled
+    * Spark job. */
+  private def cancelled(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: InterruptedException => true
+      case s: SparkThrowable => s.getCondition == "SPARK_JOB_CANCELLED"
+      case _ => false
+    }
 
   /** S7: projected CSV scan with malformed-row skip
     * (`read_csv(usecols=…, on_bad_lines="skip")`). Explicit schema keeps

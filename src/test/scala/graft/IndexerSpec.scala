@@ -377,6 +377,39 @@ class IndexerSpec extends SparkSpec {
     assert((persisted -- before).isEmpty, "the run left RDDs persisted")
   }
 
+  test("a JobRegistry cancel surfaces within one retry delay, not after the retries") {
+    // the default retry (3 attempts, 1500 ms apart): a cancelled pair
+    // write must not be retried, so the run ends well inside one delay
+    val out = Files.createTempDirectory("idx_cancel_retry").toString
+    val job = Config.load(yaml, _ => tokenAbi)
+    assert(job.retry.attempts == 3 && job.retry.delayMs == 1500L)
+    val reg = new JobRegistry(spark)
+    val parked = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val started = new java.util.concurrent.atomic.AtomicLong
+    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val id = reg.submit("indexer") { s =>
+      parked.countDown()
+      release.await()
+      started.set(System.nanoTime())
+      try Indexer.run(s, job, smallDump, endBlock = 99, outDir = out)
+      catch { case e: Throwable => thrown.set(e); throw e }
+    }
+    try {
+      parked.await()
+      assert(reg.cancel(id))
+      release.countDown()
+      val deadline = System.currentTimeMillis() + 60000
+      while (System.currentTimeMillis() < deadline && thrown.get() == null &&
+        !reg.status(id).exists(_.finishedAt.isDefined)) Thread.sleep(5)
+      val tookMs = (System.nanoTime() - started.get()) / 1000000
+      info(s"the cancel surfaced after $tookMs ms")
+      assert(thrown.get() != null, "the cancelled run must not succeed")
+      assert(tookMs < job.retry.delayMs, s"the cancel surfaced after $tookMs ms")
+      assert(pairErrors(thrown.get()).size == pairDirs.size)
+    } finally reg.shutdown()
+  }
+
   test("indexer scan pushes BOTH address and topic0 into the source") {
     val dump = Files.createTempDirectory("idx_push").toString
     LogPipeline.synthesizeLogs(Tables.events(spark, "/root/testdata/sf0.001"))

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ml.MlPipeline
+import graft.ops.TimeSeries
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class MlSpec extends SparkSpec {
@@ -97,5 +99,91 @@ class MlSpec extends SparkSpec {
       val n2 = spark.sparkContext.getPersistentRDDs.size
       assert(n2 <= n1 + 1, s"eviction leaked storage: $n1 -> $n2")
     } finally MlPipeline.MaxFitted = old
+  }
+
+  /** The reference `dataset` must equal: the feature chain composed from
+    * the public operators, one window or join per step. */
+  private def chain(events: DataFrame): DataFrame = {
+    val filled = TimeSeries.resampleFfill(events, "event_type", "ts", "value", "hour",
+      "event_id")
+    val consensus = filled.groupBy("bucket").agg(median(col("value")).as("consensus"))
+    val dev = filled.join(consensus, Seq("bucket"))
+      .withColumn("dev", col("value") - col("consensus"))
+    val withBias = TimeSeries.ewmMean(dev, "event_type", "bucket", "dev",
+        MlPipeline.EwmHalflife, minPeriods = 5, out = "bias")
+      .withColumn("devdt", col("dev") - col("bias"))
+    val withSigma = TimeSeries.rollingStats(withBias, "event_type", "bucket", "devdt",
+        n = MlPipeline.StdWin, minPeriods = 8, ddofZero = false,
+        meanCol = "m_unused", stdCol = "sigma_raw")
+      .withColumn("sigma", TimeSeries.sigmaFloor(col("sigma_raw"), MlPipeline.SigmaMin))
+      .withColumn("z", col("devdt") / col("sigma"))
+    val pairId = when(col("event_type") === "click", 0)
+      .when(col("event_type") === "error", 1)
+      .when(col("event_type") === "purchase", 2)
+      .when(col("event_type") === "signup", 3)
+      .when(col("event_type") === "view", 4).otherwise(-1)
+    TimeSeries.forwardLabel(withSigma.filter(col("devdt").isNotNull), "event_type",
+        "bucket", "devdt", MlPipeline.Horizon, MlPipeline.Target)
+      .select(col("event_type"), col("bucket"), col("z"), col("devdt"), col("bias"),
+        col("sigma"), pairId.as("pair_id"), col("y"))
+  }
+
+  /** Rows in (event_type, bucket) order with every double as its bits. */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("event_type", "bucket").collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case o => o
+    })
+
+  private def assertSameAsChain(dir: String): Int = {
+    val got = MlPipeline.dataset(spark, dir)
+    val exp = chain(Tables.events(spark, dir))
+    assert(got.schema == exp.schema, s"${got.schema.treeString}\nvs\n${exp.schema.treeString}")
+    val (g, e) = (bits(got), bits(exp))
+    assert(g.size == e.size, s"$dir: ${g.size} rows vs ${e.size}")
+    g.zip(e).foreach { case (a, b) => assert(a == b, s"$dir: $a vs $b") }
+    g.size
+  }
+
+  test("dataset equals the public-operator chain bit for bit at sf0.01") {
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    assert(assertSameAsChain(sf01) > 2000)
+  }
+
+  test("dataset equals the public-operator chain on a stress table") {
+    // six keys: one shorter than the EWM and σ min periods, one outside
+    // the pair map; 8% null values; constant runs of 10-60 rows (σ 0,
+    // floored); gaps of up to two days; ties in ts broken by event_id
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
+    val keys = Seq("click" -> 900, "error" -> 600, "purchase" -> 700, "signup" -> 800,
+      "view" -> 4, "zz" -> 300)
+    var id = 0L
+    val rows = keys.flatMap { case (k, n) =>
+      var t = t0 + rnd.nextInt(3600000)
+      var level = rnd.nextGaussian() * 80
+      var flat = 0
+      (0 until n).map { _ =>
+        t += (rnd.nextInt(20) match {
+          case 0 => rnd.nextInt(172800) * 1000L
+          case 1 => 0L
+          case _ => rnd.nextInt(5400) * 1000L
+        })
+        if (flat > 0) flat -= 1
+        else if (rnd.nextInt(25) == 0) flat = 10 + rnd.nextInt(50)
+        else level += rnd.nextGaussian() * 40
+        id += 1
+        (id, new java.sql.Timestamp(t), 0L, k,
+          if (rnd.nextInt(100) < 8) None else Some(level), "")
+      }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("ml_stress").toString
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartition(4).write.parquet(s"$dir/events.parquet")
+    val n = assertSameAsChain(dir)
+    val ds = MlPipeline.dataset(spark, dir)
+    assert(n > 500 && ds.filter(col("y") === 1).count() > 0 &&
+      ds.filter(col("y") === 0).count() > 0 && ds.filter(col("pair_id") === -1).count() > 0)
   }
 }

@@ -88,6 +88,22 @@ class SinksSpec extends SparkSpec {
       Sinks.withRetries(2, 1) { sys.error("always") }
     }
   }
+
+  test("retry decorator: an interrupt, a cancelled job or a fatal error is not retried") {
+    val cancelledJob = new org.apache.spark.SparkException("SPARK_JOB_CANCELLED",
+      Map("jobId" -> "7", "reason" -> "part of cancelled job group g"), null)
+    val failures: Seq[() => Throwable] = Seq(
+      () => new InterruptedException("stop"),
+      () => new RuntimeException("write failed", cancelledJob),
+      () => new StackOverflowError("fatal"))
+    for (fail <- failures) {
+      var calls = 0
+      val thrown = intercept[Throwable] {
+        Sinks.withRetries(3, 60000) { calls += 1; throw fail() }
+      }
+      assert(calls == 1, s"retried $thrown")
+    }
+  }
 }
 
 class MultimodalSpec extends SparkSpec {

@@ -102,24 +102,62 @@ class TimeSeriesSpec extends SparkSpec {
     assert(got(2) == Row("USDC", "USDT", -1))
   }
 
-  test("ewmMeanPrefix (distributed closed form) equals the exact fold") {
-    val xs = (1 to 200).map(i => math.sin(i * 0.7) * 50 + i * 0.1)
-    val df = xs.zipWithIndex.map { case (v, i) => ("k", i.toLong, v) }
-      .toDF("k", "t", "v")
-    val fold = TimeSeries.ewmMean(df, "k", "t", "v", 12.0, 5, "b")
-      .orderBy("t").collect()
-    val pref = TimeSeries.ewmMeanPrefix(df, "k", "t", "v", 12.0, 5, "b")
-      .orderBy("t").collect()
-    fold.zip(pref).foreach { case (f, p) =>
-      if (f.isNullAt(3)) assert(p.isNullAt(3))
-      else assert(math.abs(f.getDouble(3) - p.getDouble(3)) < 1e-9)
-    }
-  }
-
   test("polarity flips sign only when median >= 0") {
     val df = Seq(("p", 1.0), ("p", 2.0), ("n", -1.0), ("n", -2.0)).toDF("k", "v")
     val got = TimeSeries.polarity(df, "k", "v").orderBy("k", "v")
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(got.toSeq == Seq(("n", -2.0), ("n", -1.0), ("p", -2.0), ("p", -1.0)))
+  }
+
+  /** (key, bucket µs, value bits or null), sorted: equality is bit for bit. */
+  private def cells(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Option[Long])] =
+    df.select(col("k").cast("string"), unix_micros(col("bucket")), col("v").cast("double"))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2)))))
+      .sortBy(c => (Option(c._1), c._2))
+
+  test("resampleFfillFold equals resampleFfill, with and without polarity") {
+    val rnd = new scala.util.Random(7)
+    def at(sec: Long) = Some(new java.sql.Timestamp(sec * 1000))
+    val t0 = ts("2024-01-01 00:00:00").getTime / 1000
+    // five keys of 1-400 rows with gaps, 10% null values, equal ts broken
+    // by the tiebreak and null ts; "p" has a positive median, "n" only
+    // null values. Minute 3 of key "a" ends on a null value after a
+    // non-null one: the null wins the bucket and the fill carries minute
+    // 2's value
+    val random = Seq("a" -> 400, "b" -> 120, "p" -> 200, "q" -> 1, "r" -> 3).flatMap {
+      case (k, n) =>
+        var t = t0 + rnd.nextInt(600)
+        (0 until n).map { _ =>
+          if (rnd.nextInt(10) > 0) t += (if (rnd.nextInt(8) == 0) rnd.nextInt(20000) else rnd.nextInt(90))
+          val v = if (rnd.nextInt(10) == 0) None
+            else Some((if (k == "p") 50.0 else -50.0) + rnd.nextGaussian() * 30)
+          val when = if (rnd.nextInt(50) == 0) None else at(t)
+          (k, when, v)
+        }
+    }
+    val fixed = Seq(("a", at(t0 - 3600 + 125), Some(1.5)), ("a", at(t0 - 3600 + 130), Some(2.5)),
+      ("a", at(t0 - 3600 + 190), Some(3.5)), ("a", at(t0 - 3600 + 195), None),
+      ("n", at(t0), None), ("n", at(t0 + 7300), None))
+    // unique tiebreaks, in an order unrelated to the rows'
+    val rows = (random ++ fixed)
+      .zip(rnd.shuffle((0L until random.size + fixed.size.toLong).toList))
+      .map { case ((k, t, v), id) => (k, t, v, id) }
+    val df = rows.toDF("k", "t", "v", "id").repartition(3)
+    for (freq <- Seq("minute", "hour")) {
+      val fold = cells(TimeSeries.resampleFfillFold(df, "k", "t", "v", freq, "id"))
+      assert(fold == cells(TimeSeries.resampleFfill(df, "k", "t", "v", freq, "id")), freq)
+      assert(fold.exists(_._3.isEmpty) && fold.map(_._1).distinct.size == 6)
+      val flipped = cells(TimeSeries.resampleFfillFold(df, "k", "t", "v", freq, "id",
+        polarity = true))
+      assert(flipped == cells(TimeSeries.resampleFfill(TimeSeries.polarity(df, "k", "v"),
+        "k", "t", "v", freq, "id")), s"$freq, polarity")
+      assert(flipped != fold)
+    }
+    // minute 3's null last value: the fill carries minute 2's last value
+    val a = cells(TimeSeries.resampleFfillFold(df, "k", "t", "v", "minute", "id"))
+      .filter(_._1 == "a").take(2).map(_._3.map(java.lang.Double.longBitsToDouble))
+    assert(a == Seq(Some(2.5), Some(2.5)))
   }
 }
