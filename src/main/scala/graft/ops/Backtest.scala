@@ -37,7 +37,8 @@ object Backtest {
     StructField("pct_return", DoubleType), StructField("held_rows", IntegerType)))
 
   /** Return of a position closed at `exit`; null at a zero entry price. */
-  private def pctReturn(side: String, entry: Double, exit: Double): Any =
+  private[graft] def pctReturn(side: String, entry: Double,
+                                exit: Double): java.lang.Double =
     if (entry == 0.0) null
     else if (side == "long") (exit - entry) / entry
     else (entry - exit) / entry

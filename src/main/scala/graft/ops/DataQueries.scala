@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Oracle-checked query wiring for the training-data-pipeline operator
@@ -1883,6 +1884,27 @@ object DataQueries {
   // Byte-level spec conformance is separately pinned by golden tests.
   // ------------------------------------------------------------------
 
+  /** The skeleton of every doc-keyed codec query: the fixtures are
+    * formulas over `doc_id`, so only the ids fan out (the per-doc
+    * encode∘decode is the cost, see [[Scale.fanoutRepartition]]) and
+    * `body` builds each output row from its id alone, map-only. */
+  private def perDoc(s: SparkSession, d: String, out: StructType)(
+      body: Long => Row): DataFrame =
+    Scale.fanoutRepartition(
+        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
+      .mapPartitions(_.map(r => body(r.getLong(0))))(Encoders.row(out))
+
+  /** The columns of `ddl` (`"doc_id BIGINT, format STRING"`), all
+    * non-null. */
+  private def nonNull(ddl: String): StructType =
+    StructType(StructType.fromDDL(ddl).map(_.copy(nullable = false)))
+
+  private val audioCols = "doc_id BIGINT, n_samples BIGINT, " +
+    "sample_rate BIGINT, max_abs BIGINT, sum_abs BIGINT, wsum_abs BIGINT"
+
+  private val imageCols = "doc_id BIGINT, format STRING, width BIGINT, " +
+    "height BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT, wsum_r BIGINT"
+
   /** PCM samples for doc: ((doc·40503 + i·2654435761) mod 2^16) − 2^15,
     * n = 512 + (doc mod 5)·128 — integer LCG audio, DuckDB-replayable. */
   private def wavSamples(doc: Long): Array[Int] = {
@@ -1891,39 +1913,101 @@ object DataQueries {
       ((doc * 40503L + i.toLong * 2654435761L) % 65536L - 32768L).toInt)
   }
 
+  /** Decodes `wav` into an `audioCols` row: (count, rate, max|s|,
+    * Σ|s|, Σ(i+1)|s|). */
+  private def wavStats(doc: Long, wav: Array[Byte]): Row = {
+    val (sr, smp) = Multimodal.decodeWav(wav)
+    var sumAbs = 0L; var wsum = 0L; var maxAbs = 0L
+    var i = 0
+    while (i < smp.length) {
+      val a = math.abs(smp(i).toLong)
+      sumAbs += a; wsum += (i + 1) * a; if (a > maxAbs) maxAbs = a
+      i += 1
+    }
+    Row(doc, smp.length.toLong, sr.toLong, maxAbs, sumAbs, wsum)
+  }
+
+  /** Seeded clip for doc: 16 seed groups share a base waveform and
+    * each doc adds a ±1-per-sample jitter; n = 512 + (seed mod 4)·64. */
+  private def seededWave(doc: Long): Array[Int] = {
+    val seed = doc % 16
+    val n = 512 + (seed % 4).toInt * 64
+    Array.tabulate(n) { i =>
+      (((seed + 1) * 40503L + i.toLong * 2654435761L) % 32768L - 16384L
+        + (doc * 31L + i) % 3L - 1L).toInt
+    }
+  }
+
+  /** Fixture image size for doc: (16 + doc mod 9) × (12 + doc mod 7). */
+  private def imageDims(doc: Long): (Int, Int) =
+    (16 + (doc % 9).toInt, 12 + (doc % 7).toInt)
+
+  /** Row-major RGB of a w×h image; `r`, `g`, `b` give each channel's
+    * value at (x, y). */
+  private def pixels(w: Int, h: Int)(r: (Int, Int) => Int,
+      g: (Int, Int) => Int, b: (Int, Int) => Int): Array[Int] = {
+    val rgb = new Array[Int](w * h * 3)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val p = (y * w + x) * 3
+        rgb(p) = r(x, y); rgb(p + 1) = g(x, y); rgb(p + 2) = b(x, y)
+        x += 1
+      }
+      y += 1
+    }
+    rgb
+  }
+
+  /** The mod-256 gradient the image, PNG, QOI and JPEG legs share. */
+  private def gradientImage(doc: Long): (Int, Int, Array[Int]) = {
+    val (w, h) = imageDims(doc)
+    (w, h, pixels(w, h)((x, y) => ((doc + 3L * x + 7L * y) % 256L).toInt,
+      (x, y) => ((2L * doc + 5L * x + y) % 256L).toInt,
+      (x, y) => ((3L * doc + x + 11L * y) % 256L).toInt))
+  }
+
+  /** (Σr, Σg, Σb, Σ(y+1)·r) over a row-major RGB image `w` pixels
+    * wide; the row-weighted sum catches vertical orientation bugs. */
+  private def rgbSums(w: Int, rgb: Array[Int]): Array[Long] = {
+    val s = new Array[Long](4)
+    var i = 0
+    while (i < rgb.length / 3) {
+      s(0) += rgb(3 * i); s(1) += rgb(3 * i + 1); s(2) += rgb(3 * i + 2)
+      s(3) += (i / w + 1L) * rgb(3 * i)
+      i += 1
+    }
+    s
+  }
+
+  /** Largest per-channel |source − decoded| of a lossy round trip. */
+  private def maxErr(src: Array[Int], dec: Array[Int]): Int = {
+    var m = 0
+    var i = 0
+    while (i < src.length) {
+      val e = math.abs(src(i) - dec(i))
+      if (e > m) m = e
+      i += 1
+    }
+    m
+  }
+
+  /** An `imageCols` row from the container-routed lossless decode
+    * ([[Multimodal.decodeFeatures]]). */
+  private def losslessRow(doc: Long, bytes: Array[Byte]): Row = {
+    val (dw, dh, f) = Multimodal.decodeFeatures(bytes)
+    Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
+      f(0).toLong, f(1).toLong, f(2).toLong, f(3).toLong)
+  }
+
   /** Audio stats through the real WAV round trip: encode → decode →
     * (count, rate, max|s|, Σ|s|, Σ(i+1)|s|). The position-weighted sum
     * catches sample-order misdecodes the plain sum cannot. */
-  def mediaFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("sample_rate", LongType, nullable = false),
-      StructField("max_abs", LongType, nullable = false),
-      StructField("sum_abs", LongType, nullable = false),
-      StructField("wsum_abs", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val bytes = Multimodal.encodeWavPcm16(wavSamples(doc), 8000)
-          val (sr, smp) = Multimodal.decodeWav(bytes)
-          var sumAbs = 0L; var wsum = 0L; var maxAbs = 0L
-          var i = 0
-          while (i < smp.length) {
-            val a = math.abs(smp(i).toLong)
-            sumAbs += a; wsum += (i + 1) * a; if (a > maxAbs) maxAbs = a
-            i += 1
-          }
-          Row(doc, smp.length.toLong, sr.toLong, maxAbs, sumAbs, wsum)
-        }
-      }
+  def mediaFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(audioCols))(doc =>
+      wavStats(doc, Multimodal.encodeWavPcm16(wavSamples(doc), 8000)))
       .orderBy("doc_id")
-  }
 
   /** Audio stats through the COMPRESSED µ-law leg: the same formula
     * samples as [[mediaFeatures]], companded through G.711
@@ -1933,36 +2017,10 @@ object DataQueries {
     * segment by range CASE, mantissa shift, inverse) and the stats
     * are hash-exact — the compressed-audio analog of q_png_features,
     * with none of JPEG's tolerance banding. */
-  def ulawFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("sample_rate", LongType, nullable = false),
-      StructField("max_abs", LongType, nullable = false),
-      StructField("sum_abs", LongType, nullable = false),
-      StructField("wsum_abs", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val bytes = Multimodal.encodeWavUlaw(wavSamples(doc), 8000)
-          val (sr, smp) = Multimodal.decodeWav(bytes) // µ-law expanded
-          var sumAbs = 0L; var wsum = 0L; var maxAbs = 0L
-          var i = 0
-          while (i < smp.length) {
-            val a = math.abs(smp(i).toLong)
-            sumAbs += a; wsum += (i + 1) * a; if (a > maxAbs) maxAbs = a
-            i += 1
-          }
-          Row(doc, smp.length.toLong, sr.toLong, maxAbs, sumAbs, wsum)
-        }
-      }
+  def ulawFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(audioCols))(doc =>
+      wavStats(doc, Multimodal.encodeWavUlaw(wavSamples(doc), 8000)))
       .orderBy("doc_id")
-  }
 
   /** Audio stats through the IMA ADPCM round trip (encode → decode →
     * abs/position-weighted sums). Unlike µ-law, the decoded value at
@@ -1972,84 +2030,22 @@ object DataQueries {
     * checkpointing — is replayed bit-exactly at every position. The
     * DuckDB twin is a recursive CTE over the same closed-loop
     * encoder state machine. Map-only partition transform. */
-  def adpcmFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("sample_rate", LongType, nullable = false),
-      StructField("max_abs", LongType, nullable = false),
-      StructField("sum_abs", LongType, nullable = false),
-      StructField("wsum_abs", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val bytes = Multimodal.encodeWavAdpcm(wavSamples(doc), 8000)
-          val (sr, smp) = Multimodal.decodeWav(bytes)
-          var sumAbs = 0L; var wsum = 0L; var maxAbs = 0L
-          var i = 0
-          while (i < smp.length) {
-            val a = math.abs(smp(i).toLong)
-            sumAbs += a; wsum += (i + 1) * a; if (a > maxAbs) maxAbs = a
-            i += 1
-          }
-          Row(doc, smp.length.toLong, sr.toLong, maxAbs, sumAbs, wsum)
-        }
-      }
+  def adpcmFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(audioCols))(doc =>
+      wavStats(doc, Multimodal.encodeWavAdpcm(wavSamples(doc), 8000)))
       .orderBy("doc_id")
-  }
 
   /** Image stats through the real BMP (even ids) / PPM (odd ids) round
     * trip: dims from the decoded header, channel sums + a row-weighted
     * sum from the decoded pixels (the weighted sum catches vertical
     * orientation bugs — BMP rows are stored bottom-up). */
-  def imageFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("wsum_r", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = ((doc + 3L * x + 7L * y) % 256L).toInt
-              rgb(p + 1) = ((2L * doc + 5L * x + y) % 256L).toInt
-              rgb(p + 2) = ((3L * doc + x + 11L * y) % 256L).toInt
-              x += 1
-            }
-            y += 1
-          }
-          val bytes =
-            if (doc % 2 == 0) Multimodal.encodeBmp24(w, h, rgb)
-            else Multimodal.encodePpm(w, h, rgb)
-          val (dw, dh, f) = Multimodal.decodeFeatures(bytes)
-          Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
-            f(0).toLong, f(1).toLong, f(2).toLong, f(3).toLong)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def imageFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(imageCols)) { doc =>
+      val (w, h, rgb) = gradientImage(doc)
+      losslessRow(doc,
+        if (doc % 2 == 0) Multimodal.encodeBmp24(w, h, rgb)
+        else Multimodal.encodePpm(w, h, rgb))
+    }.orderBy("doc_id")
 
   /** 2:1 audio downsample through the REAL codec loop: decode WAV →
     * midpoint-average adjacent sample pairs (round half away from
@@ -2058,45 +2054,19 @@ object DataQueries {
     * stats. The oracle recomputes the resampled stats analytically
     * from the sample formula, so both codec passes AND the resample
     * arithmetic are gated. Map-only partition transform. */
-  def audioResample(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("sample_rate", LongType, nullable = false),
-      StructField("max_abs", LongType, nullable = false),
-      StructField("sum_abs", LongType, nullable = false),
-      StructField("wsum_abs", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val bytes = Multimodal.encodeWavPcm16(wavSamples(doc), 8000)
-          val (sr, smp) = Multimodal.decodeWav(bytes)
-          val res = Array.tabulate(smp.length / 2) { i =>
-            val sum = smp(2 * i) + smp(2 * i + 1)
-            // round(sum/2.0) half AWAY FROM ZERO, in pure integers
-            if (sum % 2 == 0) sum / 2
-            else if (sum > 0) (sum + 1) / 2
-            else (sum - 1) / 2
-          }
-          val bytes2 = Multimodal.encodeWavPcm16(res, sr / 2)
-          val (sr2, smp2) = Multimodal.decodeWav(bytes2)
-          var sumAbs = 0L; var wsum = 0L; var maxAbs = 0L
-          var i = 0
-          while (i < smp2.length) {
-            val a = math.abs(smp2(i).toLong)
-            sumAbs += a; wsum += (i + 1) * a; if (a > maxAbs) maxAbs = a
-            i += 1
-          }
-          Row(doc, smp2.length.toLong, sr2.toLong, maxAbs, sumAbs, wsum)
-        }
+  def audioResample(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(audioCols)) { doc =>
+      val bytes = Multimodal.encodeWavPcm16(wavSamples(doc), 8000)
+      val (sr, smp) = Multimodal.decodeWav(bytes)
+      val res = Array.tabulate(smp.length / 2) { i =>
+        val sum = smp(2 * i) + smp(2 * i + 1)
+        // round(sum/2.0) half AWAY FROM ZERO, in pure integers
+        if (sum % 2 == 0) sum / 2
+        else if (sum > 0) (sum + 1) / 2
+        else (sum - 1) / 2
       }
-      .orderBy("doc_id")
-  }
+      wavStats(doc, Multimodal.encodeWavPcm16(res, sr / 2))
+    }.orderBy("doc_id")
 
   /** Stratified budget allocation by the largest-remainder (Hamilton)
     * method: a total budget of `total` sampled documents split across
@@ -2135,47 +2105,11 @@ object DataQueries {
     * defect anywhere in the zlib/filter path shifts a sum and fails
     * the hash gate. Map-only partition-wise transform, like every
     * codec query. */
-  def pngFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("wsum_r", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = ((doc + 3L * x + 7L * y) % 256L).toInt
-              rgb(p + 1) = ((2L * doc + 5L * x + y) % 256L).toInt
-              rgb(p + 2) = ((3L * doc + x + 11L * y) % 256L).toInt
-              x += 1
-            }
-            y += 1
-          }
-          val bytes = Multimodal.encodePng(w, h, rgb)
-          val (dw, dh, f) = Multimodal.decodeFeatures(bytes)
-          Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
-            f(0).toLong, f(1).toLong, f(2).toLong, f(3).toLong)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def pngFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(imageCols)) { doc =>
+      val (w, h, rgb) = gradientImage(doc)
+      losslessRow(doc, Multimodal.encodePng(w, h, rgb))
+    }.orderBy("doc_id")
 
   /** QOI leg of the codec family ([[Qoi]]): identical formula pixels
     * to [[pngFeatures]] through the QOI encode→decode round trip —
@@ -2183,47 +2117,11 @@ object DataQueries {
     * with no band. The formula's ±(3,5,7,11)-step row gradients
     * exercise DIFF/LUMA chunks; modular wrap points force RGB
     * literals; repeated colors hit the INDEX table. */
-  def qoiFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("wsum_r", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = ((doc + 3L * x + 7L * y) % 256L).toInt
-              rgb(p + 1) = ((2L * doc + 5L * x + y) % 256L).toInt
-              rgb(p + 2) = ((3L * doc + x + 11L * y) % 256L).toInt
-              x += 1
-            }
-            y += 1
-          }
-          val bytes = Qoi.encode(w, h, rgb)
-          val (dw, dh, f) = Multimodal.decodeFeatures(bytes)
-          Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
-            f(0).toLong, f(1).toLong, f(2).toLong, f(3).toLong)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def qoiFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(imageCols)) { doc =>
+      val (w, h, rgb) = gradientImage(doc)
+      losslessRow(doc, Qoi.encode(w, h, rgb))
+    }.orderBy("doc_id")
 
   /** JPEG leg of the codec family ([[Jpeg]]): identical formula pixels
     * to [[pngFeatures]], but the round trip rides the LOSSY baseline
@@ -2238,58 +2136,15 @@ object DataQueries {
     * structural field or pushes a pixel out of band — both flip a cell
     * and fail the hash gate. Map-only partition-wise, like every codec
     * query. */
-  def jpegFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("wsum_r", LongType, nullable = false),
-      StructField("within_band", BooleanType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var sr = 0L; var sg = 0L; var sb = 0L; var wr = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = ((doc + 3L * x + 7L * y) % 256L).toInt
-              rgb(p + 1) = ((2L * doc + 5L * x + y) % 256L).toInt
-              rgb(p + 2) = ((3L * doc + x + 11L * y) % 256L).toInt
-              sr += rgb(p); sg += rgb(p + 1); sb += rgb(p + 2)
-              wr += (y + 1L) * rgb(p)
-              x += 1
-            }
-            y += 1
-          }
-          val bytes = Jpeg.encode(w, h, rgb, q = 1)
-          val (dw, dh, dec) = Jpeg.decode(bytes)
-          var maxErr = 0
-          var i = 0
-          while (i < rgb.length) {
-            val e = math.abs(rgb(i) - dec(i))
-            if (e > maxErr) maxErr = e
-            i += 1
-          }
-          Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
-            sr, sg, sb, wr, maxErr <= 4)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def jpegFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(imageCols + ", within_band BOOLEAN")) { doc =>
+      val (w, h, rgb) = gradientImage(doc)
+      val f = rgbSums(w, rgb)
+      val bytes = Jpeg.encode(w, h, rgb, q = 1)
+      val (dw, dh, dec) = Jpeg.decode(bytes)
+      Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
+        f(0), f(1), f(2), f(3), maxErr(rgb, dec) <= 4)
+    }.orderBy("doc_id")
 
   /** VIDEO leg: per doc a 4-frame motion-JPEG clip (doc-keyed smooth
     * gradients whose brightness ramps per frame), then an INDEX SEEK
@@ -2298,65 +2153,23 @@ object DataQueries {
     * extracted frame. This is the frame-sampling access path a
     * training pipeline runs over video: container index → one frame →
     * decode → features, never a full-clip decode. */
-  def videoFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("within_band", BooleanType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          def frame(t: Int): Array[Int] = {
-            val rgb = new Array[Int](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = 30 + 3 * x + 10 * t + (doc % 50).toInt
-                rgb(p + 1) = 20 + 4 * y + 10 * t + (doc % 40).toInt
-                rgb(p + 2) = 45 + 10 * t + (doc % 120).toInt
-                x += 1
-              }
-              y += 1
-            }
-            rgb
-          }
-          val clip = Multimodal.encodeMjpeg(
-            (0 until 4).map(t => Jpeg.encode(w, h, frame(t), q = 1)))
-          val mid = frame(2)
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var i = 0
-          while (i < w * h) {
-            sr += mid(3 * i); sg += mid(3 * i + 1); sb += mid(3 * i + 2)
-            i += 1
-          }
-          val (dw, dh, dec) = Multimodal.decodeMjpegFrame(clip, 2)
-          var maxErr = 0
-          i = 0
-          while (i < mid.length) {
-            val e = math.abs(mid(i) - dec(i))
-            if (e > maxErr) maxErr = e
-            i += 1
-          }
-          Row(doc, Multimodal.mjpegFrameCount(clip).toLong,
-            dw.toLong, dh.toLong, sr, sg, sb, maxErr <= 4)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def videoFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull("doc_id BIGINT, n_frames BIGINT, width BIGINT, " +
+        "height BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT, " +
+        "within_band BOOLEAN")) { doc =>
+      val (w, h) = imageDims(doc)
+      def frame(t: Int): Array[Int] =
+        pixels(w, h)((x, _) => 30 + 3 * x + 10 * t + (doc % 50).toInt,
+          (_, y) => 20 + 4 * y + 10 * t + (doc % 40).toInt,
+          (_, _) => 45 + 10 * t + (doc % 120).toInt)
+      val clip = Multimodal.encodeMjpeg(
+        (0 until 4).map(t => Jpeg.encode(w, h, frame(t), q = 1)))
+      val mid = frame(2)
+      val f = rgbSums(w, mid)
+      val (dw, dh, dec) = Multimodal.decodeMjpegFrame(clip, 2)
+      Row(doc, Multimodal.mjpegFrameCount(clip).toLong,
+        dw.toLong, dh.toLong, f(0), f(1), f(2), maxErr(mid, dec) <= 4)
+    }.orderBy("doc_id")
 
   /** GIF leg of the codec gate — the second COMPRESSED image format
     * (LZW vs PNG's deflate), and lossless: the decoded-pixel sums are
@@ -2364,54 +2177,18 @@ object DataQueries {
     * defect anywhere in the palette/LZW/sub-block path shifts a sum
     * and fails the hash gate. Doc-keyed 5-level banded pixels keep
     * the palette ≤125 colors. Map-only partition-wise. */
-  def gifFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("wsum_r", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = (((x + y) % 5) * 36 + doc % 36).toInt
-              rgb(p + 1) = (((2 * x + y) % 5) * 30 + doc % 30).toInt
-              rgb(p + 2) = (((x + 3 * y) % 5) * 20 + doc % 20).toInt
-              x += 1
-            }
-            y += 1
-          }
-          val bytes = Gif.encode(w, h, rgb)
-          val (dw, dh, dec) = Gif.decode(bytes)
-          var sr = 0L; var sg = 0L; var sb = 0L; var wr = 0L
-          var i = 0
-          while (i < dw * dh) {
-            sr += dec(3 * i); sg += dec(3 * i + 1); sb += dec(3 * i + 2)
-            wr += (i / dw + 1L) * dec(3 * i)
-            i += 1
-          }
-          Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
-            sr, sg, sb, wr)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def gifFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull(imageCols)) { doc =>
+      val (w, h) = imageDims(doc)
+      val bytes = Gif.encode(w, h,
+        pixels(w, h)((x, y) => (((x + y) % 5) * 36 + doc % 36).toInt,
+          (x, y) => (((2 * x + y) % 5) * 30 + doc % 30).toInt,
+          (x, y) => (((x + 3 * y) % 5) * 20 + doc % 20).toInt))
+      val (dw, dh, dec) = Gif.decode(bytes)
+      val f = rgbSums(dw, dec)
+      Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
+        f(0), f(1), f(2), f(3))
+    }.orderBy("doc_id")
 
   /** 4:2:0 leg of the JPEG gate: smooth doc-keyed gradients (no mod-256
     * wraparound — box-downsampled chroma cannot follow sharp edges, so
@@ -2419,56 +2196,19 @@ object DataQueries {
     * [[Jpeg.encode420]] → decode, banded at ≤8 per pixel (measured
     * worst case 5 across the doc grid). Analytic sums exact; the
     * subsampled write path rides the oracle gate, not just the spec. */
-  def jpeg420Features(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("within_band", BooleanType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = 40 + 3 * x + (doc % 60).toInt
-              rgb(p + 1) = 30 + 4 * y + (doc % 40).toInt
-              rgb(p + 2) = 55 + (doc % 150).toInt
-              sr += rgb(p); sg += rgb(p + 1); sb += rgb(p + 2)
-              x += 1
-            }
-            y += 1
-          }
-          val bytes = Jpeg.encode420(w, h, rgb, q = 1)
-          val (dw, dh, dec) = Jpeg.decode(bytes)
-          var maxErr = 0
-          var i = 0
-          while (i < rgb.length) {
-            val e = math.abs(rgb(i) - dec(i))
-            if (e > maxErr) maxErr = e
-            i += 1
-          }
-          Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
-            sr, sg, sb, maxErr <= 8)
-        }
-      }
-      .orderBy("doc_id")
-  }
+  def jpeg420Features(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull("doc_id BIGINT, format STRING, width BIGINT, " +
+        "height BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT, " +
+        "within_band BOOLEAN")) { doc =>
+      val (w, h) = imageDims(doc)
+      val rgb = pixels(w, h)((x, _) => 40 + 3 * x + (doc % 60).toInt,
+        (_, y) => 30 + 4 * y + (doc % 40).toInt, (_, _) => 55 + (doc % 150).toInt)
+      val f = rgbSums(w, rgb)
+      val bytes = Jpeg.encode420(w, h, rgb, q = 1)
+      val (dw, dh, dec) = Jpeg.decode(bytes)
+      Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
+        f(0), f(1), f(2), maxErr(rgb, dec) <= 8)
+    }.orderBy("doc_id")
 
   /** PROGRESSIVE JPEG leg ([[Jpeg.decodeProgressive]] via the frame
     * dispatcher): a real crawl is ~10% progressive (SOF2), so the
@@ -2486,87 +2226,41 @@ object DataQueries {
     * 0..4095 at q=1.0, band set at 8. Analytic sums replay exactly in
     * the oracle; a defect in any scan pass (DC refinement bit, AC
     * EOB-run, correction-bit walk) shifts pixels out of band. */
-  def jpegProgFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("n_scans", LongType, nullable = false),
-      StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false),
-      StructField("sum_r", LongType, nullable = false),
-      StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false),
-      StructField("within_band", BooleanType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val w = 16 + (doc % 9).toInt
-          val h = 12 + (doc % 7).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              rgb(p) = (20 + 2 * x + 3 * y + (doc % 60)).toInt
-              rgb(p + 1) = (35 + 4 * x + y + (doc % 45)).toInt
-              rgb(p + 2) = (50 + x + 2 * y + (doc % 70)).toInt
-              sr += rgb(p); sg += rgb(p + 1); sb += rgb(p + 2)
-              x += 1
-            }
-            y += 1
-          }
-          val img = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var yy = 0
-          while (yy < h) {
-            var x = 0
-            while (x < w) {
-              val p = (yy * w + x) * 3
-              img.setRGB(x, yy, (rgb(p) << 16) | (rgb(p + 1) << 8) | rgb(p + 2))
-              x += 1
-            }
-            yy += 1
-          }
-          val baos = new java.io.ByteArrayOutputStream
-          val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-          val param = wr.getDefaultWriteParam
-          param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-          param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-          param.setCompressionQuality(1.0f)
-          wr.setOutput(javax.imageio.ImageIO.createImageOutputStream(baos))
-          wr.write(null, new javax.imageio.IIOImage(img, null, null), param)
-          wr.dispose()
-          val bytes = baos.toByteArray
-          // count SOS markers: the structural proof the stream really
-          // is multi-scan progressive, pinned as a column
-          var nScans = 0L
-          var i = 0
-          while (i < bytes.length - 1) {
-            if ((bytes(i) & 0xff) == 0xff && (bytes(i + 1) & 0xff) == 0xda)
-              nScans += 1
-            i += 1
-          }
-          val (dw, dh, dec) = Jpeg.decode(bytes)
-          var maxErr = 0
-          var j = 0
-          while (j < rgb.length) {
-            val e = math.abs(rgb(j) - dec(j))
-            if (e > maxErr) maxErr = e
-            j += 1
-          }
-          Row(doc, Multimodal.detectFormat(bytes), nScans, dw.toLong,
-            dh.toLong, sr, sg, sb, maxErr <= 8)
-        }
+  def jpegProgFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull("doc_id BIGINT, format STRING, n_scans BIGINT, " +
+        "width BIGINT, height BIGINT, sum_r BIGINT, sum_g BIGINT, " +
+        "sum_b BIGINT, within_band BOOLEAN")) { doc =>
+      val (w, h) = imageDims(doc)
+      val rgb = pixels(w, h)((x, y) => (20 + 2 * x + 3 * y + (doc % 60)).toInt,
+        (x, y) => (35 + 4 * x + y + (doc % 45)).toInt,
+        (x, y) => (50 + x + 2 * y + (doc % 70)).toInt)
+      val f = rgbSums(w, rgb)
+      val img = new java.awt.image.BufferedImage(w, h,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      var i = 0
+      while (i < w * h) {
+        img.setRGB(i % w, i / w,
+          (rgb(3 * i) << 16) | (rgb(3 * i + 1) << 8) | rgb(3 * i + 2))
+        i += 1
       }
-      .orderBy("doc_id")
-  }
+      val baos = new java.io.ByteArrayOutputStream
+      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
+      val param = wr.getDefaultWriteParam
+      param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+      param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(1.0f)
+      wr.setOutput(javax.imageio.ImageIO.createImageOutputStream(baos))
+      wr.write(null, new javax.imageio.IIOImage(img, null, null), param)
+      wr.dispose()
+      val bytes = baos.toByteArray
+      // count SOS markers: the structural proof the stream really
+      // is multi-scan progressive, pinned as a column
+      val nScans = (0 until bytes.length - 1).count(j =>
+        (bytes(j) & 0xff) == 0xff && (bytes(j + 1) & 0xff) == 0xda).toLong
+      val (dw, dh, dec) = Jpeg.decode(bytes)
+      Row(doc, Multimodal.detectFormat(bytes), nScans, dw.toLong,
+        dh.toLong, f(0), f(1), f(2), maxErr(rgb, dec) <= 8)
+    }.orderBy("doc_id")
 
   /** FLAC leg of the audio family ([[Flac]]): doc-keyed piecewise-
     * linear 16-bit PCM rides a full encode (best fixed predictor +
@@ -2579,45 +2273,28 @@ object DataQueries {
     * row). `compressed` pins that the smooth signal really came out
     * smaller than raw PCM — a regression to escape-everything would
     * flip it. Map-only partition-wise, like every codec query. */
-  def flacFeatures(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("sample_rate", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("sum_s", LongType, nullable = false),
-      StructField("sum_abs", LongType, nullable = false),
-      StructField("min_s", LongType, nullable = false),
-      StructField("max_s", LongType, nullable = false),
-      StructField("compressed", BooleanType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val n = 600 + (doc % 50).toInt
-          val pcm = Array.tabulate(n) { i =>
-            ((i.toLong * (200 + doc % 32)) % 8000 - 4000
-              + (doc * 31 + i) % 5).toInt
-          }
-          val bytes = Flac.encode(Array(pcm), sampleRate = 16000)
-          val (sr, ch, dec) = Flac.decode(bytes)
-          require(sr == 16000 && ch == 1, "flac leg: header mismatch")
-          var sum = 0L; var sabs = 0L
-          var mn = Long.MaxValue; var mx = Long.MinValue
-          dec(0).foreach { v =>
-            sum += v; sabs += math.abs(v.toLong)
-            if (v < mn) mn = v
-            if (v > mx) mx = v
-          }
-          Row(doc, 16000L, dec(0).length.toLong, sum, sabs, mn, mx,
-            bytes.length < 2 * n)
-        }
+  def flacFeatures(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull("doc_id BIGINT, sample_rate BIGINT, " +
+        "n_samples BIGINT, sum_s BIGINT, sum_abs BIGINT, min_s BIGINT, " +
+        "max_s BIGINT, compressed BOOLEAN")) { doc =>
+      val n = 600 + (doc % 50).toInt
+      val pcm = Array.tabulate(n) { i =>
+        ((i.toLong * (200 + doc % 32)) % 8000 - 4000
+          + (doc * 31 + i) % 5).toInt
       }
-      .orderBy("doc_id")
-  }
+      val bytes = Flac.encode(Array(pcm), sampleRate = 16000)
+      val (sr, ch, dec) = Flac.decode(bytes)
+      require(sr == 16000 && ch == 1, "flac leg: header mismatch")
+      var sum = 0L; var sabs = 0L
+      var mn = Long.MaxValue; var mx = Long.MinValue
+      dec(0).foreach { v =>
+        sum += v; sabs += math.abs(v.toLong)
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+      }
+      Row(doc, 16000L, dec(0).length.toLong, sum, sabs, mn, mx,
+        bytes.length < 2 * n)
+    }.orderBy("doc_id")
 
   /** Perceptual image dedup groups via dHash: 12 planted seed groups —
     * same-seed images share base pixels and dimensions, each doc adds a
@@ -2628,95 +2305,56 @@ object DataQueries {
     * so the oracle replays the hash bit-for-bit from the pixel
     * formulas; a decode or grid-partition defect changes the hashes
     * and fails the gate. */
-  def dhashGroups(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("dhash", StringType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    val hashed = Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val seed = doc % 12
-          val w = 16 + (seed % 5).toInt
-          val h = 12 + (seed % 4).toInt
-          val rgb = new Array[Int](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = (y * w + x) * 3
-              // nonlinear in (x, y) per seed: a linear ramp has
-              // seed-independent gradient SIGNS, which is exactly what
-              // dHash keys on — products give each seed its own pattern
-              val perturb = if ((doc * 13L + x + 7L * y) % 29L == 0L) 2L else 0L
-              rgb(p) = ((((seed + 1L) * (x.toLong * x + 7L * y) + 3L * x * y) % 256L
-                + perturb) % 256L).toInt
-              rgb(p + 1) = (((seed * seed + 1L) * x + (seed + 5L) * y.toLong * y) % 256L).toInt
-              rgb(p + 2) = (((seed + 2L) * x.toLong * y + 11L * y + x) % 256L).toInt
-              x += 1
-            }
-            y += 1
-          }
-          // container rotates over all FOUR lossless image codecs
-          // (PNG and QOI take the compressed legs); decoded pixels
-          // are container-independent, so the analytic oracle is
-          // untouched while every codec's round trip rides the gate
-          val bytes = (doc % 4) match {
-            case 0 => Multimodal.encodeBmp24(w, h, rgb)
-            case 1 => Multimodal.encodePpm(w, h, rgb)
-            case 2 => Qoi.encode(w, h, rgb)
-            case _ => Multimodal.encodePng(w, h, rgb)
-          }
-          val (dw, dh, drgb) = Multimodal.detectFormat(bytes) match {
-            case "bmp" => Multimodal.decodeBmp(bytes)
-            case "ppm" => Multimodal.decodePpm(bytes)
-            case "qoi" => Qoi.decode(bytes)
-            case _ => Multimodal.decodePng(bytes)
-          }
-          Row(doc, Multimodal.dHash(dw, dh, drgb))
-        }
+  def dhashGroups(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull("doc_id BIGINT, dhash STRING")) { doc =>
+      val seed = doc % 12
+      val w = 16 + (seed % 5).toInt
+      val h = 12 + (seed % 4).toInt
+      // nonlinear in (x, y) per seed: a linear ramp has
+      // seed-independent gradient SIGNS, which is exactly what
+      // dHash keys on — products give each seed its own pattern
+      val rgb = pixels(w, h)({ (x, y) =>
+          val perturb = if ((doc * 13L + x + 7L * y) % 29L == 0L) 2L else 0L
+          ((((seed + 1L) * (x.toLong * x + 7L * y) + 3L * x * y) % 256L
+            + perturb) % 256L).toInt
+        },
+        (x, y) => (((seed * seed + 1L) * x + (seed + 5L) * y.toLong * y) % 256L).toInt,
+        (x, y) => (((seed + 2L) * x.toLong * y + 11L * y + x) % 256L).toInt)
+      // container rotates over all FOUR lossless image codecs
+      // (PNG and QOI take the compressed legs); decoded pixels
+      // are container-independent, so the analytic oracle is
+      // untouched while every codec's round trip rides the gate
+      val bytes = (doc % 4) match {
+        case 0 => Multimodal.encodeBmp24(w, h, rgb)
+        case 1 => Multimodal.encodePpm(w, h, rgb)
+        case 2 => Qoi.encode(w, h, rgb)
+        case _ => Multimodal.encodePng(w, h, rgb)
       }
-    hashed
+      val (dw, dh, drgb) = Multimodal.detectFormat(bytes) match {
+        case "bmp" => Multimodal.decodeBmp(bytes)
+        case "ppm" => Multimodal.decodePpm(bytes)
+        case "qoi" => Qoi.decode(bytes)
+        case _ => Multimodal.decodePng(bytes)
+      }
+      Row(doc, Multimodal.dHash(dw, dh, drgb))
+    }
       .withColumn("rep",
         min(col("doc_id")).over(Window.partitionBy("dhash")))
       .orderBy("doc_id")
-  }
 
   /** Media near-dup: 16 planted seed groups — same-seed clips share a
     * base waveform and differ by a ±1-per-sample perturbation — through
     * encode → decode → 8-dim signed-sum features → blocked exact cosine
     * (τ = 0.999). The feature vectors are integer-valued, so the oracle
     * replays the identical cosine from the analytic features. */
-  def mediaNearDup(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val media = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("content", BinaryType, nullable = false)))
-    implicit val enc = Encoders.row(media)
-    val df = Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val seed = doc % 16
-          val n = 512 + (seed % 4).toInt * 64
-          val smp = Array.tabulate(n) { i =>
-            (((seed + 1) * 40503L + i.toLong * 2654435761L) % 32768L - 16384L
-              + (doc * 31L + i) % 3L - 1L).toInt
-          }
-          Row(doc, Multimodal.encodeWavPcm16(smp, 8000))
-        }
-      }
-    Multimodal.mediaNearDups(df, 0.999)
+  def mediaNearDup(s: SparkSession, d: String): DataFrame =
+    Multimodal.mediaNearDups(
+        perDoc(s, d, nonNull("media_id BIGINT, content BINARY"))(doc =>
+          Row(doc, Multimodal.encodeWavPcm16(seededWave(doc), 8000))),
+        0.999)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
         round(col("cos"), 6).as("cos"))
       .orderBy("doc_a", "doc_b")
-  }
 
   /** Perceptual AUDIO fingerprint — the audio analog of [[dhashGroups]]'
     * dHash: 16 frames of 32 samples each, per-frame energy Σ|s|
@@ -2730,50 +2368,19 @@ object DataQueries {
     * replays waveform, energies, delta signs, and grouping
     * bit-for-bit. At scale this is one map-only pass + a 64-bit
     * group-by: the content-addressed dedup key for audio. */
-  def audioFingerprint(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val out = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("fp", LongType, nullable = false)))
-    implicit val enc = Encoders.row(out)
-    val fps = Scale.fanoutRepartition(
-        Tables.documents(s, d).select(col("doc_id")), col("doc_id"))
-      .mapPartitions { rows =>
-        rows.map { row =>
-          val doc = row.getLong(0)
-          val seed = doc % 16
-          val n = 512 + (seed % 4).toInt * 64
-          val smp = Array.tabulate(n) { i =>
-            (((seed + 1) * 40503L + i.toLong * 2654435761L) % 32768L - 16384L
-              + (doc * 31L + i) % 3L - 1L).toInt
-          }
-          val bytes = Multimodal.encodeWavPcm16(smp, 8000)
-          val (_, dec) = Multimodal.decodeWav(bytes)
-          val e = new Array[Long](16)
-          var f = 0
-          while (f < 16) {
-            var j = 0
-            var acc = 0L
-            while (j < 32) { acc += math.abs(dec(f * 32 + j).toLong); j += 1 }
-            e(f) = acc
-            f += 1
-          }
-          var fp = 0L
-          f = 1
-          while (f < 16) {
-            if (e(f) > e(f - 1)) fp |= 1L << (f - 1)
-            f += 1
-          }
-          Row(doc, fp)
-        }
-      }
-    fps
+  def audioFingerprint(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d, nonNull("doc_id BIGINT, fp BIGINT")) { doc =>
+      val (_, dec) =
+        Multimodal.decodeWav(Multimodal.encodeWavPcm16(seededWave(doc), 8000))
+      val e = Array.tabulate(16)(f =>
+        (0 until 32).foldLeft(0L)((acc, j) => acc + math.abs(dec(f * 32 + j).toLong)))
+      Row(doc, (1 until 16).foldLeft(0L)((fp, f) =>
+        if (e(f) > e(f - 1)) fp | 1L << (f - 1) else fp))
+    }
       .withColumn("rep", min(col("doc_id")).over(Window.partitionBy("fp")))
       .withColumn("group_size", count(lit(1)).over(Window.partitionBy("fp")))
       .select("doc_id", "fp", "rep", "group_size")
       .orderBy("doc_id")
-  }
 
   /** Sliding-window duplicated-substring removal (Lee-et-al form):
     * see [[DedupOps.duplicatedSpanStrip]]. */
@@ -3524,8 +3131,6 @@ object DataQueries {
     implicit val ord: Ordering[((String, String), Long)] =
       Ordering.by { case ((x, y), c) => (-c, x, y) }
     while (winners.size < merges && !exhausted) {
-      if (sys.env.contains("GRAFT_BPE_TRACE"))
-        println(s"BPEROUND t=${System.nanoTime() / 1000000} winners=${winners.size}")
       val top = state.flatMap { case (c, syms) =>
         // overlapping adjacent pairs at every occurrence (get_stats)
         (0 until syms.length - 1).iterator.map(i => ((syms(i), syms(i + 1)), c))

@@ -274,9 +274,6 @@ object TimeSeries {
   /** P12: Uniswap tick→price, `price = 1.0001^tick`. */
   def tickToPrice(tick: Column): Column = pow(lit(1.0001), tick)
 
-  /** P12: tick-difference → percent, `(1.0001^q − 1)·100`. */
-  def pctFromTicks(q: Column): Column = (pow(lit(1.0001), q) - 1.0) * 100.0
-
   /** P11: canonical pair + sign — if (a,b) is in the allowed orientation
     * keep it with sign +1, else flip to (b,a) with sign −1 (pyc
     * `stable_fee_ml_bot.py:57-63`). Returns (a, b, sign) as a struct. */

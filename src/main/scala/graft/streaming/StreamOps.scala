@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.ops.Backtest
 
 /** Structured Streaming variants of the batch operators — the chain-tip
   * following mode the reference's roadmap promises (`README.md:202-208`)
@@ -1339,12 +1340,9 @@ object StreamOps {
   case class Position(side: String, entryTs: Long, entryPrice: Double)
   case class TickIn(key: String, ts: Long, price: Double, dev: Double)
   case class TradeOut(pool: String, side: String, entry_ts: Long, exit_ts: Long,
-                      entry_price: Double, exit_price: Double, pct_return: Double)
+                      entry_price: Double, exit_price: Double,
+                      pct_return: java.lang.Double)
 
-  /** F2 streaming state: open position plus the running grid-row index
-    * (`idx` must advance on warm-up rows too, so the hold clock matches
-    * the batch FSM across micro-batch boundaries). `side` is null when
-    * flat. */
   case class AttrIn(userId: Long, eventId: Long, eventType: String,
                     tsMicros: Long)
   case class AttrState(lastClickMicros: Long)
@@ -1383,12 +1381,17 @@ object StreamOps {
       }
   }
 
+  /** F2 streaming state: open position plus the running grid-row index
+    * (`idx` must advance on warm-up rows too, so the hold clock matches
+    * the batch FSM across micro-batch boundaries). `side` is null when
+    * flat. */
   case class ZState(idx: Long, side: String, entryIdx: Long, entryTs: Long,
                     entryPrice: Double, entryZ: Double)
   case class ZTickIn(key: String, ts: Long, price: Double, z: Double)
   case class ZTradeOut(pool: String, side: String, entry_ts: Long, exit_ts: Long,
                        entry_price: Double, exit_price: Double, entry_z: Double,
-                       exit_z: Double, pct_return: Double, held_rows: Long)
+                       exit_z: Double, pct_return: java.lang.Double,
+                       held_rows: Long)
 
   /** F2, streaming: the z-score FSM as flatMapGroupsWithState — same
     * transition rules as Backtest.zscoreReversion (entry at |z| ≥
@@ -1429,10 +1432,8 @@ object StreamOps {
                 val exit = (side == "long" && r.z >= -exitZ) ||
                            (side == "short" && r.z <= exitZ) || held >= maxHold
                 if (exit) {
-                  val ret = if (side == "long") (r.price - entryPrice) / entryPrice
-                            else (entryPrice - r.price) / entryPrice
                   out += ZTradeOut(key, side, entryTs, r.ts, entryPrice, r.price,
-                    entryZv, r.z, ret, held)
+                    entryZv, r.z, Backtest.pctReturn(side, entryPrice, r.price), held)
                   side = null
                 }
               }
@@ -1468,10 +1469,9 @@ object StreamOps {
                 val exit = (p.side == "long" && r.dev >= 0) ||
                            (p.side == "short" && r.dev <= 0)
                 if (exit) {
-                  val ret = if (p.side == "long") (r.price - p.entryPrice) / p.entryPrice
-                            else (p.entryPrice - r.price) / p.entryPrice
                   out += TradeOut(key, p.side, p.entryTs, r.ts,
-                    p.entryPrice, r.price, ret)
+                    p.entryPrice, r.price,
+                    Backtest.pctReturn(p.side, p.entryPrice, r.price))
                   pos = None
                 }
             }

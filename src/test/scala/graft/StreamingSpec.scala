@@ -561,7 +561,7 @@ class StreamingSpec extends SparkSpec {
         rows.map(r => (r.key, r.ts, r.price, r.z)).toDF("k", "ts", "px", "z"),
         "k", "ts", "px", "z", entryZ = 2.0, exitZ = 0.2, maxHold = 3)
       .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
-        r.getDouble(8), r.getInt(9).toLong))
+        r.getAs[java.lang.Double](8), r.getInt(9).toLong))
     assert(got.length == 2 && batch.length == 2)
     assert(got.map(t => (t.side, t.entry_ts, t.exit_ts, t.pct_return, t.held_rows))
       .toSeq == batch.toSeq)
@@ -585,9 +585,59 @@ class StreamingSpec extends SparkSpec {
     val batch = Backtest.meanReversion(
         rows.toDF("k", "ts", "px", "dev"), "k", "ts", "px", "dev", 0.5)
       .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
-        r.getDouble(6)))
+        r.getAs[java.lang.Double](6)))
     assert(got.length == batch.length && got.length == 2)
     assert(got.map(t => (t.side, t.entry_ts, t.exit_ts, t.pct_return)).toSeq
       == batch.toSeq)
+  }
+
+  test("streaming FSMs: a zero entry price gives a null pct_return, as batch does") {
+    import graft.streaming.StreamOps.{ZTickIn, ZTradeOut}
+    implicit val sc = spark.sqlContext
+    // each FSM opens at price 0 in the first micro-batch and closes in
+    // the second, so the zero entry price crosses the state store
+    val ticks = Seq(
+      TickIn("p", 1L, 0.0, -0.6),  // open long at 0
+      TickIn("p", 2L, 5.0, 0.1),   // exit: 5 / 0 → null
+      TickIn("p", 3L, 4.0, 0.7),   // open short
+      TickIn("p", 4L, 2.0, -0.1))  // exit: (4 − 2) / 4
+    val in = MemoryStream[TickIn]
+    val q = StreamOps.meanReversionStream(in.toDS(), thr = 0.5)
+      .writeStream.format("memory").queryName("fsm_zero_out")
+      .outputMode("append").start()
+    in.addData(ticks.take(1): _*); q.processAllAvailable()
+    in.addData(ticks.drop(1): _*); q.processAllAvailable()
+    val got = spark.table("fsm_zero_out").as[TradeOut].collect().sortBy(_.entry_ts)
+    q.stop()
+    val batch = Backtest.meanReversion(
+        ticks.toDF("k", "ts", "px", "dev"), "k", "ts", "px", "dev", 0.5)
+      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
+        r.getAs[java.lang.Double](6)))
+    assert(got.map(t => (t.side, t.entry_ts, t.exit_ts, t.pct_return)).toSeq
+      == batch.toSeq)
+    assert(got.map(_.pct_return).toSeq == Seq(null, java.lang.Double.valueOf(0.5)))
+
+    val zticks = Seq(
+      ZTickIn("p", 1L, 0.0, -2.5),  // open long at 0
+      ZTickIn("p", 2L, 5.0, -0.1),  // exit: 5 / 0 → null
+      ZTickIn("p", 3L, 4.0, 2.5),   // open short
+      ZTickIn("p", 4L, 2.0, 0.1))   // exit: (4 − 2) / 4
+    val zin = MemoryStream[ZTickIn]
+    val zq = StreamOps.zscoreReversionStream(zin.toDS(),
+        entryZ = 2.0, exitZ = 0.2, maxHold = 10)
+      .writeStream.format("memory").queryName("zfsm_zero_out")
+      .outputMode("append").start()
+    zin.addData(zticks.take(1): _*); zq.processAllAvailable()
+    zin.addData(zticks.drop(1): _*); zq.processAllAvailable()
+    val zgot = spark.table("zfsm_zero_out").as[ZTradeOut].collect().sortBy(_.entry_ts)
+    zq.stop()
+    val zbatch = Backtest.zscoreReversion(
+        zticks.map(r => (r.key, r.ts, r.price, r.z)).toDF("k", "ts", "px", "z"),
+        "k", "ts", "px", "z", entryZ = 2.0, exitZ = 0.2, maxHold = 10)
+      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
+        r.getAs[java.lang.Double](8), r.getInt(9).toLong))
+    assert(zgot.map(t => (t.side, t.entry_ts, t.exit_ts, t.pct_return, t.held_rows))
+      .toSeq == zbatch.toSeq)
+    assert(zgot.map(_.pct_return).toSeq == Seq(null, java.lang.Double.valueOf(0.5)))
   }
 }
