@@ -1,17 +1,18 @@
 package graft
 
 import graft.api.Config
-import graft.evm.{Indexer, LogSource, Progress, RpcConfig}
+import graft.evm.{Indexer, LogEndpoint, Progress}
 import java.nio.file.{Files, Path, Paths}
 
 /** The reference's CLI entry point (`cmd/indexer.go:19-74`):
   * `--config=config.yaml` → load + validate → connect source → run the
   * indexer → per-event counts. ABI paths in the config resolve relative
   * to the config file, like the reference's working-directory loads.
-  * `rpc_url` doubles as the source selector (an `http(s)://` value goes
-  * live over JSON-RPC, a filesystem path replays dumps);
-  * `--end-block=N` bounds the scan, default = probe the source tip
-  * (`eth_blockNumber` live, max dump height offline).
+  * `rpc_url` doubles as the source selector ([[LogEndpoint]]: an
+  * `http(s)://` value goes live over JSON-RPC, a filesystem path
+  * replays dumps); `--end-block=N` bounds the scan, default = the
+  * endpoint's tip (`eth_blockNumber` live, the indexed max dump height
+  * offline).
   *
   * Ctrl-C lands in a JVM shutdown hook that cancels all running Spark
   * jobs before the driver exits — the reference's signal → context
@@ -49,12 +50,8 @@ object IndexerMain {
       .getOrElse(Paths.get("."))
     val job = Config.load(yaml,
       abiPath => Files.readString(resolve(configDir, abiPath)))
-    val endBlock = flag(args, "end-block").map(_.toLong).getOrElse {
-      if (job.rpcUrl.startsWith("http://") || job.rpcUrl.startsWith("https://"))
-        LogSource.latestBlock(
-          RpcConfig(job.rpcUrl, job.retry.attempts, job.retry.delayMs))
-      else LogSource.latestBlock(spark, job.rpcUrl)
-    }
+    val endBlock = flag(args, "end-block").map(_.toLong)
+      .getOrElse(LogEndpoint(job.rpcUrl, job.retry).tip())
     val outDir = job.csvOutputDir.getOrElse(
       throw new IllegalArgumentException(
         s"unsupported storage type: ${job.storageType} (csv output_dir required)"))

@@ -23,8 +23,10 @@ import scala.util.{Failure, Try}
   * address-only fallback, P2, `indexer.go:211-222`); unknown event
   * names in the filter are skipped with a warn, `indexer.go:70-77`.
   * Returns the per-event row counts — the `[OK] … Events: n` progress
-  * surface (C6). The scan replays dumps; a live build swaps the
-  * source's reader for RPC fetches and nothing here changes.
+  * surface (C6). The source string picks the endpoint
+  * ([[LogEndpoint]]): an `http(s)://` URL is fetched live, one
+  * `eth_getLogs` per chunk retried per the job config; anything else is
+  * a dump directory to replay. The scan/pushdown plan is identical.
   */
 object Indexer {
 
@@ -34,17 +36,6 @@ object Indexer {
   private def binaryTopics(logs: DataFrame): DataFrame =
     logs.withColumns(
       Seq("topic1", "topic2", "topic3", "data").map(c => c -> unhex(col(c))).toMap)
-
-  /** An `http(s)://` source is a live JSON-RPC endpoint (one
-    * eth_getLogs per chunk, retry per job config); anything else is a
-    * dump directory to replay. The scan/pushdown plan is identical. */
-  private def sourceOptions(r: org.apache.spark.sql.DataFrameReader,
-                            source: String, job: Config.Job) =
-    if (source.startsWith("http://") || source.startsWith("https://"))
-      r.option("url", source)
-        .option("rpcAttempts", job.retry.attempts)
-        .option("rpcDelayMs", job.retry.delayMs)
-    else r.option("path", source)
 
   /** The configured (contract, event) pairs, in config order. */
   private def pairs(job: Config.Job): Seq[(Config.Contract, AbiSchema.Event)] =
@@ -98,8 +89,8 @@ object Indexer {
     val scoped =
       if (emitUnknown) configured
       else configured && col("topic0").isin(pairs(job).map(_._2.topic0).distinct: _*)
-    val logs = sourceOptions(
-        spark.read.format("graft.evm.LogSourceProvider"), source, job)
+    val logs = spark.read.format("graft.evm.LogSourceProvider")
+      .options(LogEndpoint(source, job.retry).options)
       .option("startBlock", job.startBlock)
       .option("endBlock", endBlock)
       .option("chunkSize", job.chunkSize)

@@ -44,35 +44,100 @@ class LogSourceProvider extends TableProvider {
 /** Where a block window's logs come from: the replay dump directory or
   * a live JSON-RPC endpoint. Carried inside each `InputPartition`, so
   * the scan/pushdown/partitioning machinery is identical for both —
-  * only the per-window fetch differs (S3). */
-sealed trait LogEndpoint extends Serializable
-case class DumpEndpoint(path: String) extends LogEndpoint
-case class RpcEndpoint(cfg: RpcConfig) extends LogEndpoint
+  * only the per-window fetch and the tip probe differ (S3). */
+sealed trait LogEndpoint extends Serializable {
+  /** S2: latest height — `eth_blockNumber` live
+    * (`internal/rpc/client.go:153-177`), the highest indexed block
+    * over a dump; -1 for a dump with no blocks yet. */
+  def tip(): Long
+  /** The provider options that select this endpoint. */
+  def options: Map[String, String]
+}
+
+case class DumpEndpoint(path: String) extends LogEndpoint {
+  /** The dump's files in name order; dot- and underscore-prefixed
+    * files (checksums, `_SUCCESS`) are not logs. */
+  def files: Array[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && !f.getName.startsWith(".")
+        && !f.getName.startsWith("_"))
+      .sortBy(_.getName)
+  /** Max over the per-file index: unchanged files cost a cache hit, so
+    * a per-trigger poll only re-reads files that appeared or changed. */
+  def tip(): Long =
+    files.flatMap(f => DumpIndex.blockRange(f).map(_._2)).maxOption.getOrElse(-1L)
+  def options: Map[String, String] = Map("path" -> path)
+}
+
+case class RpcEndpoint(cfg: RpcConfig) extends LogEndpoint {
+  def tip(): Long = new RpcClient(cfg).blockNumber()
+  def options: Map[String, String] = Map("url" -> cfg.url,
+    "rpcAttempts" -> cfg.attempts.toString, "rpcDelayMs" -> cfg.delayMs.toString)
+}
+
+object LogEndpoint {
+  /** A config's source string: an `http(s)://` value is a live JSON-RPC
+    * endpoint (retried per `retry`), anything else a dump directory. */
+  def apply(source: String, retry: graft.api.Config.Retry): LogEndpoint =
+    if (source.startsWith("http://") || source.startsWith("https://"))
+      RpcEndpoint(RpcConfig(source, retry.attempts, retry.delayMs))
+    else DumpEndpoint(source)
+}
+
+/** The options both providers share, parsed once per table. */
+case class ScanOptions(endpoint: LogEndpoint, startBlock: Long,
+                       endBlock: Option[Long], chunkSize: Long,
+                       maxBlocksPerTrigger: Option[Long])
 
 object LogSource {
-  /** S2: latest-height probe — the replay equivalent of
-    * `eth_blockNumber` (`internal/rpc/client.go:153-177`): max block in
-    * the dump, used to bound a scan before planning it. */
-  def latestBlock(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    import org.apache.spark.sql.functions.max
-    spark.read.json(path).agg(max("block_number")).head().getLong(0)
-  }
-
-  /** S2 live: `eth_blockNumber` against a real endpoint. */
-  def latestBlock(cfg: RpcConfig): Long = new RpcClient(cfg).blockNumber()
-
-  /** Option-map → endpoint. `url` selects the live RPC path (with the
-    * reference's retry defaults, overridable via `rpcAttempts` /
-    * `rpcDelayMs`); otherwise `path` selects dump replay. */
-  def endpoint(props: Map[String, String]): LogEndpoint =
-    props.get("url") match {
+  /** Option map → [[ScanOptions]]. `url` selects the live RPC path (with
+    * the reference's retry defaults, overridable via `rpcAttempts` /
+    * `rpcDelayMs`); otherwise `path` selects dump replay. An out-of-range
+    * value fails here, naming its option: a chunk below 1 would plan no
+    * partitions, a trigger cap below 1 would stall the stream. */
+  def options(props: Map[String, String]): ScanOptions = {
+    val ep = props.get("url") match {
       case Some(u) => RpcEndpoint(RpcConfig(u,
-        props.getOrElse("rpcAttempts", "3").toInt,
-        props.getOrElse("rpcDelayMs", "1500").toLong))
+        atLeast(props, "rpcAttempts", 1).getOrElse(3L).toInt,
+        atLeast(props, "rpcDelayMs", 0).getOrElse(1500L)))
       case None => DumpEndpoint(props.getOrElse("path",
         throw new IllegalArgumentException(
           "evm-logs: either url or path option required")))
     }
+    ScanOptions(ep, props.get("startBlock").fold(0L)(_.toLong),
+      props.get("endBlock").map(_.toLong),
+      atLeast(props, "chunkSize", 1).getOrElse(1000L),
+      atLeast(props, "maxBlocksPerTrigger", 1))
+  }
+
+  /** The numeric option `key`, if set, checked to be >= `min`. */
+  private[evm] def atLeast(props: Map[String, String], key: String,
+                           min: Long): Option[Long] =
+    props.get(key).map { v =>
+      val n = v.toLong
+      if (n < min) throw new IllegalArgumentException(
+        s"evm-logs: option $key must be >= $min, got $v")
+      n
+    }
+
+  /** The window planner: one partition per `chunk` blocks of [lo, hi]. */
+  private[evm] def windows(ep: LogEndpoint, lo: Long, hi: Long,
+                           chunk: Long): Array[InputPartition] =
+    (lo to hi by chunk).map { l =>
+      LogRangePartition(ep, l, math.min(l + chunk - 1, hi)): InputPartition
+    }.toArray
+
+  /** One source row: the [[schema]] columns, then — `keyed`, for the
+    * reorg stream — `log_index`, `block_hash` and `change` = +1
+    * ([[Reorg.schema]]). */
+  private[evm] def row(keyed: Boolean, block: Long, txHash: UTF8String,
+                       address: UTF8String, topic0: UTF8String,
+                       topic1: UTF8String, topic2: UTF8String,
+                       topic3: UTF8String, data: UTF8String)(
+                       logIndex: => Any, blockHash: => UTF8String): InternalRow =
+    if (keyed) InternalRow(block, txHash, address, topic0, topic1, topic2,
+      topic3, data, logIndex, blockHash, 1)
+    else InternalRow(block, txHash, address, topic0, topic1, topic2, topic3, data)
 
   val schema: StructType = StructType(Seq(
     StructField("block_number", LongType),
@@ -86,18 +151,19 @@ object LogSource {
 }
 
 class LogTable(props: Map[String, String]) extends Table with SupportsRead {
+  private val opts = LogSource.options(props)
   override def name(): String = s"evm_logs(${props.getOrElse("path", "?")})"
   override def schema(): StructType = LogSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LogScanBuilder(props ++ options.asScala)
+    new LogScanBuilder(opts)
 }
 
 /** Pushdown contract (P1/P2): EqualTo / In on `address` and `topic0`
   * are consumed by the source (the "node" evaluates them); everything
   * else is left for Spark to evaluate after the scan. */
-class LogScanBuilder(props: Map[String, String])
+class LogScanBuilder(opts: ScanOptions)
     extends ScanBuilder with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
   import org.apache.spark.sql.sources.{GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
@@ -193,10 +259,10 @@ class LogScanBuilder(props: Map[String, String])
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new LogScan(props, addressSet, topic0Set, blockLo, blockHi, aggOps)
+    new LogScan(opts, addressSet, topic0Set, blockLo, blockHi, aggOps)
 }
 
-class LogScan(props: Map[String, String], addresses: Option[Set[String]],
+class LogScan(opts: ScanOptions, addresses: Option[Set[String]],
               topics: Option[Set[String]], blockLo: Option[Long],
               blockHi: Option[Long],
               aggOps: Option[Seq[String]] = None) extends Scan with Batch {
@@ -215,29 +281,19 @@ class LogScan(props: Map[String, String], addresses: Option[Set[String]],
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new LogMicroBatchStream(props, addresses, topics)
+    new LogMicroBatchStream(opts, addresses, topics)
 
   /** S1: one partition per chunk_size block window, pruned by any
-    * pushed block_number bounds (partition pruning at the source). In
-    * RPC mode an absent `endBlock` is resolved by probing the chain
-    * tip once at plan time (`eth_blockNumber`), the reference's
-    * bound-then-chunk shape (`indexer.go:172-189`). */
+    * pushed block_number bounds (partition pruning at the source). An
+    * absent `endBlock` is resolved by probing the endpoint's tip once
+    * at plan time, the reference's bound-then-chunk shape
+    * (`indexer.go:172-189`). */
   override def planInputPartitions(): Array[InputPartition] = {
-    val ep = LogSource.endpoint(props)
-    val start = math.max(props.getOrElse("startBlock", "0").toLong,
-      blockLo.getOrElse(Long.MinValue))
-    val declaredEnd = props.get("endBlock").map(_.toLong).getOrElse {
-      ep match {
-        case RpcEndpoint(cfg) => LogSource.latestBlock(cfg)
-        case DumpEndpoint(_) => 0L
-      }
-    }
-    val end = math.min(declaredEnd, blockHi.getOrElse(Long.MaxValue))
-    val chunk = props.getOrElse("chunkSize", "1000").toLong
-    (start to end by chunk).map { lo =>
-      LogRangePartition(ep, lo, math.min(lo + chunk - 1, end))
-        .asInstanceOf[InputPartition]
-    }.toArray
+    val ep = opts.endpoint
+    val start = math.max(opts.startBlock, blockLo.getOrElse(Long.MinValue))
+    val end = math.min(opts.endBlock.getOrElse(ep.tip()),
+      blockHi.getOrElse(Long.MaxValue))
+    LogSource.windows(ep, start, end, opts.chunkSize)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new LogReaderFactory(addresses, topics, aggOps)
@@ -246,102 +302,136 @@ class LogScan(props: Map[String, String], addresses: Option[Set[String]],
 case class LogRangePartition(endpoint: LogEndpoint, fromBlock: Long,
                              toBlock: Long) extends InputPartition
 
-/** Block-height offset for the streaming source: "everything up to and
-  * including block `block` has been emitted". */
-case class LogOffset(block: Long)
+/** Streaming offset: "everything up to and including block `block` has
+  * been emitted", plus — for the reorg stream — the hashes of the last
+  * K blocks as emitted. Offset equality in Spark is JSON equality, so
+  * the tail serializes sorted by height; an empty tail serializes as
+  * `{"block":n}`. */
+case class LogOffset(block: Long, tail: Seq[(Long, String)] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"block":$block}"""
+  override def json(): String =
+    if (tail.isEmpty) s"""{"block":$block}"""
+    else tail.sortBy(_._1).map { case (b, h) => s"""[$b,"$h"]""" }
+      .mkString(s"""{"block":$block,"tail":[""", ",", "]}")
+}
+
+object LogOffset {
+  def fromJson(json: String): LogOffset = {
+    val n = new ObjectMapper().readTree(json)
+    val tail = Seq.newBuilder[(Long, String)]
+    n.path("tail").forEach(e => tail += ((e.path(0).asLong(), e.path(1).asText())))
+    LogOffset(n.path("block").asLong(), tail.result())
+  }
 }
 
 /** Chain-tip following (the reference's roadmap promise, README.md:202-
-  * 208, never implemented there): each trigger scans the dump for the
-  * latest block height — the replay stand-in for `eth_blockNumber`
-  * (`internal/rpc/client.go:153-177`) — and emits the new block window
-  * as chunked partitions, exactly the batch scan's shape. Offsets are
-  * block heights, so restart/recovery replays from the last committed
-  * block; `maxBlocksPerTrigger` rate-limits catch-up (the chunked
-  * backfill the reference does with its worker pool).
+  * 208, never implemented there): each trigger probes the endpoint's
+  * tip and emits the new block window as chunked partitions, exactly
+  * the batch scan's shape. Offsets are block heights, so
+  * restart/recovery replays from the last committed block;
+  * `maxBlocksPerTrigger` rate-limits catch-up (the chunked backfill the
+  * reference does with its worker pool).
   *
-  * Logs arrive in block order per chain, so late data cannot occur;
-  * reorgs are out of scope, as in the reference (SURVEY.md §7.4). */
-class LogMicroBatchStream(props: Map[String, String],
+  * `reorgDepth` K = 0 is `LogSourceProvider`'s plain follower: blocks
+  * are final once emitted, rows have [[LogSource.schema]]. K > 0 is
+  * `ReorgLogSourceProvider` ([[Reorg]]): the offset also carries the
+  * hashes of the last K blocks, each trigger re-probes them, and a
+  * moved hash at height b retracts b and every later block (hashes
+  * chain) and replays them; rows have [[Reorg.schema]]. */
+class LogMicroBatchStream(opts: ScanOptions,
                           addresses: Option[Set[String]],
-                          topics: Option[Set[String]])
+                          topics: Option[Set[String]],
+                          reorgDepth: Int = 0)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private val ep = LogSource.endpoint(props)
-  private val chunk = props.getOrElse("chunkSize", "1000").toLong
-  private val startBlock = props.getOrElse("startBlock", "0").toLong
-  private val maxPerTrigger = props.get("maxBlocksPerTrigger").map(_.toLong)
-  private val mapper = new ObjectMapper()
+  private val ep = opts.endpoint
+  private val hashIdx = Reorg.schema.fieldIndex("block_hash")
 
-  /** Latest height: one `eth_blockNumber` in RPC mode, a dump scan in
-    * replay mode. */
-  private def tip(): Long = ep match {
-    case RpcEndpoint(cfg) => LogSource.latestBlock(cfg)
-    case DumpEndpoint(path) => dumpTip(path)
-  }
+  /** The current hash of each block in [lo, hi] that has one: header
+    * probes live; over a dump, one read of the window through the
+    * shared reader, keeping each block's first non-null `block_hash`
+    * in file-name, then line, order (a dump without hashes yields none
+    * and the stream degrades to the plain follower). */
+  private def hashes(lo: Long, hi: Long): Seq[(Long, String)] =
+    if (lo > hi) Nil
+    else ep match {
+      case RpcEndpoint(cfg) =>
+        val rpc = new RpcClient(cfg)
+        (lo to hi).flatMap(b => rpc.headerHash(b).map(b -> _))
+      case d: DumpEndpoint =>
+        val r = new LogPartitionReader(d, LogRangePartition(d, lo, hi),
+          None, None, keyed = true)
+        val first = scala.collection.mutable.LinkedHashMap.empty[Long, String]
+        try while (r.next()) {
+          val row = r.get()
+          if (!row.isNullAt(hashIdx))
+            first.getOrElseUpdate(row.getLong(0), row.getUTF8String(hashIdx).toString)
+        } finally r.close()
+        first.toSeq
+    }
 
-  /** Max block over the dump via the per-file index — unchanged files
-    * cost a cache hit, so the per-trigger poll only re-reads files
-    * that appeared or changed since the last trigger. */
-  private def dumpTip(path: String): Long = {
-    val dir = new java.io.File(path)
-    val fs = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith(".")
-        && !f.getName.startsWith("_"))
-    fs.flatMap(f => DumpIndex.blockRange(f).map(_._2))
-      .foldLeft(startBlock - 1)(math.max)
-  }
-
-  override def initialOffset(): Offset = LogOffset(startBlock - 1)
-  override def deserializeOffset(json: String): Offset =
-    LogOffset(mapper.readTree(json).path("block").asLong())
+  override def initialOffset(): Offset = LogOffset(opts.startBlock - 1)
+  override def deserializeOffset(json: String): Offset = LogOffset.fromJson(json)
   /** Rate limiting goes through SupportsAdmissionControl: the cap is
     * computed from the START offset Spark hands us, so it is stateless
     * and restart-safe (a mutable "last planned" height here desyncs
     * from the checkpoint on recovery and regresses offsets). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[LogOffset].block
-    val t = tip()
-    val capped = maxPerTrigger.fold(t)(m => math.min(t, from + m))
-    LogOffset(math.max(capped, from))
+    val t = ep.tip()
+    val hi = math.max(opts.maxBlocksPerTrigger.fold(t)(m => math.min(t, from + m)), from)
+    LogOffset(hi, hashes(math.max(hi - reorgDepth + 1, opts.startBlock), hi))
   }
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
       "latestOffset(start, limit) is used via SupportsAdmissionControl")
+
+  /** A watched block whose hash moved means it and every later block
+    * were replaced; one whose height fell past the new tip (tip
+    * regression) is simply gone. Both are retracted, and the replay
+    * starts at the lowest moved block. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[LogOffset].block + 1
-    val hi = end.asInstanceOf[LogOffset].block
-    (lo to hi by chunk).map { l =>
-      LogRangePartition(ep, l, math.min(l + chunk - 1, hi))
-        .asInstanceOf[InputPartition]
-    }.toArray
+    val s = start.asInstanceOf[LogOffset]
+    val e = end.asInstanceOf[LogOffset]
+    val eTail = e.tail.toMap
+    val changed = s.tail.filter { case (b, h) =>
+      b <= e.block && eTail.get(b).exists(_ != h)
+    }
+    val retract = (changed ++ s.tail.filter(_._1 > e.block)).sortBy(_._1)
+    val replay = LogSource.windows(ep,
+      changed.map(_._1).minOption.getOrElse(s.block + 1), e.block, opts.chunkSize)
+    if (retract.isEmpty) replay else ReorgRetractPartition(retract) +: replay
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new LogReaderFactory(addresses, topics)
+    new LogReaderFactory(addresses, topics, keyed = reorgDepth > 0)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
+/** Opens the reader for one partition: a block window from either
+  * endpoint (optionally under a pushed aggregate), or a reorg
+  * retraction. */
 class LogReaderFactory(addresses: Option[Set[String]],
                        topics: Option[Set[String]],
-                       aggOps: Option[Seq[String]] = None)
+                       aggOps: Option[Seq[String]] = None,
+                       keyed: Boolean = false)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[LogRangePartition]
-    val base = part.endpoint match {
-      case DumpEndpoint(path) =>
-        new LogPartitionReader(path, part, addresses, topics)
-      case RpcEndpoint(cfg) =>
-        new RpcPartitionReader(cfg, part, addresses, topics)
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    p match {
+      case ReorgRetractPartition(blocks) => new ReorgRetractReader(blocks)
+      case part: LogRangePartition =>
+        val base = part.endpoint match {
+          case d: DumpEndpoint =>
+            new LogPartitionReader(d, part, addresses, topics, keyed)
+          case RpcEndpoint(cfg) =>
+            new RpcPartitionReader(cfg, part, addresses, topics, keyed)
+        }
+        aggOps.fold(base: PartitionReader[InternalRow])(
+          ops => new AggPartitionReader(base, ops))
     }
-    aggOps.fold(base: PartitionReader[InternalRow])(
-      ops => new AggPartitionReader(base, ops))
-  }
 }
 
 /** Executes a pushed ungrouped aggregate AT the source: drains the
@@ -392,10 +482,12 @@ object AggPartitionReader {
   * as the reference's `FilterLogs` does, `client.go:93-118`). Retries
   * happen inside `RpcClient`; a task that exhausts them fails and is
   * re-scheduled by Spark — the layered retry the reference gets from
-  * worker-level re-queueing. */
+  * worker-level re-queueing. `keyed` rows carry the node's
+  * `logIndex`/`blockHash` ([[LogSource.row]]). */
 class RpcPartitionReader(cfg: RpcConfig, part: LogRangePartition,
                          addresses: Option[Set[String]],
-                         topics: Option[Set[String]])
+                         topics: Option[Set[String]],
+                         keyed: Boolean = false)
     extends PartitionReader[InternalRow] {
   // fetched on first next(): constructing the reader must stay cheap
   private var it: Iterator[RpcLog] = null
@@ -410,9 +502,10 @@ class RpcPartitionReader(cfg: RpcConfig, part: LogRangePartition,
         .getLogs(part.fromBlock, part.toBlock, addresses, topics).iterator
     if (!it.hasNext) return false
     val l = it.next()
-    current = InternalRow(l.blockNumber, utf8(l.txHash), utf8(l.address),
-      utf8(l.topic0), utf8(l.topic1), utf8(l.topic2), utf8(l.topic3),
-      utf8(l.data))
+    current = LogSource.row(keyed, l.blockNumber, utf8(l.txHash),
+      utf8(l.address), utf8(l.topic0), utf8(l.topic1), utf8(l.topic2),
+      utf8(l.topic3), utf8(l.data))(
+      if (l.logIndex < 0) null else l.logIndex, utf8(l.blockHash))
     true
   }
   override def get(): InternalRow = current
@@ -437,6 +530,14 @@ private[graft] object DumpIndex {
     cache.computeIfAbsent((f.getAbsolutePath, f.lastModified(), f.length()),
       _ => scan(f))
 
+  /** A dump line's block: its `block_number`, or `Long.MinValue` when
+    * the line is not an object carrying one. The index and the reader
+    * share this rule, so no line outside a file's span is ever read. */
+  def blockOf(n: com.fasterxml.jackson.databind.JsonNode): Long =
+    if (n != null && n.isObject && n.has("block_number"))
+      n.path("block_number").asLong(Long.MinValue)
+    else Long.MinValue
+
   private def scan(f: java.io.File): Option[(Long, Long)] = {
     scans.incrementAndGet()
     val mapper = new ObjectMapper()
@@ -446,12 +547,7 @@ private[graft] object DumpIndex {
     try src.getLines().foreach { line =>
       if (line.nonEmpty) {
         // malformed lines don't poison the index (P7)
-        val b = try {
-          val n = mapper.readTree(line)
-          if (n != null && n.isObject && n.has("block_number"))
-            n.path("block_number").asLong(Long.MinValue)
-          else Long.MinValue
-        } catch {
+        val b = try blockOf(mapper.readTree(line)) catch {
           case _: com.fasterxml.jackson.core.JacksonException => Long.MinValue
         }
         if (b != Long.MinValue) { if (b < lo) lo = b; if (b > hi) hi = b }
@@ -463,24 +559,20 @@ private[graft] object DumpIndex {
 
 /** Replays JSON-lines dumps for one block window, applying the pushed
   * address/topic0 sets — exactly what the node does for one
-  * `eth_getLogs(fromBlock, toBlock, {address, topics})` call. */
-class LogPartitionReader(path: String, part: LogRangePartition,
+  * `eth_getLogs(fromBlock, toBlock, {address, topics})` call. `keyed`
+  * rows carry each line's `log_index`/`block_hash` ([[LogSource.row]]). */
+class LogPartitionReader(dump: DumpEndpoint, part: LogRangePartition,
                          addresses: Option[Set[String]],
-                         topics: Option[Set[String]])
+                         topics: Option[Set[String]],
+                         keyed: Boolean = false)
     extends PartitionReader[InternalRow] {
   private val mapper = new ObjectMapper()
-  private val files: Iterator[java.io.File] = {
-    val dir = new java.io.File(path)
-    val fs = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith(".")
-        && !f.getName.startsWith("_"))
-    fs.sortBy(_.getName).iterator
-      // block-range pruning via the per-JVM file index: only files
-      // whose span intersects this partition's window are opened
-      .filter(f => DumpIndex.blockRange(f).exists { case (lo, hi) =>
-        lo <= part.toBlock && hi >= part.fromBlock
-      })
-  }
+  // block-range pruning via the per-JVM file index: only files whose
+  // span intersects this partition's window are opened
+  private val files: Iterator[java.io.File] = dump.files.iterator
+    .filter(f => DumpIndex.blockRange(f).exists { case (lo, hi) =>
+      lo <= part.toBlock && hi >= part.fromBlock
+    })
   private var lines: Iterator[String] = Iterator.empty
   private var source: scala.io.Source = null
   private var current: InternalRow = _
@@ -489,16 +581,15 @@ class LogPartitionReader(path: String, part: LogRangePartition,
     if (source != null) { source.close(); source = null }
   }
 
-  /** P7 at the source: a malformed dump line is dropped, the scan
-    * survives — the reference logs at debug and continues
-    * (`internal/indexer/indexer.go:253-259`). */
+  /** P7 at the source: a malformed dump line, or one without a
+    * `block_number`, is dropped and the scan survives — the reference
+    * logs at debug and continues (`internal/indexer/indexer.go:253-259`). */
   private def parse(line: String): Option[InternalRow] = {
     if (line.isEmpty) return None
     val n = try mapper.readTree(line)
             catch { case _: com.fasterxml.jackson.core.JacksonException => return None }
-    if (n == null || !n.isObject) return None
-    val blk = n.path("block_number").asLong()
-    if (blk < part.fromBlock || blk > part.toBlock) return None
+    val blk = DumpIndex.blockOf(n)
+    if (blk == Long.MinValue || blk < part.fromBlock || blk > part.toBlock) return None
     val addr = n.path("address").asText(null)
     if (addresses.exists(s => addr == null || !s.contains(addr))) return None
     val t0 = n.path("topic0").asText(null)
@@ -507,8 +598,11 @@ class LogPartitionReader(path: String, part: LogRangePartition,
       val v = n.path(f)
       if (v.isMissingNode || v.isNull) null else UTF8String.fromString(v.asText())
     }
-    Some(InternalRow(blk, str("tx_hash"), str("address"), str("topic0"),
-      str("topic1"), str("topic2"), str("topic3"), str("data")))
+    Some(LogSource.row(keyed, blk, str("tx_hash"), str("address"), str("topic0"),
+      str("topic1"), str("topic2"), str("topic3"), str("data"))({
+      val li = n.path("log_index")
+      if (li.isMissingNode || li.isNull) null else li.asLong()
+    }, str("block_hash")))
   }
 
   override def next(): Boolean = {

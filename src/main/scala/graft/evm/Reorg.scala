@@ -1,11 +1,10 @@
 package graft.evm
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,8 +15,8 @@ import scala.jdk.CollectionConverters._
 
 /** Reorg-aware chain-tip following (the gap the reference's roadmap
   * names but never ships, `/root/reference/README.md:202-208`, and the
-  * one a real indexer user hits within days): the plain streaming
-  * source (`LogMicroBatchStream`) assumes blocks are final the moment
+  * one a real indexer user hits within days): the plain follower
+  * (`LogSourceProvider`'s stream) assumes blocks are final the moment
   * they are emitted, but a chain's tip is only PROBABLY final — a
   * reorganization replaces the last few blocks with a different
   * branch, and an indexer that already emitted their logs is now
@@ -33,15 +32,17 @@ import scala.jdk.CollectionConverters._
   * carrying `log_index` and `block_hash`, the per-log retraction
   * key). Downstream, [[Reorg.applyBatch]] folds the change stream
   * into a materialized table; the invariant — pinned by ReorgSpec
-  * against a stub node replaying a 2-block reorg — is that the folded
-  * table equals a fresh batch scan of the post-reorg chain.
+  * against a stub node replaying a 2-block reorg and against a dump
+  * whose last 2 blocks are rewritten — is that the folded table equals
+  * a fresh batch scan of the post-reorg chain.
   *
   * Reorgs deeper than K are undetectable by construction; K is the
   * chain's finality depth (6-12 for proof-of-work, 2 epochs for
   * PoS finality), the same bound every production indexer assumes.
   *
-  * Scale: the per-trigger cost is K header probes plus the replayed
-  * window — O(K), independent of history length; replay partitions
+  * Scale: the per-trigger cost is K header probes (one read of the
+  * K-block window over a dump) plus the replayed window — O(K),
+  * independent of history length; replay partitions
   * are the same chunked shape as the batch scan, so a deep
   * catch-up after downtime parallelizes across the cluster exactly
   * like a backfill.
@@ -130,8 +131,9 @@ object Reorg {
 }
 
 /** `evm-logs-reorg` DataSource V2: micro-batch streaming with reorg
-  * detection. Options: everything `LogSourceProvider` takes, plus
-  * `reorgDepth` (K, default 6). */
+  * detection — [[LogMicroBatchStream]] with K = `reorgDepth` (default
+  * 6, at least 1). Options: everything `LogSourceProvider` takes, plus
+  * `reorgDepth`. */
 class ReorgLogSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Reorg.schema
@@ -141,151 +143,23 @@ class ReorgLogSourceProvider extends TableProvider {
 }
 
 class ReorgLogTable(props: Map[String, String]) extends Table with SupportsRead {
+  private val opts = LogSource.options(props)
+  private val reorgDepth =
+    LogSource.atLeast(props, "reorgDepth", 1).getOrElse(6L).toInt
   override def name(): String =
     s"evm_logs_reorg(${props.getOrElse("url", props.getOrElse("path", "?"))})"
   override def schema(): StructType = Reorg.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = Reorg.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new ReorgMicroBatchStream(props ++ options.asScala)
-      }
+    () => new Scan {
+      override def readSchema(): StructType = Reorg.schema
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+        new LogMicroBatchStream(opts, None, None, reorgDepth)
     }
 }
 
-/** Offset = emitted height + the tail window's block hashes (sorted by
-  * height — offset equality in Spark is JSON equality, so the
-  * serialization must be canonical). */
-case class ReorgOffset(block: Long, tail: Seq[(Long, String)]) extends Offset {
-  override def json(): String = {
-    val t = tail.sortBy(_._1).map { case (b, h) =>
-      s"""[$b,"${h}"]"""
-    }.mkString("[", ",", "]")
-    s"""{"block":$block,"tail":$t}"""
-  }
-}
-
-object ReorgOffset {
-  def fromJson(json: String): ReorgOffset = {
-    val n = new ObjectMapper().readTree(json)
-    val tail = Seq.newBuilder[(Long, String)]
-    n.path("tail").forEach { e =>
-      tail += ((e.path(0).asLong(), e.path(1).asText()))
-    }
-    ReorgOffset(n.path("block").asLong(), tail.result())
-  }
-}
-
-class ReorgMicroBatchStream(props: Map[String, String])
-    extends MicroBatchStream with SupportsAdmissionControl {
-
-  private val ep = LogSource.endpoint(props)
-  private val chunk = props.getOrElse("chunkSize", "1000").toLong
-  private val startBlock = props.getOrElse("startBlock", "0").toLong
-  private val maxPerTrigger = props.get("maxBlocksPerTrigger").map(_.toLong)
-  private val reorgDepth = props.getOrElse("reorgDepth", "6").toInt
-  private val mapper = new ObjectMapper()
-
-  private def tip(): Long = ep match {
-    case RpcEndpoint(cfg) => LogSource.latestBlock(cfg)
-    case DumpEndpoint(path) => dumpTip(path)
-  }
-
-  private def dumpFiles(path: String): Array[java.io.File] = {
-    val dir = new java.io.File(path)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith(".")
-        && !f.getName.startsWith("_"))
-  }
-
-  private def dumpTip(path: String): Long =
-    dumpFiles(path).flatMap(f => DumpIndex.blockRange(f).map(_._2))
-      .foldLeft(startBlock - 1)(math.max)
-
-  /** Current hash at height b: a header probe in RPC mode; in dump
-    * replay, the block_hash field of any line at that height (None
-    * when the dump carries no hashes — the stream then degrades to
-    * the plain monotone follower). */
-  private def hashOf(b: Long): Option[String] = ep match {
-    case RpcEndpoint(cfg) => new RpcClient(cfg).headerHash(b)
-    case DumpEndpoint(path) =>
-      dumpFiles(path).sortBy(_.getName).iterator
-        .filter(f => DumpIndex.blockRange(f).exists { case (lo, hi) =>
-          lo <= b && hi >= b })
-        .flatMap { f =>
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.getLines().flatMap { line =>
-            if (line.isEmpty) None
-            else {
-              val n = try mapper.readTree(line)
-                      catch { case _: com.fasterxml.jackson.core.JacksonException => null }
-              if (n != null && n.isObject && n.path("block_number").asLong(-1L) == b)
-                Option(n.path("block_hash").asText(null))
-              else None
-            }
-          }.toList // materialize before the source closes
-          finally src.close()
-        }
-        .nextOption()
-  }
-
-  override def initialOffset(): Offset = ReorgOffset(startBlock - 1, Nil)
-  override def deserializeOffset(json: String): Offset = ReorgOffset.fromJson(json)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[ReorgOffset]
-    val t = tip()
-    val capped = maxPerTrigger.fold(t)(m => math.min(t, s.block + m))
-    val hi = math.max(capped, s.block)
-    val tail = (math.max(hi - reorgDepth + 1, startBlock) to hi)
-      .flatMap(b => hashOf(b).map(b -> _))
-    ReorgOffset(hi, tail)
-  }
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used via SupportsAdmissionControl")
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ReorgOffset]
-    val e = end.asInstanceOf[ReorgOffset]
-    val eTail = e.tail.toMap
-    // a watched block whose hash moved ⇒ it and every later block were
-    // replaced (hashes chain); one whose height fell past the new tip
-    // (tip regression) is simply gone
-    val changed = s.tail.filter { case (b, h) =>
-      b <= e.block && eTail.get(b).exists(_ != h)
-    }
-    val gone = s.tail.filter { case (b, _) => b > e.block }
-    val retract = (changed ++ gone).sortBy(_._1)
-    val replayLo = changed.map(_._1).minOption.getOrElse(s.block + 1)
-    val ranges = (replayLo to e.block by chunk).map { lo =>
-      ReorgRangePartition(ep, lo, math.min(lo + chunk - 1, e.block))
-        .asInstanceOf[InputPartition]
-    }
-    if (retract.isEmpty) ranges.toArray
-    else ReorgRetractPartition(retract).asInstanceOf[InputPartition] +: ranges.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = new ReorgReaderFactory
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-case class ReorgRangePartition(endpoint: LogEndpoint, fromBlock: Long,
-                               toBlock: Long) extends InputPartition
 case class ReorgRetractPartition(blocks: Seq[(Long, String)]) extends InputPartition
-
-class ReorgReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case ReorgRetractPartition(blocks) => new ReorgRetractReader(blocks)
-      case rp: ReorgRangePartition => new ReorgRangeReader(rp)
-    }
-}
 
 /** Emits one tombstone row per replaced block: (block_number,
   * block_hash=the SUPERSEDED hash, change=−1), every other field null. */
@@ -298,77 +172,6 @@ class ReorgRetractReader(blocks: Seq[(Long, String)])
     val (b, h) = it.next()
     current = InternalRow(b, null, null, null, null, null, null, null,
       null, UTF8String.fromString(h), -1)
-    true
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Replays one block window as +1 rows with the retraction keys
-  * attached. RPC mode is one ranged `eth_getLogs`; dump mode parses
-  * the JSON-lines files intersecting the window (same shape as the
-  * batch reader, plus log_index/block_hash). */
-class ReorgRangeReader(part: ReorgRangePartition)
-    extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
-  private var it: Iterator[InternalRow] = null
-  private var current: InternalRow = _
-
-  private def utf8(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  private def fetch(): Iterator[InternalRow] = part.endpoint match {
-    case RpcEndpoint(cfg) =>
-      new RpcClient(cfg).getLogs(part.fromBlock, part.toBlock, None, None)
-        .iterator.map { l =>
-          InternalRow(l.blockNumber, utf8(l.txHash), utf8(l.address),
-            utf8(l.topic0), utf8(l.topic1), utf8(l.topic2), utf8(l.topic3),
-            utf8(l.data),
-            if (l.logIndex < 0) null else l.logIndex,
-            utf8(l.blockHash), 1)
-        }
-    case DumpEndpoint(path) =>
-      val dir = new java.io.File(path)
-      val fs = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith(".")
-          && !f.getName.startsWith("_"))
-        .sortBy(_.getName)
-        .filter(f => DumpIndex.blockRange(f).exists { case (lo, hi) =>
-          lo <= part.toBlock && hi >= part.fromBlock })
-      fs.iterator.flatMap { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().flatMap { line =>
-          if (line.isEmpty) None
-          else {
-            val n = try mapper.readTree(line)
-                    catch { case _: com.fasterxml.jackson.core.JacksonException => null }
-            if (n == null || !n.isObject) None
-            else {
-              val blk = n.path("block_number").asLong(-1L)
-              if (blk < part.fromBlock || blk > part.toBlock) None
-              else {
-                def str(f2: String): UTF8String = {
-                  val v = n.path(f2)
-                  if (v.isMissingNode || v.isNull) null
-                  else UTF8String.fromString(v.asText())
-                }
-                val li = n.path("log_index")
-                Some(InternalRow(blk, str("tx_hash"), str("address"),
-                  str("topic0"), str("topic1"), str("topic2"), str("topic3"),
-                  str("data"),
-                  if (li.isMissingNode || li.isNull) null else li.asLong(),
-                  str("block_hash"), 1))
-              }
-            }
-          }
-        }.toList finally src.close()
-      }
-  }
-
-  override def next(): Boolean = {
-    if (it == null) it = fetch()
-    if (!it.hasNext) return false
-    current = it.next()
     true
   }
   override def get(): InternalRow = current

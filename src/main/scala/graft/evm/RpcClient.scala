@@ -4,6 +4,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import graft.sources.Sinks
+import scala.util.control.NonFatal
 
 /** Serializable connection settings for the live JSON-RPC path — the
   * analogue of the reference's `config.RetryConfig` + URL pair
@@ -27,7 +29,7 @@ case class RpcLog(blockNumber: Long, txHash: String, address: String,
                   logIndex: Long = -1L, blockHash: String = null)
 
 /** Minimal Ethereum JSON-RPC client over HTTP — the live seam behind
-  * `LogPartitionReader` (SURVEY.md §2.1 S3). Mirrors the reference's
+  * `RpcPartitionReader` (SURVEY.md §2.1 S3). Mirrors the reference's
   * retry-wrapped surface (`internal/rpc/client.go`): `eth_blockNumber`
   * (`:153-177`), `eth_getLogs` (`:94-118`), `eth_getBlockByNumber`
   * header probe (`:124-148`), each retried `attempts` times with a
@@ -44,23 +46,15 @@ class RpcClient(cfg: RpcConfig) {
     .connectTimeout(Duration.ofSeconds(30)).build()
   private val mapper = new ObjectMapper()
 
-  private def withRetries[T](what: String)(f: => T): T = {
-    var last: Throwable = null
-    var attempt = 1
-    while (attempt <= cfg.attempts) {
-      try return f
-      catch {
-        case e: Exception =>
-          last = e
-          // don't sleep after the final attempt (client.go:47-54)
-          if (attempt < cfg.attempts && cfg.delayMs > 0)
-            Thread.sleep(cfg.delayMs)
-      }
-      attempt += 1
+  /** [[Sinks.withRetries]]: no sleep after the final attempt
+    * (client.go:47-54), and an interrupt (a cancelled task) ends the
+    * call at once instead of being retried. */
+  private def withRetries[T](what: String)(f: => T): T =
+    try Sinks.withRetries(cfg.attempts, cfg.delayMs)(f)
+    catch {
+      case NonFatal(e) if !Sinks.cancelled(e) => throw new java.io.IOException(
+        s"rpc: $what failed after ${cfg.attempts} attempts", e)
     }
-    throw new java.io.IOException(
-      s"rpc: $what failed after ${cfg.attempts} attempts", last)
-  }
 
   /** POST one JSON-RPC 2.0 call; non-200 and `error` responses are
     * failures (and thus retried by the caller wrapper). */

@@ -88,7 +88,7 @@ object Sinks {
 
   /** Whether `e`, or any cause of it, is an interrupt or a cancelled
     * Spark job. */
-  private def cancelled(e: Throwable): Boolean =
+  private[graft] def cancelled(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
       case _: InterruptedException => true
       case s: SparkThrowable => s.getCondition == "SPARK_JOB_CANCELLED"

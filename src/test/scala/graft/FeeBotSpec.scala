@@ -2,7 +2,7 @@ package graft
 
 import graft.pipelines.FeeBot
 import graft.evm.LogPipeline
-import graft.evm.LogSource
+import graft.evm.DumpEndpoint
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -23,6 +23,6 @@ class FeeBotSpec extends SparkSpec {
     LogPipeline.synthesizeLogs(Tables.events(spark, "/root/testdata/sf0.001"))
       .select(col("block_number"), col("tx_hash"), col("address"), col("topic0"))
       .coalesce(1).write.mode("overwrite").json(dir)
-    assert(LogSource.latestBlock(spark, dir) == 99L)
+    assert(DumpEndpoint(dir).tip() == 99L)
   }
 }

@@ -34,9 +34,49 @@ class LogSourceSpec extends SparkSpec {
     // corrupt the dump: invalid JSON, a JSON scalar, and an empty line
     Files.write(java.nio.file.Paths.get(dir, "corrupt.json"),
       "{not json\n42\n\n".getBytes("UTF-8"))
+    // and an object without block_number, in the file holding block 0
+    val part = new java.io.File(dir).listFiles().find(_.getName.startsWith("part-")).get
+    Files.write(part.toPath, "{\"tx_hash\":\"0xnoblock\",\"address\":\"0xa\"}\n"
+      .getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
     val df = read(dir)
     assert(df.count() == 1000) // good rows intact, bad lines dropped
-    assert(graft.evm.LogSource.latestBlock(spark, dir) == 99L)
+    assert(graft.evm.DumpEndpoint(dir).tip() == 99L)
+  }
+
+  test("a dump scan without endBlock reads up to the dump's tip") {
+    val dir = dumpDir
+    val df = spark.read.format("graft.evm.LogSourceProvider")
+      .option("path", dir).option("chunkSize", 10).load()
+    assert(df.rdd.getNumPartitions == 10)
+    assert(df.count() == 1000)
+    assert(df.select(max(col("block_number"))).head().getLong(0) == 99L)
+  }
+
+  test("out-of-range source options fail the load, naming the option") {
+    val dir = Files.createTempDirectory("evm_opts").toString
+    def load(provider: String, opts: (String, String)*): Unit = {
+      val r = spark.readStream.format(s"graft.evm.$provider")
+      opts.foldLeft(r)((acc, kv) => acc.option(kv._1, kv._2)).load()
+      ()
+    }
+    val url = "http://127.0.0.1:1/" // never contacted: the parse fails first
+    val bad = Seq(
+      ("LogSourceProvider", "chunkSize", Seq("path" -> dir, "chunkSize" -> "-1")),
+      ("LogSourceProvider", "chunkSize", Seq("path" -> dir, "chunkSize" -> "0")),
+      ("LogSourceProvider", "maxBlocksPerTrigger",
+        Seq("path" -> dir, "maxBlocksPerTrigger" -> "0")),
+      ("ReorgLogSourceProvider", "reorgDepth", Seq("path" -> dir, "reorgDepth" -> "0")),
+      ("LogSourceProvider", "rpcAttempts", Seq("url" -> url, "rpcAttempts" -> "0")),
+      ("LogSourceProvider", "rpcDelayMs", Seq("url" -> url, "rpcDelayMs" -> "-1")))
+    for ((provider, key, opts) <- bad) {
+      val e = intercept[IllegalArgumentException](load(provider, opts: _*))
+      assert(e.getMessage.contains(s"option $key "), s"$provider $opts: ${e.getMessage}")
+    }
+    // the batch read checks the same options
+    val e = intercept[IllegalArgumentException](spark.read
+      .format("graft.evm.LogSourceProvider").option("path", dir)
+      .option("chunkSize", "0").load())
+    assert(e.getMessage.contains("option chunkSize "))
   }
 
   test("address/topic0 filters are pushed into the source (P1)") {

@@ -154,6 +154,62 @@ class ReorgSpec extends SparkSpec {
     } finally node.stop()
   }
 
+  test("dump replay: a 2-block rewrite folds to a fresh scan of the rewritten dump") {
+    // one JSON-lines file per block; each line carries its block_hash
+    val dir = java.nio.file.Files.createTempDirectory("reorg_dump").toString
+    def writeBlock(b: Long, branch: String): Unit = {
+      val lines = (0L to 1L).map { li =>
+        s"""{"block_number":$b,"log_index":$li,"block_hash":"0xh$b$branch",""" +
+          s""""tx_hash":"0xtx${b}_$li$branch","address":"0xaaaa",""" +
+          s""""topic0":"0xt0","data":"0xd${b}_$li$branch"}"""
+      }
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, f"b$b%03d.json"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    }
+    (0L to 9L).foreach(writeBlock(_, "a"))
+    val batches = mutable.ArrayBuffer.empty[Seq[Row]]
+    val q = spark.readStream.format("graft.evm.ReorgLogSourceProvider")
+      .option("path", dir).option("reorgDepth", "3").option("chunkSize", "4")
+      .load()
+      .writeStream
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        val rows = df.collect().toSeq
+        batches.synchronized { if (rows.nonEmpty) batches += rows }
+        ()
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(batches.synchronized(batches.map(_.size).sum) == 20)
+      // branch "bb" replaces heights 8..9 and extends the dump to 10
+      // (a longer tag, so every rewritten file changes size)
+      (8L to 10L).foreach(writeBlock(_, "bb"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val all = batches.synchronized(batches.toSeq)
+    val tombs = all.last.filter(_.getAs[Int]("change") == -1)
+      .map(r => (r.getAs[Long]("block_number"), r.getAs[String]("block_hash")))
+      .sorted
+    assert(tombs == Seq((8L, "0xh8a"), (9L, "0xh9a")))
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], Reorg.schema).drop("change")
+    val folded = all.foldLeft(empty) { (state, b) =>
+      Reorg.applyBatch(state, spark.createDataFrame(b.asJava, Reorg.schema))
+    }
+    val cols = Seq("block_number", "tx_hash", "address", "topic0", "data")
+    val got = folded.select(cols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    val want = spark.read.format("graft.evm.LogSourceProvider")
+      .option("path", dir).option("startBlock", "0").option("endBlock", "10")
+      .option("chunkSize", "4").load()
+      .select(cols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    assert(got.size == 22)
+    assert(got == want, s"folded table != fresh scan\n${got.diff(want)}")
+    assert(folded.filter(col("block_number") >= 8)
+      .collect().forall(_.getAs[String]("block_hash").endsWith("bb")))
+  }
+
   test("durable parquet state: reorg stream folds to the fresh-chain table on disk") {
     val v1 = mkChain(9, _ => "a")
     val v2 = mkChain(10, b => if (b >= 8) "b" else "a")

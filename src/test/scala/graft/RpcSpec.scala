@@ -153,6 +153,38 @@ class RpcSpec extends SparkSpec {
     }
   }
 
+  test("retry: an interrupted call ends within one delay, after one request") {
+    // a node slower than the interrupt: the caller is blocked inside
+    // the HTTP send when it is interrupted, as a cancelled task is
+    val hits = new AtomicInteger(0)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      hits.incrementAndGet()
+      try Thread.sleep(2000) catch { case _: InterruptedException => }
+      ex.sendResponseHeaders(500, -1); ex.close()
+    })
+    server.start()
+    val delayMs = 1000L
+    val cli = new RpcClient(RpcConfig(
+      s"http://127.0.0.1:${server.getAddress.getPort}/", attempts = 3, delayMs))
+    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val caller = new Thread(() =>
+      try cli.blockNumber() catch { case e: Throwable => thrown.set(e) })
+    try {
+      caller.start()
+      val deadline = System.currentTimeMillis() + 10000
+      while (hits.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      val t0 = System.nanoTime()
+      caller.interrupt()
+      caller.join(30000)
+      val tookMs = (System.nanoTime() - t0) / 1000000
+      assert(!caller.isAlive && thrown.get() != null)
+      assert(tookMs < delayMs, s"the interrupted call ended after $tookMs ms")
+      Thread.sleep(delayMs + 200) // a retry, had there been one, lands here
+      assert(hits.get() == 1, s"the node saw ${hits.get()} requests")
+    } finally server.stop(0)
+  }
+
   test("DSv2 RPC read matches the dump replay row-for-row (S3)") {
     withNode { node =>
       val rpc = readRpc(node, Map("endBlock" -> "99"))
@@ -256,8 +288,7 @@ class RpcSpec extends SparkSpec {
 
   test("absent endBlock resolves via eth_blockNumber at plan time (S2)") {
     withNode { node =>
-      assert(graft.evm.LogSource.latestBlock(
-        RpcConfig(node.url, delayMs = 0)) == 99L)
+      assert(graft.evm.RpcEndpoint(RpcConfig(node.url, delayMs = 0)).tip() == 99L)
       val df = readRpc(node) // no endBlock → probe tip
       assert(df.count() == book.size)
     }
