@@ -54,92 +54,118 @@ object Backtest {
       (k, rows) => walk(k, rows.toArray.sortBy(r => TimeSeries.sortKey(r.get(1))))
     }
 
+  /** A null numeric cell as NaN, the value that makes no FSM decision. */
+  private def num(r: Row, i: Int): Double = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+
   /** F1: mean-reversion FSM (`simulate_mean_reversion`, ref `:131-178`).
     *
     * Input: one row per (pool, ts) with `price` and `dev` (fractional
     * deviation vs consensus). Per pool, chronologically: while flat,
     * `dev <= -thr` opens LONG and `dev >= thr` opens SHORT (entry rows
     * make no exit decision); while positioned, LONG closes when
-    * `dev >= 0`, SHORT when `dev <= 0`. Returns the trades table;
-    * positions never closed by end-of-data are discarded, as in the
-    * reference. `thr` is a fraction (reference takes percent/100).
+    * `dev >= 0`, SHORT when `dev <= 0`. A row with a null or NaN price
+    * or `dev` makes no decision. Returns the trades table; positions
+    * never closed by end-of-data are discarded, as in the reference.
+    * `thr` is a fraction (reference takes percent/100).
     */
   def meanReversion(df: DataFrame, key: String, ts: String, price: String,
                     dev: String, thr: Double): DataFrame =
     perKey(df, key, ts, price, dev, tradeSchema(df.schema(ts).dataType)) {
       (pool, sorted) =>
-        var side: String = null
-        var entryTs: Any = null
-        var entryPrice = 0.0
         val out = Array.newBuilder[Row]
-        for (r <- sorted) {
-          if (!r.isNullAt(2) && !r.isNullAt(3)) {
-            val p = r.getDouble(2); val d = r.getDouble(3)
-            if (side == null) {
-              if (d <= -thr) { side = "long"; entryTs = r.get(1); entryPrice = p }
-              else if (d >= thr) { side = "short"; entryTs = r.get(1); entryPrice = p }
-            } else if ((side == "long" && d >= 0) || (side == "short" && d <= 0)) {
-              out += Row(pool, side, entryTs, r.get(1), entryPrice, p,
-                pctReturn(side, entryPrice, p))
-              side = null
-            }
-          }
+        val fsm = new MeanReversionFsm[Any](thr) {
+          protected def close(ts: Any, p: Double, pct: java.lang.Double): Unit =
+            out += Row(pool, side, entryTs, ts, entryPrice, p, pct)
         }
+        for (r <- sorted) fsm.step(r.get(1), num(r, 2), num(r, 3))
         out.result().iterator
     }
 
-  /** F2 core: one pool's z-score FSM, fed its rows in time order. A NaN
-    * `z` makes no decision; the caller's `idx` still counts that row, so
-    * it advances the hold clock. */
-  private final class ZscoreFsm(pool: String, entryZ: Double, exitZ: Double,
-                                maxHold: Int) {
-    private var side: String = null
-    private var entryIdx = 0
-    private var entryTs: Any = null
-    private var entryPrice = 0.0
-    private var entryZv = 0.0
-    private val out = Array.newBuilder[Row]
+  /** F1 core: one key's mean-reversion FSM, fed its rows in time order.
+    * The state is the open position (`side` null when flat), so a stream
+    * can carry it between micro-batches; `close` emits a closed trade
+    * while `side` and the entry still describe it. */
+  private[graft] abstract class MeanReversionFsm[T](thr: Double) {
+    var side: String = null
+    var entryTs: T = _
+    var entryPrice = 0.0
 
-    def step(idx: Int, ts: Any, p: Double, zv: Double): Unit =
-      if (!zv.isNaN) {
+    protected def close(ts: T, p: Double, pct: java.lang.Double): Unit
+
+    def step(ts: T, p: Double, d: Double): Unit =
+      if (!p.isNaN && !d.isNaN) {
         if (side == null) {
-          if (zv <= -entryZ) open("long", idx, ts, p, zv)
-          else if (zv >= entryZ) open("short", idx, ts, p, zv)
+          if (d <= -thr) open("long", ts, p)
+          else if (d >= thr) open("short", ts, p)
+        } else if ((side == "long" && d >= 0) || (side == "short" && d <= 0)) {
+          close(ts, p, pctReturn(side, entryPrice, p))
+          side = null
+        }
+      }
+
+    private def open(s: String, ts: T, p: Double): Unit = {
+      side = s; entryTs = ts; entryPrice = p
+    }
+  }
+
+  /** F2 core: one key's z-score FSM, fed its rows in time order. `idx`
+    * counts every row fed, so a row with a NaN price or `z`, which makes
+    * no decision, still advances the hold clock. The state is these
+    * fields (`side` null when flat), so a stream can carry it between
+    * micro-batches; `close` emits a closed trade while `side` and the
+    * entry still describe it. */
+  private[graft] abstract class ZscoreFsm[T](entryZ: Double, exitZ: Double,
+                                             maxHold: Int) {
+    var idx = 0L
+    var side: String = null
+    var entryIdx = 0L
+    var entryTs: T = _
+    var entryPrice = 0.0
+    var entryZv = 0.0
+
+    protected def close(ts: T, p: Double, zv: Double, pct: java.lang.Double,
+                        held: Long): Unit
+
+    def step(ts: T, p: Double, zv: Double): Unit = {
+      if (!p.isNaN && !zv.isNaN) {
+        if (side == null) {
+          if (zv <= -entryZ) open("long", ts, p, zv)
+          else if (zv >= entryZ) open("short", ts, p, zv)
         } else {
           val held = idx - entryIdx
           if ((side == "long" && zv >= -exitZ) || (side == "short" && zv <= exitZ) ||
               held >= maxHold) {
-            out += Row(pool, side, entryTs, ts, entryPrice, p, entryZv, zv,
-              pctReturn(side, entryPrice, p), held)
+            close(ts, p, zv, pctReturn(side, entryPrice, p), held)
             side = null
           }
         }
       }
-
-    private def open(s: String, idx: Int, ts: Any, p: Double, zv: Double): Unit = {
-      side = s; entryIdx = idx; entryTs = ts; entryPrice = p; entryZv = zv
+      idx += 1
     }
 
-    def trades: Iterator[Row] = out.result().iterator
+    private def open(s: String, ts: T, p: Double, zv: Double): Unit = {
+      side = s; entryIdx = idx; entryTs = ts; entryPrice = p; entryZv = zv
+    }
   }
 
-  /** Walks each key's rows through [[ZscoreFsm]], `idx` counting every
-    * row. `zOf` makes one per-key transform from the signal column to z
-    * (null signal → NaN); a null price also makes no decision. */
+  /** Walks each key's rows through [[ZscoreFsm]]. `zOf` makes one
+    * per-key transform from the signal column to z (null signal → NaN);
+    * a null price is NaN too. */
   private def zscoreWalk(df: DataFrame, key: String, ts: String, price: String,
                          signal: String, entryZ: Double, exitZ: Double,
                          maxHold: Int)(zOf: () => Double => Double): DataFrame =
     perKey(df, key, ts, price, signal, zTradeSchema(df.schema(ts).dataType)) {
       (pool, sorted) =>
-        val fsm = new ZscoreFsm(pool, entryZ, exitZ, maxHold)
-        val z = zOf()
-        var idx = 0
-        for (r <- sorted) {
-          val zv = z(if (r.isNullAt(3)) Double.NaN else r.getDouble(3))
-          if (!r.isNullAt(2)) fsm.step(idx, r.get(1), r.getDouble(2), zv)
-          idx += 1
+        val out = Array.newBuilder[Row]
+        val fsm = new ZscoreFsm[Any](entryZ, exitZ, maxHold) {
+          protected def close(ts: Any, p: Double, zv: Double, pct: java.lang.Double,
+                              held: Long): Unit =
+            out += Row(pool, side, entryTs, ts, entryPrice, p, entryZv, zv, pct,
+              held.toInt)
         }
-        fsm.trades
+        val z = zOf()
+        for (r <- sorted) fsm.step(r.get(1), num(r, 2), z(num(r, 3)))
+        out.result().iterator
     }
 
   /** F2: z-score reversion FSM with one-sided exits and a time stop
@@ -148,10 +174,11 @@ object Backtest {
     *
     * Per pool, chronologically, with `idx` counting every grid row (so
     * warm-up rows with null z still advance the hold clock, matching the
-    * reference's global row index): null or NaN z rows are skipped; while
-    * flat, `z <= -entryZ` opens LONG, `z >= entryZ` opens SHORT; while
-    * positioned, LONG exits when `z >= -exitZ`, SHORT when `z <= exitZ`,
-    * either exits when `held = idx - entry_idx >= maxHold`.
+    * reference's global row index): rows with a null or NaN price or z
+    * make no decision; while flat, `z <= -entryZ` opens LONG,
+    * `z >= entryZ` opens SHORT; while positioned, LONG exits when
+    * `z >= -exitZ`, SHORT when `z <= exitZ`, either exits when
+    * `held = idx - entry_idx >= maxHold`.
     */
   def zscoreReversion(df: DataFrame, key: String, ts: String, price: String,
                       z: String, entryZ: Double, exitZ: Double,

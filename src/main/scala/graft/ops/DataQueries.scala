@@ -4095,8 +4095,9 @@ object DataQueries {
     * One key-partitioned window (row_number desc) carries the whole
     * fold; n_ops audits how much history each surviving key absorbed.
     * This is the batch law behind a warehouse MERGE INTO / CDC apply;
-    * the streaming maintenance twin follows the [[graft.streaming
-    * .StreamOps.applyScd2Batch]] versioned-state pattern. */
+    * its streaming maintenance twin, [[graft.streaming.StreamOps
+    * .maintainMerge]], keeps versioned state in the
+    * [[graft.streaming.StateDir]] format. */
   def mergeInto(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)

@@ -11,9 +11,12 @@ import graft.ops.Backtest
   * math allows; divergences are documented on each operator.
   *
   * Scale/correctness notes: logs arrive in block order per chain, so
-  * per-key in-order delivery is the operating assumption for the FSM
-  * (reorgs are out of scope, as in the reference). Watermarks bound
-  * state for the windowed aggregations.
+  * per-key in-order delivery is the operating assumption for the FSMs,
+  * which step [[Backtest]]'s cores; a reorg that rewrites blocks already
+  * fed to them is not retracted (the reorg stream, `graft.evm.Reorg`,
+  * retracts rows for the maintained tables). Watermarks bound state for
+  * the windowed aggregations. Every maintained state directory's files
+  * are [[StateDir]]'s format.
   */
 object StreamOps {
 
@@ -167,92 +170,16 @@ object StreamOps {
   private val RollupSchema =
     "event_type STRING, day DATE, n_events BIGINT, sum_vmicro BIGINT"
 
-  private def rollupFs(sp: SparkSession, statePath: String) = {
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    (p.getFileSystem(sp.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Committed version ids under statePath, from the `_COMMIT_<id>` markers. */
-  private def committedVersions(sp: SparkSession, statePath: String): Seq[Long] = {
-    val (fs, root) = rollupFs(sp, statePath)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_COMMIT_") => n.stripPrefix("_COMMIT_").toLong }
-  }
-
-  /** Latest committed version of a marker-committed state directory
-    * (empty frame with the given schema if no batch has committed). */
-  private[graft] def readVersioned(sp: SparkSession, statePath: String,
-                                   schemaDDL: String): DataFrame = {
-    val committed = committedVersions(sp, statePath)
-    if (committed.isEmpty)
-      sp.createDataFrame(sp.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
-    else sp.read.parquet(s"$statePath/v=${committed.max}")
-  }
-
-  /** Atomically publish `next` as `version` of the state and GC all but
-    * the new and previous committed versions. The marker's CONTENT is
-    * the highest stream batchId applied into this version — that, not
-    * the version number, is the at-least-once replay gate, which lets
-    * maintenance commits (vacuum, compaction) advance the version
-    * counter without ever colliding with, or masking, a future stream
-    * batchId (the Delta-style txn-id split between table version and
-    * writer idempotency token). */
-  private def commitVersioned(sp: SparkSession, statePath: String,
-                              version: Long, next: DataFrame,
-                              prevCommitted: Seq[Long],
-                              appliedStreamId: Long): Unit = {
-    val last = if (prevCommitted.isEmpty) -1L else prevCommitted.max
-    // mode("overwrite") clears a partial v=<version> left by a failed retry
-    next.write.mode("overwrite").parquet(s"$statePath/v=$version")
-    val (fs, root) = rollupFs(sp, statePath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(root, s"_COMMIT_$version"), true)
-    out.write(appliedStreamId.toString.getBytes("UTF-8"))
-    out.close() // the commit point: marker creation is atomic
-    prevCommitted.filter(_ < last).foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$id"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"_COMMIT_$id"), false)
-    }
-  }
-
-  /** Version id for the next commit: stays equal to the stream batchId
-    * in the no-maintenance case (so existing time-travel reads by
-    * batchId keep working), jumps past any maintenance-advanced
-    * version otherwise. */
-  private def nextVersion(committed: Seq[Long], batchId: Long): Long =
-    if (committed.isEmpty) batchId else math.max(batchId, committed.max + 1)
-
   /** Highest stream batchId applied into the newest committed version
-    * (−1 when no version exists). Read from the newest marker's
-    * content; a legacy EMPTY marker falls back to its version number,
-    * which equaled the batchId before maintenance commits existed.
-    * That fallback is ONLY for the empty-content case: a read or
-    * parse failure rethrows. Swallowing it into the fallback would
-    * over-report after a maintenance commit (version > applied
-    * batchId), silently widening the replay-skip gate — an unapplied
-    * replayed batch with batchId ≤ vmax would be dropped, i.e. data
-    * loss under at-least-once delivery. Better to fail the trigger
-    * and let the retry re-read the marker. */
+    * (−1 when no version exists); see [[StateDir.lastApplied]]. */
   private[graft] def lastAppliedStream(sp: SparkSession,
-                                       statePath: String): Long = {
-    val committed = committedVersions(sp, statePath)
-    if (committed.isEmpty) -1L
-    else {
-      val vmax = committed.max
-      val (fs, root) = rollupFs(sp, statePath)
-      val in = fs.open(new org.apache.hadoop.fs.Path(root, s"_COMMIT_$vmax"))
-      val txt = try new String(in.readAllBytes(), "UTF-8").trim
-                finally in.close()
-      if (txt.isEmpty) vmax else txt.toLong
-    }
-  }
+                                       statePath: String): Long =
+    new StateDir(sp, statePath).lastApplied
 
   /** Latest committed rollup state (empty frame with the rollup schema if
     * no batch has committed yet). */
   def readRollup(sp: SparkSession, statePath: String): DataFrame =
-    readVersioned(sp, statePath, RollupSchema)
+    new StateDir(sp, statePath).read(RollupSchema)
 
   /** TIME TRAVEL: read a SPECIFIC committed version of a
     * marker-committed state (rollup or SCD2). The GC retention keeps
@@ -260,16 +187,12 @@ object StreamOps {
     * rollback read is always available; older versions are vacuumed
     * and asking for them is a loud error, not an empty frame. */
   def readStateAt(sp: SparkSession, statePath: String,
-                  version: Long): DataFrame = {
-    val committed = committedVersions(sp, statePath)
-    require(committed.contains(version),
-      s"version $version not committed (retained: ${committed.sorted.mkString(",")})")
-    sp.read.parquet(s"$statePath/v=$version")
-  }
+                  version: Long): DataFrame =
+    new StateDir(sp, statePath).readAt(version)
 
   /** Committed versions currently retained (newest + one rollback). */
   def retainedVersions(sp: SparkSession, statePath: String): Seq[Long] =
-    committedVersions(sp, statePath).sorted
+    new StateDir(sp, statePath).committed.sorted
 
   /** CHANGE DATA FEED between two snapshots of a keyed state: one
     * full-outer join on the key classifies every row as
@@ -299,27 +222,23 @@ object StreamOps {
   private[graft] def applyRollupBatch(batch: org.apache.spark.sql.Dataset[Row],
                                       statePath: String, batchId: Long): Unit = {
     val sp = batch.sparkSession
-    val committed = committedVersions(sp, statePath)
-    if (batchId <= lastAppliedStream(sp, statePath))
-      return // at-least-once replay: already applied
-    val part = batch.select(col("event_type"),
-        to_date(col("ts")).as("day"),
-        expr("cast(round(value * 1e6) as bigint)").as("vmicro"))
-      .groupBy("event_type", "day")
-      .agg(count(lit(1)).as("nd"), sum("vmicro").as("sd"))
-    val cur = readRollup(sp, statePath)
-      .withColumnRenamed("n_events", "nb")
-      .withColumnRenamed("sum_vmicro", "sb")
-    val merged = cur
-      .join(part, Seq("event_type", "day"), "full_outer")
-      .select(col("event_type"), col("day"),
-        (coalesce(col("nb"), lit(0L)) + coalesce(col("nd"), lit(0L)))
-          .as("n_events"),
-        (coalesce(col("sb"), lit(0L)) + coalesce(col("sd"), lit(0L)))
-          .as("sum_vmicro"))
-      .localCheckpoint(true)
-    commitVersioned(sp, statePath, nextVersion(committed, batchId), merged,
-      committed, batchId)
+    new StateDir(sp, statePath).applyOnce(batchId) {
+      val part = batch.select(col("event_type"),
+          to_date(col("ts")).as("day"),
+          expr("cast(round(value * 1e6) as bigint)").as("vmicro"))
+        .groupBy("event_type", "day")
+        .agg(count(lit(1)).as("nd"), sum("vmicro").as("sd"))
+      val cur = readRollup(sp, statePath)
+        .withColumnRenamed("n_events", "nb")
+        .withColumnRenamed("sum_vmicro", "sb")
+      cur.join(part, Seq("event_type", "day"), "full_outer")
+        .select(col("event_type"), col("day"),
+          (coalesce(col("nb"), lit(0L)) + coalesce(col("nd"), lit(0L)))
+            .as("n_events"),
+          (coalesce(col("sb"), lit(0L)) + coalesce(col("sd"), lit(0L)))
+            .as("sum_vmicro"))
+        .localCheckpoint(true)
+    }
   }
 
   private val Scd2Schema = "user_id BIGINT, version BIGINT, attr STRING, " +
@@ -329,7 +248,7 @@ object StreamOps {
     * `tb` is the run-start tiebreak id the merge needs to replay
     * deterministic ordering. */
   def readScd2(sp: SparkSession, statePath: String): DataFrame =
-    readVersioned(sp, statePath, Scd2Schema)
+    new StateDir(sp, statePath).read(Scd2Schema)
 
   /** Streaming SCD2 maintenance: each micro-batch of (user_id, ts,
     * event_id, attr) change events merges into the versioned dimension
@@ -356,45 +275,41 @@ object StreamOps {
   private[graft] def applyScd2Batch(batch: org.apache.spark.sql.Dataset[Row],
                                     statePath: String, batchId: Long): Unit = {
     val sp = batch.sparkSession
-    val committed = committedVersions(sp, statePath)
-    if (batchId <= lastAppliedStream(sp, statePath))
-      return // at-least-once replay: already applied
-    val cur = readScd2(sp, statePath)
-    val closed = cur.filter(col("valid_to").isNotNull)
-    // version offset per key: the open run re-enters the collapse as
-    // run #1, so vbase = its version − 1 — computed from max(version)
-    // minus the open indicator rather than max over CLOSED rows, so
-    // version numbering survives [[vacuumScd2History]] retiring old
-    // closed versions (numbers continue, never restart).
-    val vbase = cur.groupBy("user_id").agg(
-      (max("version") - max(when(col("valid_to").isNull, 1L).otherwise(0L)))
-        .as("vbase"))
-    // the open version re-enters the collapse as a pseudo-event at its
-    // own run start; batch rows with ts ≥ it extend or close the run
-    val pseudo = cur.filter(col("valid_to").isNull)
-      .select(col("user_id"), col("valid_from").as("ts"),
-        col("tb").as("event_id"), col("attr"))
-    val evts = batch
-      .select(col("user_id"), col("ts").cast("timestamp_ntz").as("ts"),
-        col("event_id"), col("event_type").as("attr"))
-      .unionByName(pseudo)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val runs = evts
-      .withColumn("prev", lag("attr", 1).over(w))
-      .filter(col("prev").isNull || col("prev") =!= col("attr"))
-      .withColumn("valid_to", lead("ts", 1).over(w))
-      .withColumn("v_local", row_number().over(w).cast("long"))
-    val next = runs
-      .join(vbase, Seq("user_id"), "left")
-      .select(col("user_id"),
-        (col("v_local") + coalesce(col("vbase"), lit(0L))).as("version"),
-        col("attr"), col("ts").as("valid_from"), col("valid_to"),
-        col("event_id").as("tb"))
-      .unionByName(closed)
-      .localCheckpoint(true)
-    commitVersioned(sp, statePath, nextVersion(committed, batchId), next,
-      committed, batchId)
+    new StateDir(sp, statePath).applyOnce(batchId) {
+      val cur = readScd2(sp, statePath)
+      val closed = cur.filter(col("valid_to").isNotNull)
+      // version offset per key: the open run re-enters the collapse as
+      // run #1, so vbase = its version − 1 — computed from max(version)
+      // minus the open indicator rather than max over CLOSED rows, so
+      // version numbering survives [[vacuumScd2History]] retiring old
+      // closed versions (numbers continue, never restart).
+      val vbase = cur.groupBy("user_id").agg(
+        (max("version") - max(when(col("valid_to").isNull, 1L).otherwise(0L)))
+          .as("vbase"))
+      // the open version re-enters the collapse as a pseudo-event at its
+      // own run start; batch rows with ts ≥ it extend or close the run
+      val pseudo = cur.filter(col("valid_to").isNull)
+        .select(col("user_id"), col("valid_from").as("ts"),
+          col("tb").as("event_id"), col("attr"))
+      val evts = batch
+        .select(col("user_id"), col("ts").cast("timestamp_ntz").as("ts"),
+          col("event_id"), col("event_type").as("attr"))
+        .unionByName(pseudo)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      val runs = evts
+        .withColumn("prev", lag("attr", 1).over(w))
+        .filter(col("prev").isNull || col("prev") =!= col("attr"))
+        .withColumn("valid_to", lead("ts", 1).over(w))
+        .withColumn("v_local", row_number().over(w).cast("long"))
+      runs.join(vbase, Seq("user_id"), "left")
+        .select(col("user_id"),
+          (col("v_local") + coalesce(col("vbase"), lit(0L))).as("version"),
+          col("attr"), col("ts").as("valid_from"), col("valid_to"),
+          col("event_id").as("tb"))
+        .unionByName(closed)
+        .localCheckpoint(true)
+    }
   }
 
   /** SCD2 HISTORY RETENTION: retire CLOSED versions whose validity
@@ -408,17 +323,13 @@ object StreamOps {
     * the number of rows retired. */
   def vacuumScd2History(sp: SparkSession, statePath: String,
                         watermark: String): Long = {
-    val committed = committedVersions(sp, statePath)
-    require(committed.nonEmpty, s"no committed scd2 state at $statePath")
+    val st = new StateDir(sp, statePath)
+    require(st.committed.nonEmpty, s"no committed scd2 state at $statePath")
     val cur = readScd2(sp, statePath)
     val isOld = col("valid_to").isNotNull &&
       col("valid_to") < lit(watermark).cast("timestamp_ntz")
     val n = cur.filter(isOld).count()
-    if (n > 0) {
-      val next = cur.filter(!isOld).localCheckpoint(true)
-      commitVersioned(sp, statePath, committed.max + 1, next, committed,
-        lastAppliedStream(sp, statePath))
-    }
+    if (n > 0) st.commit(cur.filter(!isOld).localCheckpoint(true), st.lastApplied)
     n
   }
 
@@ -430,7 +341,7 @@ object StreamOps {
     * tombstones so later batches order against them, filter
     * `op <> 'delete'` — [[readMergeTable]] does — for the user view). */
   def readMergeState(sp: SparkSession, statePath: String): DataFrame =
-    readVersioned(sp, statePath, MergeSchema)
+    new StateDir(sp, statePath).read(MergeSchema)
 
   /** The user-facing merged table: live keys only. */
   def readMergeTable(sp: SparkSession, statePath: String): DataFrame =
@@ -462,33 +373,30 @@ object StreamOps {
   private[graft] def applyMergeBatch(batch: org.apache.spark.sql.Dataset[Row],
                                      statePath: String, batchId: Long): Unit = {
     val sp = batch.sparkSession
-    val committed = committedVersions(sp, statePath)
-    if (batchId <= lastAppliedStream(sp, statePath))
-      return // at-least-once replay: already applied
-    val ops0 = batch.select(col("user_id"),
-      expr("cast(round(value * 1e6) as bigint)").as("vmicro"),
-      col("ts").cast("timestamp_ntz").as("ts"),
-      when(col("event_type") === "error", "delete").otherwise("upsert")
-        .as("op"),
-      col("event_id").as("tb"))
-    // Late-op gate: ops older than the vacuum watermark are DROPPED
-    // (streaming watermark semantics). This is what makes tombstone
-    // vacuum sound: a tombstone is only removed once no op that could
-    // lose to it can still arrive, so a vacuumed key can resurrect only
-    // via an op at or after the watermark — the law MaintenanceSpec
-    // pins.
-    val ops = mergeVacuumWatermark(sp, statePath) match {
-      case Some(wm) => ops0.filter(col("ts") >= lit(wm).cast("timestamp_ntz"))
-      case None => ops0
+    new StateDir(sp, statePath).applyOnce(batchId) {
+      val ops0 = batch.select(col("user_id"),
+        expr("cast(round(value * 1e6) as bigint)").as("vmicro"),
+        col("ts").cast("timestamp_ntz").as("ts"),
+        when(col("event_type") === "error", "delete").otherwise("upsert")
+          .as("op"),
+        col("event_id").as("tb"))
+      // Late-op gate: ops older than the vacuum watermark are DROPPED
+      // (streaming watermark semantics). This is what makes tombstone
+      // vacuum sound: a tombstone is only removed once no op that could
+      // lose to it can still arrive, so a vacuumed key can resurrect only
+      // via an op at or after the watermark — the law MaintenanceSpec
+      // pins.
+      val ops = mergeVacuumWatermark(sp, statePath) match {
+        case Some(wm) => ops0.filter(col("ts") >= lit(wm).cast("timestamp_ntz"))
+        case None => ops0
+      }
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("ts").desc, col("tb").desc)
+      readMergeState(sp, statePath).unionByName(ops)
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") === 1).drop("rk")
+        .localCheckpoint(true)
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts").desc, col("tb").desc)
-    val next = readMergeState(sp, statePath).unionByName(ops)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1).drop("rk")
-      .localCheckpoint(true)
-    commitVersioned(sp, statePath, nextVersion(committed, batchId), next,
-      committed, batchId)
   }
 
   /** [[maintainMerge]] with SCHEDULED tombstone vacuum: every
@@ -529,20 +437,13 @@ object StreamOps {
 
   /** The merge state's vacuum watermark, if one has been set: the
     * canonical `yyyy-MM-dd HH:mm:ss` string whose fixed-width form
-    * makes lexicographic max = chronological max. */
+    * makes lexicographic max = chronological max. A watermark file
+    * that exists but cannot be read fails the call: reading it as
+    * absent would turn the late-op gate off and let a sub-watermark op
+    * resurrect a vacuumed key. */
   def mergeVacuumWatermark(sp: SparkSession,
-                           statePath: String): Option[String] = {
-    val (fs, root) = rollupFs(sp, statePath)
-    val p = new org.apache.hadoop.fs.Path(root, "_WATERMARK")
-    if (!fs.exists(p)) None
-    else
-      try {
-        val in = fs.open(p)
-        val txt = new String(in.readAllBytes(), "UTF-8").trim
-        in.close()
-        if (txt.isEmpty) None else Some(txt)
-      } catch { case _: Exception => None }
-  }
+                           statePath: String): Option[String] =
+    new StateDir(sp, statePath).text(StateDir.Watermark).filter(_.nonEmpty)
 
   /** TOMBSTONE VACUUM for the maintained merge state: drop tombstone
     * rows (op='delete') strictly older than `watermark` (canonical
@@ -559,23 +460,15 @@ object StreamOps {
     * single-writer, like every foreachBatch state here). */
   def vacuumMergeTombstones(sp: SparkSession, statePath: String,
                             watermark: String): Long = {
-    val committed = committedVersions(sp, statePath)
-    require(committed.nonEmpty, s"no committed merge state at $statePath")
+    val st = new StateDir(sp, statePath)
+    require(st.committed.nonEmpty, s"no committed merge state at $statePath")
     val wm = (mergeVacuumWatermark(sp, statePath).toSeq :+ watermark).max
-    val (fs, root) = rollupFs(sp, statePath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(root, "_WATERMARK"), true)
-    out.write(wm.getBytes("UTF-8"))
-    out.close()
+    st.mark(StateDir.Watermark, wm)
     val cur = readMergeState(sp, statePath)
     val isDead = col("op") === "delete" &&
       col("ts") < lit(wm).cast("timestamp_ntz")
     val nDead = cur.filter(isDead).count()
-    if (nDead > 0) {
-      val next = cur.filter(!isDead).localCheckpoint(true)
-      commitVersioned(sp, statePath, committed.max + 1, next, committed,
-        lastAppliedStream(sp, statePath))
-    }
+    if (nDead > 0) st.commit(cur.filter(!isDead).localCheckpoint(true), st.lastApplied)
     nDead
   }
 
@@ -585,7 +478,7 @@ object StreamOps {
     * per document that belongs to a component (singletons are absent,
     * exactly like the batch `dedupGroups` output). */
   def readCcState(sp: SparkSession, statePath: String): DataFrame =
-    readVersioned(sp, s"$statePath/comps", CcSchema)
+    new StateDir(sp, s"$statePath/comps").read(CcSchema)
 
   /** CONTINUOUSLY-MAINTAINED dedup components: each micro-batch of
     * (doc_id, text) documents folds into the component state via the
@@ -618,102 +511,83 @@ object StreamOps {
                                   maxDocFreq: Option[Long] = None): Unit = {
     import graft.ops.{DedupOps, TextOps}
     val sp = batch.sparkSession
-    val compsPath = s"$statePath/comps"
-    val committed = committedVersions(sp, compsPath)
-    if (batchId <= lastAppliedStream(sp, compsPath))
-      return // at-least-once replay: already applied (index dir included)
-    // 1. the batch's shingle postings (doc, sz, s) — appended to the index
-    val sh = batch
-      .select(col("doc_id").as("doc"),
-        TextOps.shingleHashes(col("text"), 3).as("arr"))
-      .select(col("doc"), size(col("arr")).as("sz"),
-        explode_outer(col("arr")).as("s"))
-      .filter(col("s").isNotNull)
-    sh.write.mode("overwrite").parquet(s"$statePath/index/b=$batchId")
-    // 2. probe the FULL index (prior batches + this one) with the batch
-    val index = sp.read.parquet(ccIndexDirs(sp, statePath): _*)
-    val probe = sp.read.parquet(s"$statePath/index/b=$batchId")
-    val cand = maxDocFreq match {
-      case None =>
-        probe.toDF("pa", "sza", "s")
-          .join(index.toDF("pb", "szb", "s"), Seq("s"))
-          .filter(col("pa") =!= col("pb"))
-          .select(
-            when(col("pa") < col("pb"), col("pa")).otherwise(col("pb")).as("doc_a"),
-            when(col("pa") < col("pb"), col("sza")).otherwise(col("szb")).as("sz_a"),
-            when(col("pa") < col("pb"), col("pb")).otherwise(col("pa")).as("doc_b"),
-            when(col("pa") < col("pb"), col("szb")).otherwise(col("sza")).as("sz_b"),
-            col("s"))
-          .distinct() // batch-batch pairs arrive in both orientations
-          .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-          .agg(count(lit(1)).as("inter"))
-          .filter(col("inter").cast("double")
-            / (col("sz_a") + col("sz_b") - col("inter")) >= 0.1)
-          .select("doc_a", "doc_b")
-      case Some(cap) =>
-        // capped fold: the LIVE keep-set (full-index docFreq ≤ cap,
-        // including this batch) gates the probe, and doc sizes are
-        // re-counted over the kept incidence — per-shingle fan-out is
-        // ≤ cap·|batch-postings| instead of freq². Stale history (a
-        // shingle crossing the cap AFTER its pairs folded) is retired
-        // by [[recapCc]], the cap-crossing compaction; the law fold +
-        // recap ≡ capped batch recompute is pinned by CcRecapProps.
-        val counts = index.groupBy("s").agg(count(lit(1)).as("__df"))
-        val keep = counts.filter(col("__df") <= cap).select("s")
-        val kept = index.select("doc", "s").join(keep, Seq("s"))
-          .select("doc", "s")
-        val sizes = kept.groupBy("doc").agg(count(lit(1)).as("kz"))
-          .select(col("doc"), col("kz"))
-        probe.select(col("doc").as("pa"), col("s"))
-          .join(keep, Seq("s"))
-          .join(kept.select(col("doc").as("pb"), col("s")), Seq("s"))
-          .filter(col("pa") =!= col("pb"))
-          .select(least(col("pa"), col("pb")).as("doc_a"),
-            greatest(col("pa"), col("pb")).as("doc_b"), col("s"))
-          .distinct() // batch-batch pairs arrive in both orientations
-          .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-          .join(sizes.select(col("doc").as("doc_a"), col("kz").as("sz_a")),
-            Seq("doc_a"))
-          .join(sizes.select(col("doc").as("doc_b"), col("kz").as("sz_b")),
-            Seq("doc_b"))
-          .filter(col("inter").cast("double")
-            / (col("sz_a") + col("sz_b") - col("inter")) >= 0.1)
-          .select("doc_a", "doc_b")
-    }
-    // 3. contract to existing reps, CC the touched subgraph, remap
-    val baseComps = readCcState(sp, statePath)
-    val repA = baseComps.select(col("node").as("doc_a"), col("comp").as("ca"))
-    val repB = baseComps.select(col("node").as("doc_b"), col("comp").as("cb"))
-    val contracted = cand
-      .join(repA, Seq("doc_a"), "left").join(repB, Seq("doc_b"), "left")
-      .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
-        coalesce(col("cb"), col("doc_b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    val merged = DedupOps.connectedComponents(contracted)
-    val remap = merged.select(col("node").as("comp"), col("comp").as("newc"))
-    val baseFinal = baseComps.join(remap, Seq("comp"), "left")
-      .select(col("node"), coalesce(col("newc"), col("comp")).as("comp"))
-    val freshFinal = merged
-      .join(baseComps.select("node"), Seq("node"), "left_anti")
-    val next = baseFinal.unionByName(freshFinal).localCheckpoint(true)
-    commitVersioned(sp, compsPath, nextVersion(committed, batchId), next,
-      committed, batchId)
-  }
-
-  /** Live posting-index pieces: the newest committed consolidated run
-    * (if any) plus the per-batch append dirs newer than it. */
-  private def ccIndexDirs(sp: SparkSession, statePath: String): Seq[String] = {
-    val (fs, root) = rollupFs(sp, s"$statePath/index")
-    if (!fs.exists(root)) return Seq.empty
-    val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val cIds = names.collect {
-      case n if n.startsWith("_CIDX_") => n.stripPrefix("_CIDX_").toLong
-    }
-    val base = if (cIds.isEmpty) -1L else cIds.max
-    val cdir = if (base >= 0) Seq(s"$root/c=$base") else Nil
-    cdir ++ names.collect {
-      case n if n.startsWith("b=") && n.stripPrefix("b=").toLong > base =>
-        s"$root/$n"
+    // the replay gate covers the index dir too
+    new StateDir(sp, s"$statePath/comps").applyOnce(batchId) {
+      // 1. the batch's shingle postings (doc, sz, s) — appended to the index
+      val sh = batch
+        .select(col("doc_id").as("doc"),
+          TextOps.shingleHashes(col("text"), 3).as("arr"))
+        .select(col("doc"), size(col("arr")).as("sz"),
+          explode_outer(col("arr")).as("s"))
+        .filter(col("s").isNotNull)
+      sh.write.mode("overwrite").parquet(s"$statePath/index/b=$batchId")
+      // 2. probe the FULL index (prior batches + this one) with the batch
+      val index = sp.read.parquet(
+        new StateDir(sp, s"$statePath/index").pieces(StateDir.CcIndex): _*)
+      val probe = sp.read.parquet(s"$statePath/index/b=$batchId")
+      val cand = maxDocFreq match {
+        case None =>
+          probe.toDF("pa", "sza", "s")
+            .join(index.toDF("pb", "szb", "s"), Seq("s"))
+            .filter(col("pa") =!= col("pb"))
+            .select(
+              when(col("pa") < col("pb"), col("pa")).otherwise(col("pb")).as("doc_a"),
+              when(col("pa") < col("pb"), col("sza")).otherwise(col("szb")).as("sz_a"),
+              when(col("pa") < col("pb"), col("pb")).otherwise(col("pa")).as("doc_b"),
+              when(col("pa") < col("pb"), col("szb")).otherwise(col("sza")).as("sz_b"),
+              col("s"))
+            .distinct() // batch-batch pairs arrive in both orientations
+            .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
+            .agg(count(lit(1)).as("inter"))
+            .filter(col("inter").cast("double")
+              / (col("sz_a") + col("sz_b") - col("inter")) >= 0.1)
+            .select("doc_a", "doc_b")
+        case Some(cap) =>
+          // capped fold: the LIVE keep-set (full-index docFreq ≤ cap,
+          // including this batch) gates the probe, and doc sizes are
+          // re-counted over the kept incidence — per-shingle fan-out is
+          // ≤ cap·|batch-postings| instead of freq². Stale history (a
+          // shingle crossing the cap AFTER its pairs folded) is retired
+          // by [[recapCc]], the cap-crossing compaction; the law fold +
+          // recap ≡ capped batch recompute is pinned by CcRecapProps.
+          val counts = index.groupBy("s").agg(count(lit(1)).as("__df"))
+          val keep = counts.filter(col("__df") <= cap).select("s")
+          val kept = index.select("doc", "s").join(keep, Seq("s"))
+            .select("doc", "s")
+          val sizes = kept.groupBy("doc").agg(count(lit(1)).as("kz"))
+            .select(col("doc"), col("kz"))
+          probe.select(col("doc").as("pa"), col("s"))
+            .join(keep, Seq("s"))
+            .join(kept.select(col("doc").as("pb"), col("s")), Seq("s"))
+            .filter(col("pa") =!= col("pb"))
+            .select(least(col("pa"), col("pb")).as("doc_a"),
+              greatest(col("pa"), col("pb")).as("doc_b"), col("s"))
+            .distinct() // batch-batch pairs arrive in both orientations
+            .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
+            .join(sizes.select(col("doc").as("doc_a"), col("kz").as("sz_a")),
+              Seq("doc_a"))
+            .join(sizes.select(col("doc").as("doc_b"), col("kz").as("sz_b")),
+              Seq("doc_b"))
+            .filter(col("inter").cast("double")
+              / (col("sz_a") + col("sz_b") - col("inter")) >= 0.1)
+            .select("doc_a", "doc_b")
+      }
+      // 3. contract to existing reps, CC the touched subgraph, remap
+      val baseComps = readCcState(sp, statePath)
+      val repA = baseComps.select(col("node").as("doc_a"), col("comp").as("ca"))
+      val repB = baseComps.select(col("node").as("doc_b"), col("comp").as("cb"))
+      val contracted = cand
+        .join(repA, Seq("doc_a"), "left").join(repB, Seq("doc_b"), "left")
+        .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
+          coalesce(col("cb"), col("doc_b")).as("doc_b"))
+        .filter(col("doc_a") =!= col("doc_b"))
+      val merged = DedupOps.connectedComponents(contracted)
+      val remap = merged.select(col("node").as("comp"), col("comp").as("newc"))
+      val baseFinal = baseComps.join(remap, Seq("comp"), "left")
+        .select(col("node"), coalesce(col("newc"), col("comp")).as("comp"))
+      val freshFinal = merged
+        .join(baseComps.select("node"), Seq("node"), "left_anti")
+      baseFinal.unionByName(freshFinal).localCheckpoint(true)
     }
   }
 
@@ -747,16 +621,16 @@ object StreamOps {
     * positions. Returns the number of shingles that crossed. */
   def recapCc(sp: SparkSession, statePath: String, maxDocFreq: Long): Long = {
     import graft.ops.DedupOps
-    val dirs = ccIndexDirs(sp, statePath)
+    val dirs = new StateDir(sp, s"$statePath/index").pieces(StateDir.CcIndex)
     if (dirs.isEmpty) return 0L
-    val compsPath = s"$statePath/comps"
-    val capPath = s"$statePath/capstate"
-    val applied = lastAppliedStream(sp, compsPath)
+    val compsDir = new StateDir(sp, s"$statePath/comps")
+    val capDir = new StateDir(sp, s"$statePath/capstate")
+    val applied = compsDir.lastApplied
     if (applied < 0L) return 0L // nothing folded yet, nothing stale
     val index = sp.read.parquet(dirs: _*).select("doc", "s")
     val counts = index.groupBy("s").agg(count(lit(1)).as("__df"))
     val above = counts.filter(col("__df") > maxDocFreq).select("s")
-    val prevAbove = readVersioned(sp, capPath, "s BIGINT")
+    val prevAbove = capDir.read("s BIGINT")
     val crossing = above.join(prevAbove, Seq("s"), "left_anti")
       .localCheckpoint(true) // tiny: newly-capped shingles only
     val nCross = crossing.count()
@@ -806,14 +680,8 @@ object StreamOps {
       .select(col("node"), coalesce(col("newc"), col("comp")).as("comp"))
     val freshFinal = merged
       .join(baseUntouched.select("node"), Seq("node"), "left_anti")
-    val next = baseFinal.unionByName(freshFinal).localCheckpoint(true)
-    val committed = committedVersions(sp, compsPath)
-    commitVersioned(sp, compsPath, nextVersion(committed, applied), next,
-      committed, applied)
-    val capCommitted = committedVersions(sp, capPath)
-    commitVersioned(sp, capPath,
-      if (capCommitted.isEmpty) 0L else capCommitted.max + 1L,
-      above, capCommitted, applied)
+    compsDir.commit(baseFinal.unionByName(freshFinal).localCheckpoint(true), applied)
+    capDir.commit(above, applied)
     nCross
   }
 
@@ -822,35 +690,14 @@ object StreamOps {
     * an atomic `_CIDX_<id>` marker before the superseded dirs are
     * deleted — the small-files sweep an append-only index needs
     * operationally (a year of hourly ingests is 8760 dirs; scan
-    * planning pays per file). Crash-safe at every step: until the
-    * marker exists readers keep using the old pieces; after it, the
-    * old pieces are dead weight that a re-run deletes. Run between
-    * triggers (single-writer, like every maintainer here). Returns
-    * the number of dirs consolidated. */
+    * planning pays per file). Crash-safe ([[StateDir.compact]]). Run
+    * between triggers (single-writer, like every maintainer here).
+    * Returns the number of dirs consolidated, 0 when the index is
+    * already one piece. */
   def compactCcIndex(sp: SparkSession, statePath: String): Long = {
-    val dirs = ccIndexDirs(sp, statePath)
-    require(dirs.nonEmpty, s"no cc index at $statePath")
-    if (dirs.size == 1 && dirs.head.contains("c=")) return 0L
-    val (fs, root) = rollupFs(sp, s"$statePath/index")
-    val ids = fs.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("b=") => n.stripPrefix("b=").toLong
-      case n if n.startsWith("_CIDX_") => n.stripPrefix("_CIDX_").toLong
-    }
-    val maxId = ids.max
-    sp.read.parquet(dirs: _*)
-      .write.mode("overwrite").parquet(s"$root/c=$maxId")
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_CIDX_$maxId"), true)
-      .close() // commit point
-    fs.listStatus(root).toSeq.map(_.getPath.getName).foreach {
-      case n if n.startsWith("b=") && n.stripPrefix("b=").toLong <= maxId =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), true)
-      case n if n.startsWith("c=") && n.stripPrefix("c=").toLong < maxId =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), true)
-      case n if n.startsWith("_CIDX_") && n.stripPrefix("_CIDX_").toLong < maxId =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), false)
-      case _ => ()
-    }
-    dirs.size.toLong
+    val index = new StateDir(sp, s"$statePath/index")
+    require(index.pieces(StateDir.CcIndex).nonEmpty, s"no cc index at $statePath")
+    index.compact(StateDir.CcIndex, Long.MaxValue)
   }
 
   // -----------------------------------------------------------------
@@ -863,35 +710,6 @@ object StreamOps {
     "keep_gopher BOOLEAN, q DOUBLE, n_kept BIGINT, kept_hash BIGINT, " +
     "is_bench BOOLEAN, s3 BOOLEAN, s4 BOOLEAN"
 
-  /** Live append-state pieces under `statePath/<kind>`: the newest
-    * consolidated run (committed by an `_AIDX_<id>` marker, see
-    * [[compactPipelineIndex]]) plus every per-batch `b=` dir newer
-    * than it — maintainCc's posting-dir listing shape. `except` skips
-    * one batch's dir: a crashed-and-retried apply must read PRIOR
-    * state only — its own orphan dir from the failed attempt would
-    * otherwise feed back into the retry (e.g. an anti-join against a
-    * set that already contains this batch's delta emits an empty
-    * delta, losing the rows). Orphans are never compacted (eligibility
-    * is bounded by the committed replay gate), so the exclusion holds
-    * across compactions. */
-  private def batchDirs(sp: SparkSession, statePath: String, kind: String,
-                        except: Long = Long.MinValue): Seq[String] = {
-    val (fs, root) = rollupFs(sp, s"$statePath/$kind")
-    if (!fs.exists(root)) return Seq.empty
-    val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val cIds = names.collect {
-      case n if n.startsWith("_AIDX_") => n.stripPrefix("_AIDX_").toLong
-    }
-    val base = if (cIds.isEmpty) -1L else cIds.max
-    val cdir = if (base >= 0) Seq(s"$root/c=$base") else Nil
-    cdir ++ names.collect {
-      case n if n.startsWith("b=") && {
-        val id = n.stripPrefix("b=").toLong
-        id > base && id != except
-      } => s"$root/$n"
-    }
-  }
-
   /** COMPACT the maintainPipeline append state: per kind (rows, sig3,
     * five, bench5), merge the consolidated run and every newer
     * per-batch dir into ONE run, committed by an atomic `_AIDX_<id>`
@@ -901,14 +719,13 @@ object StreamOps {
     * pays per file). ONLY batches already committed into the hits
     * version are eligible: an orphan dir from a crashed apply must
     * stay a `b=` dir, or the retry's own-dir exclusion (see
-    * [[batchDirs]]) could no longer carve it out of the consolidated
-    * run. Crash-safe: until the marker exists readers use the old
-    * pieces; after it, old pieces are dead weight a re-run deletes.
-    * Run between triggers (single-writer). Returns dirs folded. */
+    * [[StateDir.pieces]]) could no longer carve it out of the
+    * consolidated run. Crash-safe ([[StateDir.compact]]). Run between
+    * triggers (single-writer). Returns dirs folded. */
   def compactPipelineIndex(sp: SparkSession, statePath: String): Long = {
     val applied = lastAppliedStream(sp, s"$statePath/hits")
-    val folded = Seq("rows", "sig3", "five", "bench5")
-      .map(k => compactAppendKind(sp, s"$statePath/$k", applied)).sum
+    val folded = Seq("rows", "sig3", "five", "bench5").map(k =>
+      new StateDir(sp, s"$statePath/$k").compact(StateDir.AppendIndex, applied)).sum
     // sweep the arrival journal: only the MAX `_ARR_` marker feeds the
     // rewind guard, so markers below it are dead weight that would
     // otherwise accumulate one file per batch forever — and keep the
@@ -917,20 +734,9 @@ object StreamOps {
     // below it still rejects, and a crash-retry of the max itself is
     // excluded as the batch's own marker exactly as before. Superseded
     // `_ARRBASE_` markers sweep the same way (only the max is read).
-    val (fs, root) = rollupFs(sp, statePath)
-    if (fs.exists(root)) {
-      val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      for (prefix <- Seq("_ARR_", "_ARRBASE_")) {
-        // toLongOption: a stray non-numeric suffix (a copy tool's
-        // `_ARR_5.tmp`, an inspection artifact) must not fail the
-        // whole compaction pass — non-conforming names are ignored
-        val ids = names.filter(_.startsWith(prefix))
-          .flatMap(n => n.stripPrefix(prefix).toLongOption)
-        if (ids.nonEmpty) ids.filter(_ < ids.max).foreach { id =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"$prefix$id"), false)
-        }
-      }
-    }
+    val root = new StateDir(sp, statePath)
+    for (prefix <- Seq(StateDir.Arrival, StateDir.ArrivalBase))
+      root.deleteBelow(prefix, root.maxId(prefix, Long.MinValue))
     folded
   }
 
@@ -959,71 +765,15 @@ object StreamOps {
     * base that was journaled. */
   def resumePipelineAt(sp: SparkSession, statePath: String,
                        fromArr: Long = -1L): Long = {
-    val (fs, root) = rollupFs(sp, statePath)
-    val names: Seq[String] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-    // toLongOption everywhere these markers parse: a stray
-    // non-numeric sibling (`_ARR_5.tmp`) is inspection debris, not a
-    // reason to fail recovery
-    val journaled = names.filter(_.startsWith("_ARR_"))
-      .flatMap(n => n.stripPrefix("_ARR_").toLongOption)
-      .foldLeft(-1L)(math.max)
+    val root = new StateDir(sp, statePath)
+    val journaled = root.maxId(StateDir.Arrival, -1L)
     val base = if (fromArr >= 0) fromArr else journaled + 1
     require(base > journaled,
       s"resumePipelineAt: base $base would rewind the journaled arrival " +
         s"sequence (max journaled $journaled)")
-    fs.mkdirs(root)
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_ARRBASE_$base"), true)
-      .close()
-    names.filter(n => n.startsWith("_ARRBASE_") &&
-        n.stripPrefix("_ARRBASE_").toLongOption.exists(_ < base))
-      .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), false))
+    root.mark(s"${StateDir.ArrivalBase}$base")
+    root.deleteBelow(StateDir.ArrivalBase, base)
     base
-  }
-
-  private def compactAppendKind(sp: SparkSession, kindRoot: String,
-                                maxEligible: Long): Long = {
-    val (fs, root) = rollupFs(sp, kindRoot)
-    if (!fs.exists(root)) return 0L
-    val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val cIds = names.collect {
-      case n if n.startsWith("_AIDX_") => n.stripPrefix("_AIDX_").toLong
-    }
-    val base = if (cIds.isEmpty) -1L else cIds.max
-    val bIds = names.collect {
-      case n if n.startsWith("b=") => n.stripPrefix("b=").toLong
-    }.filter(id => id > base && id <= maxEligible)
-    val pieces = (if (base >= 0) Seq(s"$root/c=$base") else Nil) ++
-      bIds.sorted.map(id => s"$root/b=$id")
-    if (bIds.isEmpty || pieces.size < 2) return 0L
-    val maxId = math.max(base, bIds.max)
-    sp.read.parquet(pieces: _*)
-      .write.mode("overwrite").parquet(s"$root/c=$maxId")
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_AIDX_$maxId"), true)
-      .close() // commit point
-    names.foreach {
-      case n if n.startsWith("b=") && n.stripPrefix("b=").toLong <= maxId =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), true)
-      case n if n.startsWith("c=") && n.stripPrefix("c=").toLong < maxId =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), true)
-      case n if n.startsWith("_AIDX_") && n.stripPrefix("_AIDX_").toLong < maxId =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), false)
-      case _ => ()
-    }
-    pieces.size.toLong
-  }
-
-  private def readAppendState(sp: SparkSession, statePath: String,
-                              kind: String, schemaDDL: String,
-                              except: Long = Long.MinValue): DataFrame = {
-    val dirs = batchDirs(sp, statePath, kind, except)
-    if (dirs.isEmpty)
-      sp.createDataFrame(sp.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
-    else sp.read.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
-      .parquet(dirs: _*)
   }
 
   /** CONTINUOUSLY-MAINTAINED corpus pipeline: each micro-batch of
@@ -1103,18 +853,13 @@ object StreamOps {
 
   private[graft] def applyPipelineBatch(batch: org.apache.spark.sql.Dataset[Row],
                                         statePath: String, batchId: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val sp = batch.sparkSession
-    val hitsPath = s"$statePath/hits"
-    val (fs, root) = rollupFs(sp, statePath)
-    val rootNames: Seq[String] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
+    val root = new StateDir(sp, statePath)
     // a state dir from the retired doc-id-order layout journals
     // `_MAXID_` markers this maintainer neither reads nor can translate
     // (they recorded a max DOC id, not an arrival sequence) — folding
     // on top of one silently voids the rewind guard; reject LOUDLY
-    require(!rootNames.exists(_.startsWith("_MAXID_")),
+    require(!root.has(StateDir.LegacyMaxId),
       s"maintainPipeline: $statePath carries _MAXID_ journals from the " +
         "retired doc-id-order layout; that guard state cannot be migrated " +
         "to the (arr, doc_id) arrival key — rebuild the state or start a " +
@@ -1123,43 +868,51 @@ object StreamOps {
     // rewound CHECKPOINT: a fresh query restarts batchIds at 0, and
     // the base maps them past everything already journaled so the
     // arrival sequence stays monotone across the recovery
-    val arrBase = rootNames.filter(_.startsWith("_ARRBASE_"))
-      .flatMap(n => n.stripPrefix("_ARRBASE_").toLongOption)
-      .foldLeft(0L)(math.max)
-    val arr = arrBase + batchId
-    val committed = committedVersions(sp, hitsPath)
-    if (arr <= lastAppliedStream(sp, hitsPath))
-      return // at-least-once replay: already applied (b= dirs included)
-
-    // ---- sequence journal: one empty `_ARR_<arr>` file per batch
-    // (markers below the max are swept by [[compactPipelineIndex]];
-    // only the max feeds this guard). The arrival stamp IS the base-
-    // offset batchId; the only guard left is that the batch SEQUENCE
-    // is fresh — an arrival at or below one already journaled
-    // (excluding this batch's own crash-retry marker) means a
-    // restarted query with a rewound checkpoint is about to corrupt
-    // the arrival key, and that fails LOUDLY instead of folding.
-    // Recovery path: [[resumePipelineAt]].
-    val priorArr: Long = rootNames.filter(_.startsWith("_ARR_"))
-      .flatMap(n => n.stripPrefix("_ARR_").toLongOption)
-      .filter(_ != arr)
-      .foldLeft(Long.MinValue)(math.max)
-    require(arr > priorArr,
-      s"maintainPipeline: arrival-sequence violation (arrival $arr ≤ " +
-        s"journaled $priorArr) — a rewound checkpoint over live state would " +
-        "corrupt the (arr, doc_id) arrival key; after restoring state from " +
-        "a backup, call resumePipelineAt(statePath) before restarting")
-    def journalArr(): Unit =
-      fs.create(new org.apache.hadoop.fs.Path(root, s"_ARR_$arr"), true)
-        .close()
-    if (batch.isEmpty) { // empty batch: advance the replay gate only
-      val prevHits = readVersioned(sp, hitsPath, HitsSchema).localCheckpoint(true)
-      journalArr()
-      commitVersioned(sp, hitsPath, nextVersion(committed, arr), prevHits,
-        committed, arr)
-      return
+    val arr = root.maxId(StateDir.ArrivalBase, 0L) + batchId
+    // the replay gate covers the b= dirs too
+    new StateDir(sp, s"$statePath/hits").applyOnce(arr) {
+      // ---- sequence journal: one empty `_ARR_<arr>` file per batch
+      // (markers below the max are swept by [[compactPipelineIndex]];
+      // only the max feeds this guard). The arrival stamp IS the base-
+      // offset batchId; the only guard left is that the batch SEQUENCE
+      // is fresh — an arrival at or below one already journaled
+      // (excluding this batch's own crash-retry marker) means a
+      // restarted query with a rewound checkpoint is about to corrupt
+      // the arrival key, and that fails LOUDLY instead of folding.
+      // Recovery path: [[resumePipelineAt]].
+      val priorArr = root.ids(StateDir.Arrival).filter(_ != arr)
+        .foldLeft(Long.MinValue)(math.max)
+      require(arr > priorArr,
+        s"maintainPipeline: arrival-sequence violation (arrival $arr ≤ " +
+          s"journaled $priorArr) — a rewound checkpoint over live state would " +
+          "corrupt the (arr, doc_id) arrival key; after restoring state from " +
+          "a backup, call resumePipelineAt(statePath) before restarting")
+      // an empty batch advances the replay gate only
+      val nextHits =
+        if (batch.isEmpty) readHits(sp, statePath).localCheckpoint(true)
+        else foldPipelineBatch(batch, statePath, arr)
+      // journal the arrival sequence, then commit (the version marker is
+      // the replay gate; every write before it is idempotent mode-overwrite)
+      root.mark(s"${StateDir.Arrival}$arr")
+      nextHits
     }
+  }
 
+  private def readHits(sp: SparkSession, statePath: String): DataFrame =
+    new StateDir(sp, s"$statePath/hits").read(HitsSchema)
+
+  private def readAppendState(sp: SparkSession, statePath: String, kind: String,
+                              schemaDDL: String,
+                              except: Long = Long.MinValue): DataFrame =
+    new StateDir(sp, s"$statePath/$kind").readPieces(StateDir.AppendIndex, schemaDDL, except)
+
+  /** One non-empty batch through the pipeline's stages, stamped with
+    * arrival `arr`: writes its append pieces and returns the next hits
+    * table. */
+  private def foldPipelineBatch(batch: org.apache.spark.sql.Dataset[Row],
+                                statePath: String, arr: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val sp = batch.sparkSession
     // ---- per-doc signals, ONCE (the shared projection), stamped with
     // this batch's arrival sequence — the order every rule keys on
     val sig = graft.pipelines.Corpus.signalFrame(
@@ -1245,8 +998,7 @@ object StreamOps {
       .groupBy(col("doc").as("doc_id")).agg(count(lit(1)).as("n_hits"))
     val hitsIncr = fivePrior.join(benchDelta, Seq("sh"))
       .groupBy(col("doc").as("doc_id")).agg(count(lit(1)).as("n_hits"))
-    val prevHits = readVersioned(sp, hitsPath, HitsSchema)
-    val nextHits = prevHits.unionByName(hitsNew).unionByName(hitsIncr)
+    val nextHits = readHits(sp, statePath).unionByName(hitsNew).unionByName(hitsIncr)
       .groupBy("doc_id").agg(sum("n_hits").as("n_hits"))
       .localCheckpoint(true)
 
@@ -1259,12 +1011,7 @@ object StreamOps {
         coalesce(col("s3"), lit(false)).as("s3"),
         coalesce(col("s4"), lit(false)).as("s4"))
     rowsOut.write.mode("overwrite").parquet(s"$statePath/rows/b=$arr")
-
-    // ---- journal the arrival sequence, then commit (the version marker
-    // is the replay gate; everything above is idempotent mode-overwrite)
-    journalArr()
-    commitVersioned(sp, hitsPath, nextVersion(committed, arr), nextHits,
-      committed, arr)
+    nextHits
   }
 
   /** Read face of [[maintainPipeline]]: the SAME 8 audit rows as the
@@ -1276,7 +1023,7 @@ object StreamOps {
     import graft.pipelines.Corpus
     val rows = readAppendState(sp, statePath, "rows", RowsSchema)
       .localCheckpoint(true)
-    val hits = readVersioned(sp, s"$statePath/hits", HitsSchema)
+    val hits = readHits(sp, statePath)
     val s1 = rows.filter(col("keep_gopher"))
     val s3 = rows.filter(col("s3"))
     val s4 = rows.filter(col("s4"))
@@ -1393,13 +1140,12 @@ object StreamOps {
                        exit_z: Double, pct_return: java.lang.Double,
                        held_rows: Long)
 
-  /** F2, streaming: the z-score FSM as flatMapGroupsWithState — same
-    * transition rules as Backtest.zscoreReversion (entry at |z| ≥
-    * entryZ, exit when z re-enters ±exitZ or the max-hold time stop
-    * fires), with the open position AND the row-index clock persisted
-    * in GroupState between micro-batches. Warm-up rows (NaN z or price)
-    * are skipped but still advance the clock, exactly like the batch
-    * fold. */
+  /** F2, streaming: [[Backtest.zscoreReversion]]'s FSM core as
+    * flatMapGroupsWithState (entry at |z| ≥ entryZ, exit when z re-enters
+    * ±exitZ or the max-hold time stop fires), with the open position AND
+    * the row-index clock persisted in GroupState between micro-batches.
+    * Rows with a NaN z or price make no decision but still advance the
+    * clock, exactly like the batch fold. */
   def zscoreReversionStream(ticks: org.apache.spark.sql.Dataset[ZTickIn],
                             entryZ: Double, exitZ: Double, maxHold: Int)
       : org.apache.spark.sql.Dataset[ZTradeOut] = {
@@ -1408,48 +1154,30 @@ object StreamOps {
       .flatMapGroupsWithState[ZState, ZTradeOut](
           OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[ZTickIn], state: GroupState[ZState]) =>
-          val sorted = rows.toSeq.sortBy(_.ts)
-          var st = state.getOption.getOrElse(ZState(0L, null, 0L, 0L, 0.0, 0.0))
-          var idx = st.idx
-          var side = st.side
-          var entryIdx = st.entryIdx
-          var entryTs = st.entryTs
-          var entryPrice = st.entryPrice
-          var entryZv = st.entryZ
           val out = Seq.newBuilder[ZTradeOut]
-          for (r <- sorted) {
-            if (!r.price.isNaN && !r.z.isNaN) {
-              if (side == null) {
-                if (r.z <= -entryZ) {
-                  side = "long"; entryIdx = idx; entryTs = r.ts
-                  entryPrice = r.price; entryZv = r.z
-                } else if (r.z >= entryZ) {
-                  side = "short"; entryIdx = idx; entryTs = r.ts
-                  entryPrice = r.price; entryZv = r.z
-                }
-              } else {
-                val held = idx - entryIdx
-                val exit = (side == "long" && r.z >= -exitZ) ||
-                           (side == "short" && r.z <= exitZ) || held >= maxHold
-                if (exit) {
-                  out += ZTradeOut(key, side, entryTs, r.ts, entryPrice, r.price,
-                    entryZv, r.z, Backtest.pctReturn(side, entryPrice, r.price), held)
-                  side = null
-                }
-              }
-            }
-            idx += 1
+          val fsm = new Backtest.ZscoreFsm[Long](entryZ, exitZ, maxHold) {
+            protected def close(ts: Long, p: Double, zv: Double,
+                                pct: java.lang.Double, held: Long): Unit =
+              out += ZTradeOut(key, side, entryTs, ts, entryPrice, p, entryZv, zv,
+                pct, held)
           }
-          state.update(ZState(idx, side, entryIdx, entryTs, entryPrice, entryZv))
+          state.getOption.foreach { st =>
+            fsm.idx = st.idx; fsm.side = st.side; fsm.entryIdx = st.entryIdx
+            fsm.entryTs = st.entryTs; fsm.entryPrice = st.entryPrice
+            fsm.entryZv = st.entryZ
+          }
+          rows.toSeq.sortBy(_.ts).foreach(r => fsm.step(r.ts, r.price, r.z))
+          state.update(ZState(fsm.idx, fsm.side, fsm.entryIdx, fsm.entryTs,
+            fsm.entryPrice, fsm.entryZv))
           out.result().iterator
       }
   }
 
-  /** F1, streaming: the mean-reversion FSM as flatMapGroupsWithState —
-    * the same transition rules as Backtest.meanReversion, with the open
-    * position persisted in GroupState between micro-batches. Rows within
-    * a batch are processed in event-time order; cross-batch order is the
-    * source's responsibility (block-ordered logs). */
+  /** F1, streaming: [[Backtest.meanReversion]]'s FSM core as
+    * flatMapGroupsWithState, with the open position persisted in
+    * GroupState between micro-batches. Rows within a batch are processed
+    * in event-time order; cross-batch order is the source's
+    * responsibility (block-ordered logs). */
   def meanReversionStream(ticks: org.apache.spark.sql.Dataset[TickIn],
                           thr: Double): org.apache.spark.sql.Dataset[TradeOut] = {
     import ticks.sparkSession.implicits._
@@ -1457,29 +1185,18 @@ object StreamOps {
       .flatMapGroupsWithState[Position, TradeOut](
           OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[Position]) =>
-          val sorted = rows.toSeq.sortBy(_.ts)
-          var pos: Option[Position] = state.getOption
           val out = Seq.newBuilder[TradeOut]
-          for (r <- sorted) {
-            pos match {
-              case None =>
-                if (r.dev <= -thr) pos = Some(Position("long", r.ts, r.price))
-                else if (r.dev >= thr) pos = Some(Position("short", r.ts, r.price))
-              case Some(p) =>
-                val exit = (p.side == "long" && r.dev >= 0) ||
-                           (p.side == "short" && r.dev <= 0)
-                if (exit) {
-                  out += TradeOut(key, p.side, p.entryTs, r.ts,
-                    p.entryPrice, r.price,
-                    Backtest.pctReturn(p.side, p.entryPrice, r.price))
-                  pos = None
-                }
-            }
+          val fsm = new Backtest.MeanReversionFsm[Long](thr) {
+            protected def close(ts: Long, p: Double, pct: java.lang.Double): Unit =
+              out += TradeOut(key, side, entryTs, ts, entryPrice, p, pct)
           }
-          pos match {
-            case Some(p) => state.update(p)
-            case None => state.remove()
+          state.getOption.foreach { pos =>
+            fsm.side = pos.side; fsm.entryTs = pos.entryTs
+            fsm.entryPrice = pos.entryPrice
           }
+          rows.toSeq.sortBy(_.ts).foreach(r => fsm.step(r.ts, r.price, r.dev))
+          if (fsm.side == null) state.remove()
+          else state.update(Position(fsm.side, fsm.entryTs, fsm.entryPrice))
           out.result().iterator
       }
   }

@@ -81,6 +81,26 @@ class BacktestSpec extends SparkSpec {
     assert(zs(0).getInt(9) == 1)
   }
 
+  test("a NaN price makes no decision in either FSM; the F2 clock still advances") {
+    // t=1 and t=3 carry a NaN price with a signal that would open (t=1)
+    // or close (t=3): the position opens at t=2 and closes at t=4
+    val nan = Double.NaN
+    val mr = Backtest.meanReversion(
+      Seq(("p", 1L, nan, -0.6), ("p", 2L, 10.0, -0.6), ("p", 3L, nan, 0.1),
+        ("p", 4L, 12.0, 0.1)).toDF("k", "t", "px", "dev"),
+      "k", "t", "px", "dev", thr = 0.5).collect()
+    assert(mr.map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4),
+      r.getDouble(5))).toSeq == Seq(("long", 2L, 4L, 10.0, 12.0)))
+    assert(math.abs(mr(0).getDouble(6) - 0.2) < 1e-12)
+    val zs = Backtest.zscoreReversion(
+      Seq(("p", 1L, nan, -2.5), ("p", 2L, 10.0, -2.5), ("p", 3L, nan, -0.1),
+        ("p", 4L, 11.0, -0.1)).toDF("k", "t", "px", "z"),
+      "k", "t", "px", "z", entryZ = 2.0, exitZ = 0.2, maxHold = 100).collect()
+    assert(zs.map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4),
+      r.getDouble(5), r.getInt(9))).toSeq == Seq(("long", 2L, 4L, 10.0, 11.0, 2)))
+    assert(math.abs(zs(0).getDouble(8) - 0.1) < 1e-12)
+  }
+
   /** Random walk per key with null and short constant runs, and prices. */
   private def series(seed: Long, keys: Seq[(String, Int)], maxRun: Int) = {
     val rnd = new scala.util.Random(seed)

@@ -80,6 +80,22 @@ class MaintenanceSpec extends SparkSpec {
     assert(StreamOps.lastAppliedStream(spark, statePath) == 2L)
   }
 
+  test("an unreadable _WATERMARK fails the apply instead of dropping the late-op gate") {
+    val statePath = java.nio.file.Files
+      .createTempDirectory("vacuum_unreadable").toString + "/state"
+    StreamOps.applyMergeBatch(mergeBatch(Seq(
+      (1L, "2024-01-01 00:00:00", 1L, "click", 1.0))), statePath, 0L)
+    // the watermark exists but cannot be read: a directory in its place
+    new java.io.File(s"$statePath/_WATERMARK").mkdirs()
+    intercept[java.io.IOException] {
+      StreamOps.applyMergeBatch(mergeBatch(Seq(
+        (2L, "2024-01-02 00:00:00", 2L, "click", 2.0))), statePath, 1L)
+    }
+    assert(StreamOps.lastAppliedStream(spark, statePath) == 0L)
+    assert(StreamOps.readMergeTable(spark, statePath)
+      .select("user_id").as[Long].collect().toSet == Set(1L))
+  }
+
   test("scheduled vacuum: tombstones age out automatically behind the lag") {
     val statePath = java.nio.file.Files
       .createTempDirectory("auto_vacuum").toString + "/state"
@@ -181,6 +197,15 @@ class MaintenanceSpec extends SparkSpec {
     val after = StreamOps.readCcState(spark, statePath)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(after == want, "post-compaction ingest diverged")
+  }
+
+  test("compactCcIndex: an index of one append dir is already one run") {
+    val statePath = java.nio.file.Files
+      .createTempDirectory("cc_one_piece").toString + "/state"
+    StreamOps.applyCcBatch(Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").limit(20), statePath, 0L)
+    assert(StreamOps.compactCcIndex(spark, statePath) == 0)
+    assert(new java.io.File(s"$statePath/index").list().toSet.contains("b=0"))
   }
 
   test("compaction: content-neutral, bounded file count, better probe locality") {

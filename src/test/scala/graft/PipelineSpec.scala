@@ -100,7 +100,7 @@ class PipelineSpec extends SparkSpec {
     // POISONED orphan dirs (wrong rows under this batch's own b=1 paths)
     // plus its _ARR_1 journal (the crash window between journal and
     // commit). The retry must carve its own dirs out of every
-    // prior-state read (batchDirs' `except`) and overwrite them — if
+    // prior-state read (StateDir.pieces' `except`) and overwrite them — if
     // any orphan leaks into the retry as "prior state", the planted
     // kept_hash collision wrongly dedups a real doc, the planted five/
     // bench5 rows corrupt the decontam counts, and the final audit

@@ -305,6 +305,26 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("maintainRollup: a stray non-numeric marker name is ignored, not fatal") {
+    val base = java.nio.file.Files.createTempDirectory("rollup_stray").toString
+    val mk = (n: Int) => Seq.tabulate(n)(i =>
+        ("click", new java.sql.Timestamp(86400000L * (i % 2)), 1.5, i.toLong))
+      .toDF("event_type", "ts", "value", "event_id")
+    def rows(p: String) = StreamOps.readRollup(spark, p)
+      .orderBy("event_type", "day").collect().toSeq
+    for (p <- Seq("clean", "stray")) {
+      StreamOps.applyRollupBatch(mk(10), s"$base/$p", 0L)
+      StreamOps.applyRollupBatch(mk(4), s"$base/$p", 1L)
+    }
+    // a copy tool's or an editor's leftover next to the real markers
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/stray/_COMMIT_7.tmp"),
+      "7".getBytes("UTF-8"))
+    assert(rows(s"$base/stray") == rows(s"$base/clean"))
+    for (p <- Seq("clean", "stray")) StreamOps.applyRollupBatch(mk(6), s"$base/$p", 2L)
+    assert(rows(s"$base/stray") == rows(s"$base/clean"))
+    assert(rows(s"$base/clean").map(_.getLong(2)).sum == 20L)
+  }
+
   test("resampleLastStream matches batch resampleLast after watermark close") {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)]
@@ -639,5 +659,87 @@ class StreamingSpec extends SparkSpec {
     assert(zgot.map(t => (t.side, t.entry_ts, t.exit_ts, t.pct_return, t.held_rows))
       .toSeq == zbatch.toSeq)
     assert(zgot.map(_.pct_return).toSeq == Seq(null, java.lang.Double.valueOf(0.5)))
+  }
+
+  test("streaming FSMs: a NaN price makes no decision, as in batch") {
+    import graft.streaming.StreamOps.{ZTickIn, ZTradeOut}
+    implicit val sc = spark.sqlContext
+    val nan = Double.NaN
+    // the NaN rows would open (t=1) and close (t=3); the entry crosses
+    // the micro-batch boundary
+    val ticks = Seq(TickIn("p", 1L, nan, -0.6), TickIn("p", 2L, 10.0, -0.6),
+      TickIn("p", 3L, nan, 0.1), TickIn("p", 4L, 12.0, 0.1))
+    val in = MemoryStream[TickIn]
+    val q = StreamOps.meanReversionStream(in.toDS(), thr = 0.5)
+      .writeStream.format("memory").queryName("fsm_nan_out")
+      .outputMode("append").start()
+    in.addData(ticks.take(2): _*); q.processAllAvailable()
+    in.addData(ticks.drop(2): _*); q.processAllAvailable()
+    val got = spark.table("fsm_nan_out").as[TradeOut].collect()
+      .map(t => (t.side, t.entry_ts, t.exit_ts, t.entry_price, t.pct_return))
+    q.stop()
+    val batch = Backtest.meanReversion(
+        ticks.toDF("k", "ts", "px", "dev"), "k", "ts", "px", "dev", 0.5)
+      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4), r.getAs[java.lang.Double](6)))
+    assert(got.toSeq == batch.toSeq)
+    assert(got.map(_._2).toSeq == Seq(2L) && got(0)._4 == 10.0)
+
+    val zticks = Seq(ZTickIn("p", 1L, nan, -2.5), ZTickIn("p", 2L, 10.0, -2.5),
+      ZTickIn("p", 3L, nan, -0.1), ZTickIn("p", 4L, 11.0, -0.1))
+    val zin = MemoryStream[ZTickIn]
+    val zq = StreamOps.zscoreReversionStream(zin.toDS(),
+        entryZ = 2.0, exitZ = 0.2, maxHold = 100)
+      .writeStream.format("memory").queryName("zfsm_nan_out")
+      .outputMode("append").start()
+    zin.addData(zticks.take(2): _*); zq.processAllAvailable()
+    zin.addData(zticks.drop(2): _*); zq.processAllAvailable()
+    val zgot = spark.table("zfsm_nan_out").as[ZTradeOut].collect()
+      .map(t => (t.side, t.entry_ts, t.exit_ts, t.entry_price, t.pct_return, t.held_rows))
+    zq.stop()
+    val zbatch = Backtest.zscoreReversion(
+        zticks.map(r => (r.key, r.ts, r.price, r.z)).toDF("k", "ts", "px", "z"),
+        "k", "ts", "px", "z", entryZ = 2.0, exitZ = 0.2, maxHold = 100)
+      .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4), r.getAs[java.lang.Double](8), r.getInt(9).toLong))
+    assert(zgot.toSeq == zbatch.toSeq)
+    assert(zgot.map(t => (t._2, t._3, t._6)).toSeq == Seq((2L, 4L, 2L)))
+  }
+
+  test("streaming FSMs: an open position survives a restart on the same checkpoint") {
+    import graft.streaming.StreamOps.{ZTickIn, ZTradeOut}
+    import org.apache.spark.sql.{Dataset, Encoder}
+    val root = java.nio.file.Files.createTempDirectory("fsm_restart").toString
+    // each FSM opens in the first query and closes in the second, a new
+    // query on the same checkpoint: the entry, and F2's hold clock, can
+    // only come from the state the first query checkpointed
+    def twoRuns[A: Encoder, B: Encoder](name: String, first: Seq[A], second: Seq[A])(
+        fsm: Dataset[A] => Dataset[B]): Seq[B] = {
+      val dir = s"$root/$name"
+      for (rows <- Seq(first, second)) {
+        spark.createDataset(rows).write.mode("append").parquet(s"$dir/in")
+        val q = fsm(spark.readStream.schema(implicitly[Encoder[A]].schema)
+            .parquet(s"$dir/in").as[A])
+          .writeStream.format("parquet").option("path", s"$dir/out")
+          .option("checkpointLocation", s"$dir/ck").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      spark.read.parquet(s"$dir/out").as[B].collect().toSeq
+    }
+    val got = twoRuns[TickIn, TradeOut]("f1",
+      Seq(TickIn("p", 1L, 10.0, -0.6), TickIn("p", 2L, 11.0, -0.1)), // open long
+      Seq(TickIn("p", 3L, 12.0, 0.2)))(                               // exit
+      StreamOps.meanReversionStream(_, thr = 0.5))
+    assert(got.map(t => (t.side, t.entry_ts, t.exit_ts, t.entry_price, t.exit_price))
+      == Seq(("long", 1L, 3L, 10.0, 12.0)))
+    val zgot = twoRuns[ZTickIn, ZTradeOut]("f2",
+      Seq(ZTickIn("p", 1L, 10.0, Double.NaN), // clock 0 → 1
+        ZTickIn("p", 2L, 10.0, -2.5),         // open long at idx 1
+        ZTickIn("p", 3L, 10.5, -1.0)),        // held 1
+      Seq(ZTickIn("p", 4L, 11.0, -1.0),       // held 2
+        ZTickIn("p", 5L, 11.5, -1.0)))(       // held 3 >= maxHold → time stop
+      StreamOps.zscoreReversionStream(_, entryZ = 2.0, exitZ = 0.2, maxHold = 3))
+    assert(zgot.map(t => (t.side, t.entry_ts, t.exit_ts, t.entry_price, t.entry_z,
+      t.held_rows)) == Seq(("long", 2L, 5L, 10.0, -2.5, 3L)))
   }
 }
