@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment lines of source files.
 
-Usage: scripts/ncnb.py FILE[:FROM-TO] ...
+Usage: scripts/ncnb.py FILE[:FROM-TO] ... | DIR ...
 
 Each physical line counts once when any code is left on it after comments
 are removed; lines are never joined or split. `//` line comments and
@@ -9,8 +9,11 @@ are removed; lines are never joined or split. `//` line comments and
 comment markers inside string and character literals are not. Files
 ending in `.py` or `.sh` use `#` line comments instead. An optional
 `:FROM-TO` suffix (1-based, inclusive) counts only that line range.
+A directory argument counts every `*.scala`, `*.py` and `*.sh` file under
+it, recursively, and prints one line for the directory.
 Prints one line per argument and, for several arguments, a total.
 """
+import os
 import sys
 
 
@@ -76,6 +79,10 @@ def code_lines(text, hash_comments=False):
 
 
 def count(arg):
+    if os.path.isdir(arg):
+        return sum(count(os.path.join(d, f))
+                   for d, _, files in os.walk(arg) for f in files
+                   if f.endswith((".scala", ".py", ".sh")))
     path, _, rng = arg.partition(":")
     with open(path, encoding="utf-8") as f:
         flags = code_lines(f.read(), path.endswith((".py", ".sh")))

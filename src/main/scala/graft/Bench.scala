@@ -282,8 +282,7 @@ object Bench {
     // each query's .count() fully consumes its result, so the blocks
     // are dead weight that only raises executor memory pressure for
     // every LATER query — measured as a uniform cross-query slowdown
-    // as the set grows. JVM-object caches (the fitted-model LRU) are
-    // untouched, so deliberate cross-query reuse keeps its speedup.
+    // as the set grows.
     def sweep(): Unit = {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -1875,10 +1875,10 @@ object DataQueries {
 
   // ------------------------------------------------------------------
   // Multimodal: synthetic media fixtures (deterministic sample/pixel
-  // formulas over doc_id) are ENCODED into real WAV/BMP/PPM containers,
-  // then DECODED by the pure-JVM codecs (Multimodal.scala) and reduced
-  // to integer statistics. The DuckDB oracles recompute the statistics
-  // ANALYTICALLY from the same formulas — they never see the bytes —
+  // formulas over doc_id) are ENCODED into real WAV/image containers,
+  // then DECODED (Multimodal.scala: hand-written WAV/PPM/QOI, the JDK's
+  // ImageIO for JPEG/GIF/PNG/BMP) and reduced to integer statistics.
+  // The DuckDB oracles recompute the statistics ANALYTICALLY from the same formulas — they never see the bytes —
   // so any encode/decode defect (byte order, header layout, row
   // padding, bottom-up rows, sign extension) hash-fails the gate.
   // Byte-level spec conformance is separately pinned by golden tests.
@@ -2043,7 +2043,7 @@ object DataQueries {
     perDoc(s, d, nonNull(imageCols)) { doc =>
       val (w, h, rgb) = gradientImage(doc)
       losslessRow(doc,
-        if (doc % 2 == 0) Multimodal.encodeBmp24(w, h, rgb)
+        if (doc % 2 == 0) Multimodal.encodeImage("bmp", w, h, rgb)
         else Multimodal.encodePpm(w, h, rgb))
     }.orderBy("doc_id")
 
@@ -2098,17 +2098,16 @@ object DataQueries {
   }
 
   /** PNG twin of [[imageFeatures]]: identical formula pixels, but the
-    * bytes make the round trip through the COMPRESSED codec — deflate
-    * on encode, then chunk walk → inflate → per-scanline filter
-    * reconstruction on decode ([[Multimodal.decodePng]]). The oracle
-    * recomputes the stats analytically from the pixel formulas, so any
-    * defect anywhere in the zlib/filter path shifts a sum and fails
-    * the hash gate. Map-only partition-wise transform, like every
-    * codec query. */
+    * bytes make the round trip through the COMPRESSED codec (the JDK's
+    * ImageIO PNG writer and reader, via [[Multimodal.encodeImage]] and
+    * [[Multimodal.decodeImage]]). The oracle recomputes the stats
+    * analytically from the pixel formulas, so any defect in the
+    * round trip shifts a sum and fails the hash gate. Map-only
+    * partition-wise transform, like every codec query. */
   def pngFeatures(s: SparkSession, d: String): DataFrame =
     perDoc(s, d, nonNull(imageCols)) { doc =>
       val (w, h, rgb) = gradientImage(doc)
-      losslessRow(doc, Multimodal.encodePng(w, h, rgb))
+      losslessRow(doc, Multimodal.encodeImage("png", w, h, rgb))
     }.orderBy("doc_id")
 
   /** QOI leg of the codec family ([[Qoi]]): identical formula pixels
@@ -2123,16 +2122,15 @@ object DataQueries {
       losslessRow(doc, Qoi.encode(w, h, rgb))
     }.orderBy("doc_id")
 
-  /** JPEG leg of the codec family ([[Jpeg]]): identical formula pixels
-    * to [[pngFeatures]], but the round trip rides the LOSSY baseline
-    * path — RGB→YCbCr, 8×8 DCT, quantize, Annex-K Huffman entropy
-    * coding, then the full decode back. Because JPEG is lossy the
-    * oracle can't expect the decoded sums bit-for-bit; instead the
-    * query emits the ANALYTIC sums (which DuckDB replays exactly) plus
-    * `within_band`: decoded-vs-analytic max per-channel error ≤ 4 at
-    * q=1 (the measured DCT+color round-trip floor is 3). Structural
-    * fields (format sniff, decoded dims) stay exact. A defect anywhere
-    * in the DCT/quantizer/Huffman/marker path either breaks a
+  /** JPEG leg of the codec family: identical formula pixels to
+    * [[pngFeatures]], but the round trip rides the LOSSY baseline path
+    * (ImageIO at quality 1.0, 4:4:4: `Multimodal.encodeImage("jpg")`).
+    * Because JPEG is lossy the oracle can't expect the decoded sums
+    * bit-for-bit; instead the query emits the ANALYTIC sums (which
+    * DuckDB replays exactly) plus `within_band`: decoded-vs-analytic
+    * max per-channel error ≤ 4 (measured worst case 4 over doc ids
+    * 0..4999). Structural fields (format sniff, decoded dims) stay
+    * exact. A defect in the sampling or quality setup either breaks a
     * structural field or pushes a pixel out of band — both flip a cell
     * and fail the hash gate. Map-only partition-wise, like every codec
     * query. */
@@ -2140,8 +2138,8 @@ object DataQueries {
     perDoc(s, d, nonNull(imageCols + ", within_band BOOLEAN")) { doc =>
       val (w, h, rgb) = gradientImage(doc)
       val f = rgbSums(w, rgb)
-      val bytes = Jpeg.encode(w, h, rgb, q = 1)
-      val (dw, dh, dec) = Jpeg.decode(bytes)
+      val bytes = Multimodal.encodeImage("jpg", w, h, rgb)
+      val (dw, dh, dec) = Multimodal.decodeImage(bytes)
       Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
         f(0), f(1), f(2), f(3), maxErr(rgb, dec) <= 4)
     }.orderBy("doc_id")
@@ -2163,7 +2161,7 @@ object DataQueries {
           (_, y) => 20 + 4 * y + 10 * t + (doc % 40).toInt,
           (_, _) => 45 + 10 * t + (doc % 120).toInt)
       val clip = Multimodal.encodeMjpeg(
-        (0 until 4).map(t => Jpeg.encode(w, h, frame(t), q = 1)))
+        (0 until 4).map(t => Multimodal.encodeImage("jpg", w, h, frame(t))))
       val mid = frame(2)
       val f = rgbSums(w, mid)
       val (dw, dh, dec) = Multimodal.decodeMjpegFrame(clip, 2)
@@ -2173,18 +2171,18 @@ object DataQueries {
 
   /** GIF leg of the codec gate — the second COMPRESSED image format
     * (LZW vs PNG's deflate), and lossless: the decoded-pixel sums are
-    * EXACT, so unlike the JPEG legs there is no tolerance band — any
-    * defect anywhere in the palette/LZW/sub-block path shifts a sum
+    * EXACT, so unlike the JPEG legs there is no tolerance band — a
+    * lossy palette or an interlaced write that drops rows shifts a sum
     * and fails the hash gate. Doc-keyed 5-level banded pixels keep
     * the palette ≤125 colors. Map-only partition-wise. */
   def gifFeatures(s: SparkSession, d: String): DataFrame =
     perDoc(s, d, nonNull(imageCols)) { doc =>
       val (w, h) = imageDims(doc)
-      val bytes = Gif.encode(w, h,
+      val bytes = Multimodal.encodeImage("gif", w, h,
         pixels(w, h)((x, y) => (((x + y) % 5) * 36 + doc % 36).toInt,
           (x, y) => (((2 * x + y) % 5) * 30 + doc % 30).toInt,
           (x, y) => (((x + 3 * y) % 5) * 20 + doc % 20).toInt))
-      val (dw, dh, dec) = Gif.decode(bytes)
+      val (dw, dh, dec) = Multimodal.decodeImage(bytes)
       val f = rgbSums(dw, dec)
       Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
         f(0), f(1), f(2), f(3))
@@ -2193,9 +2191,10 @@ object DataQueries {
   /** 4:2:0 leg of the JPEG gate: smooth doc-keyed gradients (no mod-256
     * wraparound — box-downsampled chroma cannot follow sharp edges, so
     * the subsampled band is only meaningful on smooth chroma) through
-    * [[Jpeg.encode420]] → decode, banded at ≤8 per pixel (measured
-    * worst case 5 across the doc grid). Analytic sums exact; the
-    * subsampled write path rides the oracle gate, not just the spec. */
+    * `Multimodal.encodeImage("jpg420")` → decode, banded at ≤8 per
+    * pixel (measured worst case 4 over doc ids 0..4999). Analytic sums
+    * exact; the subsampled write path rides the oracle gate, not just
+    * the spec. */
   def jpeg420Features(s: SparkSession, d: String): DataFrame =
     perDoc(s, d, nonNull("doc_id BIGINT, format STRING, width BIGINT, " +
         "height BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT, " +
@@ -2204,28 +2203,23 @@ object DataQueries {
       val rgb = pixels(w, h)((x, _) => 40 + 3 * x + (doc % 60).toInt,
         (_, y) => 30 + 4 * y + (doc % 40).toInt, (_, _) => 55 + (doc % 150).toInt)
       val f = rgbSums(w, rgb)
-      val bytes = Jpeg.encode420(w, h, rgb, q = 1)
-      val (dw, dh, dec) = Jpeg.decode(bytes)
+      val bytes = Multimodal.encodeImage("jpg420", w, h, rgb)
+      val (dw, dh, dec) = Multimodal.decodeImage(bytes)
       Row(doc, Multimodal.detectFormat(bytes), dw.toLong, dh.toLong,
         f(0), f(1), f(2), maxErr(rgb, dec) <= 8)
     }.orderBy("doc_id")
 
-  /** PROGRESSIVE JPEG leg ([[Jpeg.decodeProgressive]] via the frame
-    * dispatcher): a real crawl is ~10% progressive (SOF2), so the
-    * multimodal pipeline must decode it, not reject it. The fixture
-    * bytes are synthesized by the JDK's ImageIO writer in progressive
-    * MODE_DEFAULT at quality 1.0 — its standard multi-scan script
-    * exercises spectral selection AND successive approximation (DC
-    * Al=1 + refinement, AC bands at Al=2/1/0) over 4:2:0 chroma; the
-    * DECODER under test is ours. The JDK writer is fixture synthesis
-    * here (this library ships no progressive encoder — encoding
-    * progressive is a size optimization, decoding it is a correctness
-    * requirement); determinism is the JDK implementation's, pinned by
-    * the hash gate itself. Smooth-gradient pixels keep the
+  /** PROGRESSIVE JPEG leg: a real crawl is ~10% progressive (SOF2),
+    * so the multimodal pipeline must decode it, not reject it.
+    * `Multimodal.encodeImage("jpgprog")` writes the JDK's progressive
+    * MODE_DEFAULT script at quality 1.0 — spectral selection AND
+    * successive approximation (DC Al=1 + refinement, AC bands at
+    * Al=2/1/0) over 4:2:0 chroma — and [[Multimodal.decodeImage]] reads
+    * it back. `n_scans` counts SOS markers, the structural proof the
+    * stream really is multi-scan. Smooth-gradient pixels keep the
     * subsampling loss tight: measured worst error 5 over doc ids
-    * 0..4095 at q=1.0, band set at 8. Analytic sums replay exactly in
-    * the oracle; a defect in any scan pass (DC refinement bit, AC
-    * EOB-run, correction-bit walk) shifts pixels out of band. */
+    * 0..4999, band set at 8. Analytic sums replay exactly in the
+    * oracle. */
   def jpegProgFeatures(s: SparkSession, d: String): DataFrame =
     perDoc(s, d, nonNull("doc_id BIGINT, format STRING, n_scans BIGINT, " +
         "width BIGINT, height BIGINT, sum_r BIGINT, sum_g BIGINT, " +
@@ -2235,29 +2229,10 @@ object DataQueries {
         (x, y) => (35 + 4 * x + y + (doc % 45)).toInt,
         (x, y) => (50 + x + 2 * y + (doc % 70)).toInt)
       val f = rgbSums(w, rgb)
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var i = 0
-      while (i < w * h) {
-        img.setRGB(i % w, i / w,
-          (rgb(3 * i) << 16) | (rgb(3 * i + 1) << 8) | rgb(3 * i + 2))
-        i += 1
-      }
-      val baos = new java.io.ByteArrayOutputStream
-      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-      val param = wr.getDefaultWriteParam
-      param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-      param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      param.setCompressionQuality(1.0f)
-      wr.setOutput(javax.imageio.ImageIO.createImageOutputStream(baos))
-      wr.write(null, new javax.imageio.IIOImage(img, null, null), param)
-      wr.dispose()
-      val bytes = baos.toByteArray
-      // count SOS markers: the structural proof the stream really
-      // is multi-scan progressive, pinned as a column
+      val bytes = Multimodal.encodeImage("jpgprog", w, h, rgb)
       val nScans = (0 until bytes.length - 1).count(j =>
         (bytes(j) & 0xff) == 0xff && (bytes(j + 1) & 0xff) == 0xda).toLong
-      val (dw, dh, dec) = Jpeg.decode(bytes)
+      val (dw, dh, dec) = Multimodal.decodeImage(bytes)
       Row(doc, Multimodal.detectFormat(bytes), nScans, dw.toLong,
         dh.toLong, f(0), f(1), f(2), maxErr(rgb, dec) <= 8)
     }.orderBy("doc_id")
@@ -2325,17 +2300,12 @@ object DataQueries {
       // are container-independent, so the analytic oracle is
       // untouched while every codec's round trip rides the gate
       val bytes = (doc % 4) match {
-        case 0 => Multimodal.encodeBmp24(w, h, rgb)
+        case 0 => Multimodal.encodeImage("bmp", w, h, rgb)
         case 1 => Multimodal.encodePpm(w, h, rgb)
         case 2 => Qoi.encode(w, h, rgb)
-        case _ => Multimodal.encodePng(w, h, rgb)
+        case _ => Multimodal.encodeImage("png", w, h, rgb)
       }
-      val (dw, dh, drgb) = Multimodal.detectFormat(bytes) match {
-        case "bmp" => Multimodal.decodeBmp(bytes)
-        case "ppm" => Multimodal.decodePpm(bytes)
-        case "qoi" => Qoi.decode(bytes)
-        case _ => Multimodal.decodePng(bytes)
-      }
+      val (dw, dh, drgb) = Multimodal.decodeImage(bytes)
       Row(doc, Multimodal.dHash(dw, dh, drgb))
     }
       .withColumn("rep",

@@ -4,6 +4,12 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import java.awt.color.ColorSpace
+import java.awt.image.BufferedImage
+import javax.imageio.{IIOImage, ImageIO, ImageReader, ImageTypeSpecifier, ImageWriteParam}
+import javax.imageio.metadata.{IIOMetadata, IIOMetadataNode}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+
 /** Multimodal-column operators for training-data pipelines: media
   * payloads travel as opaque `binary` columns with a typed metadata
   * struct; decode / feature-extract / frame-sample run as
@@ -11,19 +17,16 @@ import org.apache.spark.sql.types._
   * rows streamed through it — the Scala shape of a `mapInPandas`
   * batch UDF).
   *
-  * The codecs are REAL pure-JVM implementations of the three
-  * container formats simple enough to need no native library —
-  * WAV (RIFF PCM 16-bit), BMP (24-bit uncompressed) and PPM (P6) —
-  * written from the public format specs. Compressed formats
-  * (JPEG/MP3/H.264) would slot in behind the same
-  * [[decodeFeatures]] dispatch with a real codec dependency; the
-  * Spark-side plumbing (binary schema, per-partition init, feature
-  * shape) is identical. Byte-level conformance is pinned by golden
-  * tests (MultimodalSpec); end-to-end decode correctness is
-  * oracle-gated by q_media_features / q_image_features /
-  * q_media_neardup, whose DuckDB twins recompute the expected
-  * sample/pixel statistics analytically without ever touching the
-  * bytes.
+  * Codecs: WAV (RIFF PCM 16-bit, G.711 µ-law, IMA ADPCM) and PPM (P6)
+  * are written here from the public format specs, QOI in [[Qoi]];
+  * JPEG, GIF, PNG and BMP go through the JDK's javax.imageio plugins
+  * ([[encodeImage]], [[decodeImage]]). [[decodeImage]] is the one
+  * image-format dispatch; [[decodeFeatures]] adds WAV to it. Byte-level
+  * conformance is pinned by golden tests (MultimodalSpec); end-to-end
+  * decode correctness is oracle-gated by q_media_features /
+  * q_image_features / q_media_neardup, whose DuckDB twins recompute
+  * the expected sample/pixel statistics analytically without ever
+  * touching the bytes.
   */
 object Multimodal {
 
@@ -349,78 +352,6 @@ object Multimodal {
   }
 
   // ------------------------------------------------------------------
-  // BMP (24-bit uncompressed, BITMAPINFOHEADER) — rows bottom-up,
-  // BGR byte order, each row padded to a 4-byte boundary.
-  // ------------------------------------------------------------------
-
-  /** Encode top-down row-major RGB triples (3 ints/pixel, 0..255). */
-  def encodeBmp24(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
-    require(rgb.length == w * h * 3, "encodeBmp24: rgb length != w*h*3")
-    val rowSize = (w * 3 + 3) / 4 * 4
-    val dataSize = rowSize * h
-    val out = new Array[Byte](54 + dataSize)
-    out(0) = 'B'; out(1) = 'M'
-    le32(out, 2, 54 + dataSize)
-    le32(out, 10, 54)            // pixel-data offset
-    le32(out, 14, 40)            // BITMAPINFOHEADER
-    le32(out, 18, w)
-    le32(out, 22, h)             // positive → bottom-up
-    le16(out, 26, 1)             // planes
-    le16(out, 28, 24)            // bpp
-    le32(out, 30, 0)             // BI_RGB (uncompressed)
-    le32(out, 34, dataSize)
-    var y = 0
-    while (y < h) {
-      val srcRow = h - 1 - y     // file row y = image row h-1-y
-      var x = 0
-      while (x < w) {
-        val p = (srcRow * w + x) * 3
-        val o = 54 + y * rowSize + x * 3
-        out(o) = (rgb(p + 2) & 0xff).toByte     // B
-        out(o + 1) = (rgb(p + 1) & 0xff).toByte // G
-        out(o + 2) = (rgb(p) & 0xff).toByte     // R
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** Decode a 24-bit uncompressed BMP → (w, h, top-down RGB triples). */
-  def decodeBmp(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
-    require(bytes.length >= 54 && bytes(0) == 'B' && bytes(1) == 'M',
-      "decodeBmp: not a BMP")
-    val dataOff = rd32(bytes, 10)
-    val hdrSize = rd32(bytes, 14)
-    require(hdrSize >= 40, s"decodeBmp: unsupported header size $hdrSize")
-    val w = rd32(bytes, 18)
-    val hRaw = rd32(bytes, 22)
-    val bottomUp = hRaw > 0
-    val h = math.abs(hRaw)
-    val bpp = rd16(bytes, 28)
-    val comp = rd32(bytes, 30)
-    require(bpp == 24 && comp == 0,
-      s"decodeBmp: only 24bpp uncompressed supported (bpp=$bpp comp=$comp)")
-    val rowSize = (w * 3 + 3) / 4 * 4
-    val rgb = new Array[Int](w * h * 3)
-    var y = 0
-    while (y < h) {
-      val fileRow = if (bottomUp) h - 1 - y else y
-      var x = 0
-      while (x < w) {
-        val o = dataOff + fileRow * rowSize + x * 3
-        val p = (y * w + x) * 3
-        rgb(p) = bytes(o + 2) & 0xff     // R
-        rgb(p + 1) = bytes(o + 1) & 0xff // G
-        rgb(p + 2) = bytes(o) & 0xff     // B
-        x += 1
-      }
-      y += 1
-    }
-    (w, h, rgb)
-  }
-
-  // ------------------------------------------------------------------
   // PPM (P6 binary) — "P6\n<w> <h>\n255\n" + top-down RGB bytes.
   // ------------------------------------------------------------------
 
@@ -465,143 +396,105 @@ object Multimodal {
   }
 
   // ------------------------------------------------------------------
-  // PNG (truecolor 8-bit, non-interlaced) — the first COMPRESSED format
-  // a multimodal pipeline meets. Pure JVM: the zlib stream goes through
-  // java.util.zip.{Deflater, Inflater} (public platform API), CRC32
-  // through java.util.zip.CRC32. Spec: W3C PNG (RFC 2083) —
-  // https://www.w3.org/TR/png-3/ . Encoder emits filter 0 rows; the
-  // decoder reconstructs ALL five spec filters (None/Sub/Up/Average/
-  // Paeth), pinned by golden tests over hand-filtered streams.
+  // JPEG, GIF, PNG and BMP through the JDK's javax.imageio plugins.
+  // Streams are per call and in memory (no ImageIO temp-file cache),
+  // and a reader warning is an error: ImageIO otherwise returns a
+  // partial image for a truncated JPEG.
   // ------------------------------------------------------------------
 
-  private val PngSig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-    .map(_.toByte)
-
-  private def be32(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = ((v >>> 24) & 0xff).toByte; b(off + 1) = ((v >>> 16) & 0xff).toByte
-    b(off + 2) = ((v >>> 8) & 0xff).toByte; b(off + 3) = (v & 0xff).toByte
-  }
-  private def rdBe32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
-  private def pngChunk(typ: String, data: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](12 + data.length)
-    be32(out, 0, data.length)
-    typ.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, 4)
-    data.copyToArray(out, 8)
-    val crc = new java.util.zip.CRC32
-    crc.update(out, 4, 4 + data.length) // CRC covers type + data
-    be32(out, 8 + data.length, crc.getValue.toInt)
-    out
-  }
-
-  /** Encode top-down row-major RGB triples as a truecolor-8 PNG
-    * (one IDAT, every scanline filter 0). */
-  def encodePng(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
-    require(rgb.length == w * h * 3, "encodePng: rgb length != w*h*3")
-    val ihdr = new Array[Byte](13)
-    be32(ihdr, 0, w); be32(ihdr, 4, h)
-    ihdr(8) = 8  // bit depth
-    ihdr(9) = 2  // color type: truecolor RGB
-    // compression 0, filter method 0, interlace 0 (bytes 10..12 zero)
-    val raw = new Array[Byte](h * (1 + w * 3)) // filter byte + row
-    var y = 0
-    while (y < h) {
-      val o = y * (1 + w * 3) + 1 // raw(o-1) = 0: filter None
-      var i = 0
-      while (i < w * 3) { raw(o + i) = (rgb(y * w * 3 + i) & 0xff).toByte; i += 1 }
-      y += 1
+  /** Encode top-down row-major RGB triples (3 ints/pixel, 0..255) with
+    * an ImageIO writer. `format` is one of
+    *  - `jpg`: quality 1.0, every component sampled 1×1 (4:4:4);
+    *  - `jpg420`: quality 1.0, the JDK's default 4:2:0 sampling;
+    *  - `jpgprog`: `jpg420` written as a progressive multi-scan stream;
+    *  - `gif`: non-interlaced (the JDK's interlaced default loses rows
+    *    of small two-colour images); at most 256 distinct colours,
+    *    since the writer would otherwise quantize without a word;
+    *  - `png`: truecolor 8-bit; `bmp`: 24-bit uncompressed. */
+  def encodeImage(format: String, w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
+    require(rgb.length == w * h * 3, "encodeImage: rgb length != w*h*3")
+    require(rgb.forall(v => v >= 0 && v <= 255),
+      "encodeImage: channel value outside 0..255")
+    val packed = Array.tabulate(w * h)(i =>
+      (rgb(3 * i) << 16) | (rgb(3 * i + 1) << 8) | rgb(3 * i + 2))
+    require(format != "gif" || packed.distinct.length <= 256,
+      "encodeImage: gif needs at most 256 distinct colors")
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    img.setRGB(0, 0, w, h, packed, 0, w)
+    val writer = ImageIO.getImageWritersByFormatName(format match {
+      case "jpg" | "jpg420" | "jpgprog" => "jpg"
+      case "gif" | "png" | "bmp" => format
+      case other => throw new IllegalArgumentException(s"encodeImage: unknown format $other")
+    }).next()
+    val param = writer.getDefaultWriteParam
+    if (format.startsWith("jpg")) {
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(1.0f)
     }
-    val deflater = new java.util.zip.Deflater
-    deflater.setInput(raw); deflater.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    val bos = new java.io.ByteArrayOutputStream
-    while (!deflater.finished()) bos.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    PngSig ++ pngChunk("IHDR", ihdr) ++ pngChunk("IDAT", bos.toByteArray) ++
-      pngChunk("IEND", Array.empty[Byte])
-  }
-
-  /** Decode a truecolor-8 non-interlaced PNG → (w, h, top-down RGB
-    * triples). Walks chunks (multi-IDAT streams concatenate, ancillary
-    * chunks skip), inflates, then reconstructs per-scanline filters
-    * 0–4 exactly as specified (Paeth predictor included). Anything but
-    * 8-bit truecolor non-interlaced is a loud error, not a silent
-    * misdecode. */
-  def decodePng(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
-    require(bytes.length > 8 && PngSig.indices.forall(i => bytes(i) == PngSig(i)),
-      "decodePng: bad signature")
-    var off = 8
-    var w = -1; var h = -1
-    val idat = new java.io.ByteArrayOutputStream
-    var done = false
-    while (!done && off + 12 <= bytes.length) {
-      val len = rdBe32(bytes, off)
-      val typ = new String(bytes, off + 4, 4,
-        java.nio.charset.StandardCharsets.US_ASCII)
-      val body = off + 8
-      typ match {
-        case "IHDR" =>
-          w = rdBe32(bytes, body); h = rdBe32(bytes, body + 4)
-          val (depth, color, interlace) =
-            (bytes(body + 8), bytes(body + 9), bytes(body + 12))
-          require(depth == 8 && color == 2 && interlace == 0,
-            s"decodePng: only truecolor-8 non-interlaced supported" +
-              s" (depth=$depth color=$color interlace=$interlace)")
-        case "IDAT" => idat.write(bytes, body, len)
-        case "IEND" => done = true
-        case _ => // ancillary chunk: skip
+    if (format == "jpgprog") param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+    if (format == "gif") param.setProgressiveMode(ImageWriteParam.MODE_DISABLED)
+    val meta: IIOMetadata = if (format != "jpg") null else {
+      val m = writer.getDefaultImageMetadata(new ImageTypeSpecifier(img), param)
+      val tree = m.getAsTree(JpegMeta).asInstanceOf[IIOMetadataNode]
+      val specs = tree.getElementsByTagName("componentSpec")
+      for (i <- 0 until specs.getLength) {
+        val c = specs.item(i).asInstanceOf[IIOMetadataNode]
+        c.setAttribute("HsamplingFactor", "1"); c.setAttribute("VsamplingFactor", "1")
       }
-      off = body + len + 4 // + CRC
+      m.setFromTree(JpegMeta, tree)
+      m
     }
-    require(w > 0 && h > 0 && idat.size() > 0, "decodePng: missing IHDR/IDAT")
-    val stride = w * 3
-    val raw = new Array[Byte](h * (1 + stride))
-    val inflater = new java.util.zip.Inflater
-    inflater.setInput(idat.toByteArray)
-    var filled = 0
-    while (!inflater.finished() && filled < raw.length)
-      filled += inflater.inflate(raw, filled, raw.length - filled)
-    inflater.end()
-    require(filled == raw.length,
-      s"decodePng: short inflate ($filled of ${raw.length})")
-    // per-scanline reconstruction; prev = reconstructed row above (zeros
-    // for the first row, per spec)
-    val rgb = new Array[Int](w * h * 3)
-    val cur = new Array[Int](stride)
-    val prev = new Array[Int](stride)
-    var y = 0
-    while (y < h) {
-      val o = y * (1 + stride)
-      val filter = raw(o) & 0xff
-      var i = 0
-      while (i < stride) {
-        val x = raw(o + 1 + i) & 0xff
-        val a = if (i >= 3) cur(i - 3) else 0   // left (bpp = 3)
-        val b = prev(i)                          // above
-        val c = if (i >= 3) prev(i - 3) else 0   // upper-left
-        cur(i) = filter match {
-          case 0 => x
-          case 1 => (x + a) & 0xff
-          case 2 => (x + b) & 0xff
-          case 3 => (x + (a + b) / 2) & 0xff
-          case 4 => // Paeth predictor, straight from the spec
-            val p = a + b - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b)
-            val pc = math.abs(p - c)
-            val pred = if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-            (x + pred) & 0xff
-          case f => throw new IllegalArgumentException(
-            s"decodePng: unknown filter $f on row $y")
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, meta), param)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
+  }
+
+  private val JpegMeta = "javax_imageio_jpeg_image_1.0"
+
+  /** Decode any supported image container → (w, h, top-down RGB
+    * triples). PPM and QOI have no JDK plugin and decode here; JPEG,
+    * GIF, PNG and BMP go through the ImageIO reader that claims the
+    * bytes. Gray images return r = g = b = the stored sample (read from
+    * the raster: `getRGB` would convert linear gray to sRGB). No
+    * claiming reader, a reader warning, or any other format is a loud
+    * error, not a silent misdecode. */
+  def decodeImage(bytes: Array[Byte]): (Int, Int, Array[Int]) = detectFormat(bytes) match {
+    case "ppm" => decodePpm(bytes)
+    case "qoi" => Qoi.decode(bytes)
+    case format @ ("jpg" | "gif" | "png" | "bmp") =>
+      val in = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(bytes))
+      val readers = ImageIO.getImageReaders(in)
+      require(readers.hasNext, s"decodeImage: no image reader claims the $format bytes")
+      val reader = readers.next()
+      try {
+        reader.setInput(in, true, true)
+        reader.addIIOReadWarningListener((_: ImageReader, msg: String) =>
+          throw new IllegalArgumentException(s"decodeImage: $msg"))
+        val img = reader.read(0)
+        val (w, h) = (img.getWidth, img.getHeight)
+        val rgb = new Array[Int](w * h * 3)
+        if (img.getColorModel.getColorSpace.getType == ColorSpace.TYPE_GRAY) {
+          val max = (1 << img.getSampleModel.getSampleSize(0)) - 1
+          val gray = img.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int])
+          for (i <- gray.indices) {
+            val v = (gray(i) * 255 + max / 2) / max
+            rgb(3 * i) = v; rgb(3 * i + 1) = v; rgb(3 * i + 2) = v
+          }
+        } else {
+          val px = img.getRGB(0, 0, w, h, null, 0, w)
+          for (i <- px.indices) {
+            rgb(3 * i) = (px(i) >> 16) & 0xff
+            rgb(3 * i + 1) = (px(i) >> 8) & 0xff
+            rgb(3 * i + 2) = px(i) & 0xff
+          }
         }
-        rgb(y * stride + i) = cur(i)
-        i += 1
-      }
-      System.arraycopy(cur, 0, prev, 0, stride)
-      y += 1
-    }
-    (w, h, rgb)
+        (w, h, rgb)
+      } finally { reader.dispose(); in.close() }
+    case other => throw new IllegalArgumentException(s"decodeImage: unsupported format $other")
   }
 
   // ------------------------------------------------------------------
@@ -642,21 +535,11 @@ object Multimodal {
     java.util.Arrays.copyOfRange(bytes, off, off + len)
   }
 
-  /** Decode frame `k`: the frame blob routes through the format sniff,
-    * so clips may carry any supported image codec per frame (JPEG for
+  /** Decode frame `k`: the frame blob goes through [[decodeImage]], so
+    * clips may carry any supported image codec per frame (JPEG for
     * size, GIF/PNG when the pipeline needs lossless frames). */
-  def decodeMjpegFrame(bytes: Array[Byte], k: Int): (Int, Int, Array[Int]) = {
-    val f = mjpegFrameBytes(bytes, k)
-    detectFormat(f) match {
-      case "jpg" => Jpeg.decode(f)
-      case "gif" => Gif.decode(f)
-      case "png" => decodePng(f)
-      case "bmp" => decodeBmp(f)
-      case "ppm" => decodePpm(f)
-      case other => throw new IllegalArgumentException(
-        s"mjpeg: unsupported frame format $other")
-    }
-  }
+  def decodeMjpegFrame(bytes: Array[Byte], k: Int): (Int, Int, Array[Int]) =
+    decodeImage(mjpegFrameBytes(bytes, k))
 
   /** Container sniff by magic bytes. */
   def detectFormat(bytes: Array[Byte]): String =
@@ -664,7 +547,7 @@ object Multimodal {
     else if (bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F') "wav"
     else if (bytes(0) == 'B' && bytes(1) == 'M') "bmp"
     else if (bytes(0) == 'P' && bytes(1) == '6') "ppm"
-    else if (bytes(0) == PngSig(0) && bytes(1) == 'P' && bytes(2) == 'N'
+    else if ((bytes(0) & 0xff) == 0x89 && bytes(1) == 'P' && bytes(2) == 'N'
       && bytes(3) == 'G') "png"
     else if ((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8
       && (bytes(2) & 0xff) == 0xff) "jpg"
@@ -698,17 +581,11 @@ object Multimodal {
         var i = 0
         while (i < s.length) { f(i & 7) += s(i); i += 1 }
         (s.length, sr, f)
-      case "bmp" | "ppm" | "png" | "jpg" | "gif" | "qoi" =>
+      case _ =>
         // jpg features are approximate (lossy decode) — fine for
         // similarity, excluded from the exact-oracle feature queries;
         // gif and qoi (like png) are lossless and exact
-        val (w, h, rgb) =
-          if (content(0) == 'B') decodeBmp(content)
-          else if (content(0) == 'P') decodePpm(content)
-          else if (content(0) == 'G') Gif.decode(content)
-          else if (content(0) == 'q') Qoi.decode(content)
-          else if ((content(0) & 0xff) == 0xff) Jpeg.decode(content)
-          else decodePng(content)
+        val (w, h, rgb) = decodeImage(content)
         val f = new Array[Float](8)
         var p = 0
         var y = 0
@@ -724,8 +601,6 @@ object Multimodal {
         }
         f(6) = w.toFloat; f(7) = h.toFloat
         (w, h, f)
-      case other =>
-        throw new IllegalArgumentException(s"decodeFeatures: unsupported format $other")
     }
   }
 

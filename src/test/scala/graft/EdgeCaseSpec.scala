@@ -137,11 +137,11 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("jpeg: 1x1 and 8x8-exact images round-trip; q=1 band holds at the corners") {
-    import graft.ops.Jpeg
+    import graft.ops.Multimodal
     for ((w, h) <- Seq((1, 1), (8, 8), (9, 8), (8, 9))) {
       val rgb = Array.tabulate(w * h * 3)(i => (i * 37 + 11) % 256)
-      val bytes = Jpeg.encode(w, h, rgb, q = 1)
-      val (dw, dh, out) = Jpeg.decode(bytes)
+      val bytes = Multimodal.encodeImage("jpg", w, h, rgb)
+      val (dw, dh, out) = Multimodal.decodeImage(bytes)
       assert((dw, dh) == (w, h), s"dims for ${w}x$h")
       val maxe = rgb.indices.map(i => math.abs(rgb(i) - out(i))).max
       assert(maxe <= 4, s"${w}x$h error $maxe")
@@ -226,21 +226,26 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("gif: 1x1, single-color, and 2-color minimum-code images round-trip") {
-    import graft.ops.Gif
+    import graft.ops.Multimodal
+    // the JDK's default interlaced GIF write decodes the 6x3 checker
+    // with row 1 all black; the non-interlaced write is exact at every
+    // two-colour checker shape up to 24x24
+    val checkers = for (w <- 1 to 24; h <- 1 to 24) yield (w, h,
+      Array.tabulate(w * h * 3)(i => if (((i / 3) % w + (i / 3) / w) % 2 == 0) 0 else 255))
     for ((w, h, rgb) <- Seq(
       (1, 1, Array(7, 8, 9)),
       (5, 4, Array.fill(5 * 4 * 3)(200)), // 1 color
-      (6, 3, Array.tabulate(6 * 3 * 3)(i => if ((i / 3) % 2 == 0) 0 else 255)))) {
-      val bytes = Gif.encode(w, h, rgb)
-      val (dw, dh, out) = Gif.decode(bytes)
+      (6, 3, Array.tabulate(6 * 3 * 3)(i => if ((i / 3) % 2 == 0) 0 else 255))) ++ checkers) {
+      val bytes = Multimodal.encodeImage("gif", w, h, rgb)
+      val (dw, dh, out) = Multimodal.decodeImage(bytes)
       assert((dw, dh) == (w, h) && out.sameElements(rgb), s"${w}x$h")
     }
   }
 
   test("mjpeg: single-frame clip and empty-clip rejection") {
-    import graft.ops.{Jpeg, Multimodal}
+    import graft.ops.Multimodal
     val rgb = Array.tabulate(8 * 8 * 3)(i => (i * 5) % 256)
-    val clip = Multimodal.encodeMjpeg(Seq(Jpeg.encode(8, 8, rgb, q = 1)))
+    val clip = Multimodal.encodeMjpeg(Seq(Multimodal.encodeImage("jpg", 8, 8, rgb)))
     assert(Multimodal.mjpegFrameCount(clip) == 1)
     val (w, h, _) = Multimodal.decodeMjpegFrame(clip, 0)
     assert((w, h) == (8, 8))

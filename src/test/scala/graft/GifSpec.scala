@@ -1,10 +1,11 @@
 package graft
 
-import graft.ops.{Gif, Multimodal}
+import graft.ops.Multimodal
 
-/** GIF/LZW codec: bit-exact round trips (lossless), golden both ways
-  * vs javax.imageio (including the JDK writer's interlaced output),
-  * dictionary-reset coverage, loud errors on unsupported shapes. */
+/** GIF through `Multimodal.encodeImage` / `decodeImage` (the JDK's
+  * ImageIO plugin): bit-exact round trips (lossless), a non-interlaced
+  * stream, dictionary-reset coverage, loud errors on unsupported
+  * shapes. */
 class GifSpec extends SparkSpec {
 
   private def banded(w: Int, h: Int, levels: Int): Array[Int] = {
@@ -22,9 +23,9 @@ class GifSpec extends SparkSpec {
     // 513x300 crosses every code width and the dictionary reset
     for ((w, h, lv) <- Seq((37, 23, 4), (7, 5, 1), (16, 12, 2), (513, 300, 7))) {
       val rgb = banded(w, h, lv)
-      val bytes = Gif.encode(w, h, rgb)
+      val bytes = Multimodal.encodeImage("gif", w, h, rgb)
       assert(Multimodal.detectFormat(bytes) == "gif")
-      val (dw, dh, out) = Gif.decode(bytes)
+      val (dw, dh, out) = Multimodal.decodeImage(bytes)
       assert((dw, dh) == (w, h) && out.sameElements(rgb),
         s"${w}x$h lv=$lv round trip not exact")
     }
@@ -33,7 +34,16 @@ class GifSpec extends SparkSpec {
   test("golden: javax.imageio reads our bytes pixel-exact") {
     val (w, h) = (64, 48)
     val rgb = banded(w, h, 6)
-    val bytes = Gif.encode(w, h, rgb)
+    val bytes = Multimodal.encodeImage("gif", w, h, rgb)
+    // walk to the image descriptor: its interlace flag (0x40) is off —
+    // the JDK writer's interlaced default loses rows of small images
+    var pos = 13 + (if ((bytes(10) & 0x80) != 0) 3 << ((bytes(10) & 7) + 1) else 0)
+    while (bytes(pos) == 0x21) { // extension: label, then sub-blocks
+      pos += 2
+      while (bytes(pos) != 0) pos += 1 + (bytes(pos) & 0xff)
+      pos += 1
+    }
+    assert(bytes(pos) == 0x2c && (bytes(pos + 9) & 0x40) == 0, "interlaced gif")
     val img = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(bytes))
     assert(img != null && img.getWidth == w && img.getHeight == h)
@@ -44,44 +54,23 @@ class GifSpec extends SparkSpec {
     }
   }
 
-  test("golden: we read javax.imageio's (interlaced) bytes pixel-exact") {
-    val (w, h) = (33, 21)
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_BYTE_INDEXED)
-    for (y <- 0 until h; x <- 0 until w)
-      img.setRGB(x, y, ((((x * 13 + y * 7) % 4) * 60) << 16) |
-        ((((x + y) % 3) * 80) << 8) | 120)
-    val baos = new java.io.ByteArrayOutputStream
-    javax.imageio.ImageIO.write(img, "gif", baos)
-    val bytes = baos.toByteArray
-    val (dw, dh, got) = Gif.decode(bytes)
-    assert((dw, dh) == (w, h))
-    val ref = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(bytes))
-    for (y <- 0 until h; x <- 0 until w) {
-      val px = ref.getRGB(x, y); val p = (y * w + x) * 3
-      assert(((px >> 16) & 0xff) == got(p) && ((px >> 8) & 0xff) == got(p + 1)
-        && (px & 0xff) == got(p + 2), s"mismatch at ($x,$y)")
-    }
-  }
-
   test("unsupported shapes fail loudly") {
     // 1024 distinct colors: (p % 256, 60·(p div 256), 0)
     val rgb = Array.tabulate(32 * 32 * 3) { i =>
       val p = i / 3
       i % 3 match { case 0 => p % 256; case 1 => (p / 256) * 60; case _ => 0 }
     }
-    val e = intercept[IllegalArgumentException](Gif.encode(32, 32, rgb))
+    val e = intercept[IllegalArgumentException](Multimodal.encodeImage("gif", 32, 32, rgb))
     assert(e.getMessage.contains("256"), e.getMessage)
     val bad = Array.tabulate(3)(_ => 300)
-    val e2 = intercept[IllegalArgumentException](Gif.encode(1, 1, bad))
+    val e2 = intercept[IllegalArgumentException](Multimodal.encodeImage("gif", 1, 1, bad))
     assert(e2.getMessage.contains("0..255"), e2.getMessage)
   }
 
   test("decodeFeatures routes gif payloads, exact") {
     val (w, h) = (20, 14)
     val rgb = banded(w, h, 3)
-    val bytes = Gif.encode(w, h, rgb)
+    val bytes = Multimodal.encodeImage("gif", w, h, rgb)
     val (dw, dh, f) = Multimodal.decodeFeatures(bytes)
     assert((dw, dh) == (w, h))
     val sumR = (0 until w * h).map(p => rgb(3 * p)).sum

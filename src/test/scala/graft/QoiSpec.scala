@@ -88,11 +88,12 @@ class QoiSpec extends SparkSpec {
       val p = k / 3
       Seq((p * 7) % 256, (p * 13) % 256, (p * 29) % 256)(k % 3)
     }
-    val viaBmp = Multimodal.decodeBmp(Multimodal.encodeBmp24(w, h, rgb))
-    val viaPng = Multimodal.decodePng(Multimodal.encodePng(viaBmp._1, viaBmp._2, viaBmp._3))
+    def via(format: String, img: (Int, Int, Array[Int])): (Int, Int, Array[Int]) =
+      Multimodal.decodeImage(Multimodal.encodeImage(format, img._1, img._2, img._3))
+    val viaBmp = via("bmp", (w, h, rgb))
+    val viaPng = via("png", viaBmp)
     val viaQoi = Qoi.decode(Qoi.encode(viaPng._1, viaPng._2, viaPng._3))
-    val viaGif = graft.ops.Gif.decode(graft.ops.Gif.encode(viaQoi._1, viaQoi._2, viaQoi._3))
-    val back = Multimodal.decodeBmp(Multimodal.encodeBmp24(viaGif._1, viaGif._2, viaGif._3))
+    val back = via("bmp", via("gif", viaQoi))
     assert(back._1 == w && back._2 == h)
     assert(back._3.toSeq == rgb.toSeq, "pixels drifted through the chain")
   }

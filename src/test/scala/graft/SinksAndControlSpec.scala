@@ -146,13 +146,13 @@ class MultimodalSpec extends SparkSpec {
   test("BMP golden bytes: bottom-up BGR rows padded to 4 bytes") {
     // 2x2 top-down RGB: (1,2,3) (4,5,6) / (7,8,9) (10,11,12)
     val rgb = Array(1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12)
-    val bytes = Multimodal.encodeBmp24(2, 2, rgb)
+    val bytes = Multimodal.encodeImage("bmp", 2, 2, rgb)
     assert(bytes.length == 54 + 16) // rowSize 8 (6 + 2 pad) x 2 rows
     // pixel data: file row 0 = IMAGE row 1, BGR order
     val px = bytes.drop(54).map(_ & 0xff).toSeq
     assert(px == Seq(9, 8, 7, 12, 11, 10, 0, 0, /* image row 1 */
                      3, 2, 1, 6, 5, 4, 0, 0))   /* image row 0 */
-    val (w, h, dec) = Multimodal.decodeBmp(bytes)
+    val (w, h, dec) = Multimodal.decodeImage(bytes)
     assert(w == 2 && h == 2 && dec.toSeq == rgb.toSeq)
   }
 
@@ -172,15 +172,15 @@ class MultimodalSpec extends SparkSpec {
   test("PNG round trip + cross-decoder conformance vs javax.imageio") {
     val w = 5; val h = 4
     val rgb = Array.tabulate(w * h * 3)(i => (i * 37 + 11) % 256)
-    val bytes = Multimodal.encodePng(w, h, rgb)
+    val bytes = Multimodal.encodeImage("png", w, h, rgb)
     // signature + IHDR golden fields
     assert(bytes.take(8).map(_ & 0xff).toSeq ==
       Seq(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a))
     assert(new String(bytes.slice(12, 16), "US-ASCII") == "IHDR")
-    val (dw, dh, dec) = Multimodal.decodePng(bytes)
+    val (dw, dh, dec) = Multimodal.decodeImage(bytes)
     assert(dw == w && dh == h && dec.toSeq == rgb.toSeq)
     assert(Multimodal.detectFormat(bytes) == "png")
-    // our encoder's output must be readable by the JDK's own decoder
+    // the bytes read back through plain ImageIO.read too
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
     assert(img.getWidth == w && img.getHeight == h)
     for (y <- 0 until h; x <- 0 until w) {
@@ -189,8 +189,8 @@ class MultimodalSpec extends SparkSpec {
       assert(((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff) ==
         ((rgb(o), rgb(o + 1), rgb(o + 2))), s"pixel ($x,$y)")
     }
-    // and our decoder must read an INDEPENDENT encoder's output (the
-    // JDK picks its own scanline filters — real-world coverage)
+    // and decodeImage reads plain ImageIO.write output (the JDK picks
+    // its own scanline filters)
     val bimg = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) {
@@ -199,7 +199,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val bos = new java.io.ByteArrayOutputStream
     javax.imageio.ImageIO.write(bimg, "png", bos)
-    val (jw, jh, jdec) = Multimodal.decodePng(bos.toByteArray)
+    val (jw, jh, jdec) = Multimodal.decodeImage(bos.toByteArray)
     assert(jw == w && jh == h && jdec.toSeq == rgb.toSeq)
   }
 
@@ -239,7 +239,7 @@ class MultimodalSpec extends SparkSpec {
     while (!defl.finished()) bos.write(buf, 0, defl.deflate(buf))
     defl.end()
     // assemble: reuse the encoder for signature/IHDR/IEND, swap IDAT
-    val template = Multimodal.encodePng(w, h, new Array[Int](w * h * 3))
+    val template = Multimodal.encodeImage("png", w, h, new Array[Int](w * h * 3))
     val sigIhdr = template.take(8 + 25) // signature + IHDR chunk
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val out = new Array[Byte](12 + data.length)
@@ -260,7 +260,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val png = sigIhdr ++ chunk("IDAT", bos.toByteArray) ++
       chunk("IEND", Array.empty[Byte])
-    val (dw, dh, dec) = Multimodal.decodePng(png)
+    val (dw, dh, dec) = Multimodal.decodeImage(png)
     assert(dw == w && dh == h && dec.toSeq == rgb.toSeq,
       "filter reconstruction diverged")
   }
@@ -306,7 +306,7 @@ class MultimodalSpec extends SparkSpec {
     assert(base != flipped, "a vertical flip must change the hash")
     // survives the real encode->decode round trip
     val viaCodec = {
-      val (dw, dh, rgb) = Multimodal.decodeBmp(Multimodal.encodeBmp24(w, h, img(0, flip = false)))
+      val (dw, dh, rgb) = Multimodal.decodeImage(Multimodal.encodeImage("bmp", w, h, img(0, flip = false)))
       Multimodal.dHash(dw, dh, rgb)
     }
     assert(viaCodec == base)
@@ -314,12 +314,22 @@ class MultimodalSpec extends SparkSpec {
 
   test("skipBad drops undecodable payloads; the default stays loud") {
     val good = Multimodal.encodeWavPcm16(Array.tabulate(32)(_ - 16), 8000)
-    val df = Seq((1L, good), (2L, "not-a-media-file".getBytes("UTF-8")))
-      .toDF("media_id", "content")
-    val kept = Multimodal.extractFeatures(df, skipBad = true).collect()
-    assert(kept.map(_.getLong(0)).toSeq == Seq(1L))
-    intercept[org.apache.spark.SparkException] {
-      Multimodal.extractFeatures(df).collect()
+    val rgb = Array.tabulate(20 * 14 * 3)(i => (i * 37 + 11) % 256)
+    val jpg = Multimodal.encodeImage("jpg", 20, 14, rgb)
+    val gif = Multimodal.encodeImage("gif", 20, 14, rgb.map(_ / 128 * 255))
+    val bad = Seq(
+      "not-a-media-file".getBytes("UTF-8"),
+      // ImageIO returns an image for a truncated JPEG and only warns
+      jpg.take(jpg.length / 2),
+      gif.take(13), // header and screen descriptor, no image
+      Array(0xff, 0xd8, 0xff).map(_.toByte) ++ "garbage-garbage".getBytes("UTF-8"))
+    for (payload <- bad) {
+      val df = Seq((1L, good), (2L, payload)).toDF("media_id", "content")
+      val kept = Multimodal.extractFeatures(df, skipBad = true).collect()
+      assert(kept.map(_.getLong(0)).toSeq == Seq(1L))
+      intercept[org.apache.spark.SparkException] {
+        Multimodal.extractFeatures(df).collect()
+      }
     }
   }
 
@@ -329,8 +339,8 @@ class MultimodalSpec extends SparkSpec {
       val p = i / 3; val y = p / 4; val x = p % 4
       rgb(((3 - y) * 4 + x) * 3 + i % 3)
     }
-    val f1 = Multimodal.decodeFeatures(Multimodal.encodeBmp24(4, 4, rgb))._3
-    val f2 = Multimodal.decodeFeatures(Multimodal.encodeBmp24(4, 4, flipped))._3
+    val f1 = Multimodal.decodeFeatures(Multimodal.encodeImage("bmp", 4, 4, rgb))._3
+    val f2 = Multimodal.decodeFeatures(Multimodal.encodeImage("bmp", 4, 4, flipped))._3
     assert(f1(0) == f2(0) && f1(1) == f2(1) && f1(2) == f2(2)) // plain sums equal
     assert(f1(3) != f2(3)) // row-weighted sum sees the flip
   }
