@@ -206,7 +206,7 @@ object Bench {
       if (qs == null) Map.empty
       else {
         val b = Map.newBuilder[String, Double]
-        qs.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asDouble())
+        qs.properties().forEach(e => b += e.getKey -> e.getValue.asDouble())
         b.result()
       }
     } catch { case _: Throwable => Map.empty }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Scale probe (NOT part of the driver gate): replays the heaviest
@@ -96,45 +95,24 @@ object ScaleProbe {
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$big/embeddings.parquet")
 
-    // ---- max-task shuffle-read tracker (same listener methodology as
-    // RankKernelSpec's measured skew tests). Task ends are filtered to
-    // stages submitted under THIS measurement's job group: a cancelled
-    // probe's straggler tasks keep ending for a while, and unfiltered
-    // they would inflate the NEXT measurement's max (round-13 ADVICE).
-    @volatile var maxRecords = 0L
-    @volatile var currentGroup: String = null
-    val probedStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null && g == currentGroup)
-          j.stageIds.foreach(id => probedStages.add(id))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val tm = t.taskMetrics
-        if (tm != null && probedStages.contains(t.stageId))
-          maxRecords = math.max(maxRecords, tm.shuffleReadMetrics.recordsRead)
-      }
-    }
     /** The previous measurement's worker, if it timed out: joined (with
       * a hard grace) before the next measurement starts so an abandoned
       * probe can't contend for CPU during the next timing window. */
     var lastWorker: Thread = null
-    /** Run `f` with the listener attached; Some((sec, maxTaskRecords))
-      * or None when the hard timeout cancels the job group — the probe
+    /** Run `f` under its own job group; Some((sec, maxTaskRecords)) or
+      * None when the hard timeout cancels the job group — the probe
       * exists to catch degenerate scaling, so a blown budget is a
-      * RESULT, not an error. */
+      * RESULT, not an error. Task ends count only for jobs submitted
+      * under THIS measurement's job group: a cancelled probe's
+      * straggler tasks keep ending for a while, and unfiltered they
+      * would inflate the NEXT measurement's max (round-13 ADVICE). */
     def measure(name: String)(f: => Unit): Option[(Double, Long)] = {
       if (lastWorker != null && lastWorker.isAlive) {
         System.err.println(s"[probe] draining ${lastWorker.getName} before $name")
         lastWorker.join(120000)
       }
-      maxRecords = 0L
-      probedStages.clear()
       val group = s"probe-$name"
-      currentGroup = group
-      spark.sparkContext.addSparkListener(listener)
+      val metrics = new graft.obs.QueryMetrics(spark, Some(group))
       val done = new java.util.concurrent.CountDownLatch(1)
       @volatile var failed: Throwable = null
       val t0 = System.nanoTime()
@@ -161,13 +139,10 @@ object ScaleProbe {
           None
         } else {
           val sec = (System.nanoTime() - t0) / 1e9
-          var last = -1L; var spins = 0
-          while (last != maxRecords && spins < 20) { // listener drain
-            last = maxRecords; Thread.sleep(250); spins += 1
-          }
-          Some((sec, maxRecords))
+          metrics.drain()
+          Some((sec, metrics.maxTaskShuffleRecords))
         }
-      } finally spark.sparkContext.removeSparkListener(listener)
+      } finally metrics.close()
     }
     def sweep(): Unit = {
       spark.sparkContext.getPersistentRDDs.values

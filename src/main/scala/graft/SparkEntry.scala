@@ -309,10 +309,13 @@ object SparkEntry {
     // ---- EVM log pipeline (SURVEY §2.1/§2.2/§2.3, §3.1 end-to-end) ----
     "q_evm_decode"        -> ((s, d) => {
       import graft.evm.LogPipeline
-      LogPipeline.decodeTransfers(LogPipeline.synthesizeLogs(graft.Tables.events(s, d)))
+      val logs = LogPipeline.synthesizeLogs(graft.Tables.events(s, d))
+      LogPipeline.decodeEvent(logs, LogPipeline.Transfer, "Token", "1")
         .select(col("tx_hash"), col("block_number"),
-          col("from_addr"), col("to_addr"),
-          col("value").cast("long").as("value"), col("value_or_hex"))
+          col("from").as("from_addr"), col("to").as("to_addr"),
+          col("value").cast("long").as("value"),
+          org.apache.spark.sql.functions.coalesce(col("value").cast("string"),
+            col("data_hex")).as("value_or_hex"))
         .orderBy("tx_hash")
     }),
     "q_evm_daily"         -> ((s, d) => graft.evm.LogPipeline.dailyVolume(s, d)
@@ -358,9 +361,10 @@ object SparkEntry {
     "q_evm_txfrom"        -> ((s, d) => {
       import graft.evm.LogPipeline
       val ev = graft.Tables.events(s, d)
-      val rows = LogPipeline.decodeTransfers(LogPipeline.synthesizeLogs(ev))
+      val rows = LogPipeline.decodeEvent(LogPipeline.synthesizeLogs(ev),
+        LogPipeline.Transfer, "Token", "1")
       LogPipeline.attachTxFrom(rows, LogPipeline.synthesizeTxs(ev))
-        .select(col("tx_hash"), col("from_addr"), col("tx_from"))
+        .select(col("tx_hash"), col("from").as("from_addr"), col("tx_from"))
         .orderBy("tx_hash")
     }),
     // ---- ML surface (SURVEY §2.7) ----

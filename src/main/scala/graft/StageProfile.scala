@@ -1,23 +1,18 @@
 package graft
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
-
 /** Stage-level profiler for the optimization rounds (guide §1: decide
   * whether time goes to shuffle read/write, compute, or scheduling
   * before touching anything). Runs each named query once (after one
-  * sf0.001 warm-up pass) and prints, per stage: wall time, task count,
-  * total executor run time, shuffle bytes read/written, spill, and the
-  * first line of the stage's call site. Usage:
+  * sf0.001 warm-up pass) and prints, per stage: wall time, executor
+  * run and CPU time, task count, shuffle bytes read/written, input
+  * bytes, and the first graft line of the stage's call site, as
+  * recorded by [[graft.obs.QueryMetrics]]. With `GRAFT_PROFILE_NODES`
+  * set it first prints every executed plan node with non-trivial
+  * metrics. Usage:
   *
   *   sbt 'runMain graft.StageProfile <sfDir> q_a q_b ...'
   */
 object StageProfile {
-  private case class St(name: String, site: String, var tasks: Int = 0,
-      var runMs: Long = 0, var cpuMs: Long = 0, var shRead: Long = 0,
-      var shWrite: Long = 0, var spill: Long = 0, var inBytes: Long = 0,
-      var submitted: Long = 0, var completed: Long = 0)
-
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
       System.err.println("usage: StageProfile <sfDir> <query> [query ...]")
@@ -33,109 +28,54 @@ object StageProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = GraftSession.build(cpus)
-    val stages = mutable.LinkedHashMap.empty[Int, St]
-    var enabled = false
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (enabled) synchronized {
-          val si = e.stageInfo
-          val site = si.details.linesIterator.toSeq
-            .find(l => l.contains("graft") && !l.contains("StageProfile"))
-            .getOrElse(si.details.linesIterator.take(1).mkString)
-          stages(si.stageId) = St(si.name, site.trim,
-            submitted = System.nanoTime())
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (enabled) synchronized {
-          val si = e.stageInfo
-          stages.get(si.stageId).foreach { st =>
-            st.completed = System.nanoTime()
-            st.tasks = si.numTasks
-            val m = si.taskMetrics
-            if (m != null) {
-              st.runMs = m.executorRunTime
-              st.cpuMs = m.executorCpuTime / 1000000
-              st.shRead = m.shuffleReadMetrics.totalBytesRead
-              st.shWrite = m.shuffleWriteMetrics.bytesWritten
-              st.spill = m.memoryBytesSpilled
-              st.inBytes = m.inputMetrics.bytesRead
-            }
-          }
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
 
-    // walk the EXECUTED plan (descending into AQE-final subplans,
-    // reused exchanges/subqueries and InMemoryRelations' cached plans)
-    // and print every node whose runtime metrics are non-trivial —
+    // every executed plan node whose runtime metrics are non-trivial —
     // the per-operator attribution the disabled UI would have shown
-    def dumpMetrics(plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      import org.apache.spark.sql.execution._
-      import org.apache.spark.sql.execution.adaptive._
-      val seen = mutable.Set.empty[Int]
-      def walk(p: SparkPlan, depth: Int): Unit = {
-        if (!seen.add(System.identityHashCode(p))) return
-        val interesting = p.metrics.filter { case (k, m) =>
+    def dumpMetrics(m: graft.obs.QueryMetrics): Unit =
+      for ((p, depth) <- m.nodes) {
+        val ms = p.metrics.filter { case (k, m) =>
           m.value > 0 && (k.contains("time") || k.contains("Time") ||
             k == "numOutputRows" || k.contains("bytes") || k.contains("spill"))
-        }
-        val ms = interesting.map { case (k, m) =>
+        }.map { case (k, m) =>
           val v = if (m.metricType == "timing") s"${m.value}ms"
             else if (m.metricType == "nsTiming") s"${m.value / 1000000}ms"
             else if (k == "numOutputRows") s"${m.value}r"
             else s"${m.value}"
           s"$k=$v"
         }.mkString(" ")
-        if (ms.nonEmpty)
-          println("  " * depth + s"${p.nodeName}: $ms")
-        p match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
-          case q: QueryStageExec => walk(q.plan, depth + 1)
-          case c: columnar.InMemoryTableScanExec =>
-            walk(c.relation.cachedPlan, depth + 1)
-          case _ => p.children.foreach(walk(_, depth + 1))
-        }
-        p.subqueries.foreach(walk(_, depth + 1))
+        if (ms.nonEmpty) println("  " * depth + s"${p.nodeName}: $ms")
       }
-      walk(plan, 0)
-    }
 
+    def sweep(): Unit = {
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      spark.catalog.clearCache()
+    }
     val wantNodes = sys.env.contains("GRAFT_PROFILE_NODES")
     for (n <- names) {
       // warm-up at the tiny sf: codegen/JIT/class-loading off the clock
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      stages.clear()
-      enabled = true
+      sweep()
       spark.sparkContext.setJobDescription(n)
-      val t0 = System.nanoTime()
-      val dfRun = SparkEntry.queries(n)(spark, sfDir)
-      val ok = try { dfRun.count(); true }
-        catch { case t: Throwable => println(s"[profile] $n FAILED: $t"); false }
-      val wallMs = (System.nanoTime() - t0) / 1e6
-      if (ok && wantNodes) dumpMetrics(dfRun.queryExecution.executedPlan)
-      enabled = false
-      // let straggler stage-completed events drain
-      Thread.sleep(300)
-      synchronized {
-        println(f"%n=== $n  wall=${wallMs}%.0f ms  stages=${stages.size}  ok=$ok")
-        println(f"${"stage"}%6s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
-          f"${"tasks"}%5s ${"shR_kB"}%8s ${"shW_kB"}%8s ${"in_kB"}%9s  site")
-        val sorted = stages.toSeq.sortBy { case (_, st) =>
-          -(st.completed - st.submitted) }
-        for ((id, st) <- sorted) {
-          val w = if (st.completed > 0) (st.completed - st.submitted) / 1e6 else -1
-          println(f"$id%6d ${w}%8.0f ${st.runMs}%8d ${st.cpuMs}%8d " +
-            f"${st.tasks}%5d ${st.shRead / 1024}%8d ${st.shWrite / 1024}%8d " +
-            f"${st.inBytes / 1024}%9d  ${st.site.take(90)}")
-        }
+      val ((ok, wallMs), m) = graft.obs.QueryMetrics.of(spark) {
+        val t0 = System.nanoTime()
+        val ok = try { SparkEntry.queries(n)(spark, sfDir).count(); true }
+          catch { case t: Throwable => println(s"[profile] $n FAILED: $t"); false }
+        (ok, (System.nanoTime() - t0) / 1e6)
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      if (ok && wantNodes) dumpMetrics(m)
+      println(f"%n=== $n  wall=${wallMs}%.0f ms  stages=${m.stages.size}  ok=$ok")
+      println(f"${"stage"}%6s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
+        f"${"tasks"}%5s ${"shR_kB"}%8s ${"shW_kB"}%8s ${"in_kB"}%9s  site")
+      for (st <- m.stages.sortBy(st => st.submitted - st.completed)) {
+        val site = st.site.linesIterator.find(l => l.contains("graft") && !l.contains("StageProfile"))
+          .getOrElse(st.site.linesIterator.take(1).mkString).trim
+        println(f"${st.id}%6d ${st.completed - st.submitted}%8d ${st.runMs}%8d ${st.cpuMs}%8d " +
+          f"${st.tasks}%5d ${st.shuffleReadBytes / 1024}%8d ${st.shuffleWriteBytes / 1024}%8d " +
+          f"${st.inputBytes / 1024}%9d  ${site.take(90)}")
+      }
+      sweep()
     }
     spark.stop()
   }

@@ -24,7 +24,7 @@ class JobRegistry(spark: SparkSession, poolSize: Int = 4) {
   case class Failed(error: String) extends State
   case object Cancelled extends State
 
-  final case class JobInfo(id: String, name: String, state: State,
+  case class JobInfo(id: String, name: String, state: State,
                            submittedAt: Long, startedAt: Option[Long],
                            finishedAt: Option[Long])
 

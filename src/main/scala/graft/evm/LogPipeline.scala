@@ -18,7 +18,13 @@ import graft.Tables
   */
 object LogPipeline {
 
-  val TransferSig = "Transfer(address,address,uint256)"
+  /** The ERC-20 `Transfer(address indexed from, address indexed to,
+    * uint256 value)` event. */
+  val Transfer: AbiSchema.Event = AbiSchema.Event("Transfer", Seq(
+    AbiSchema.Param("from", "address", indexed = true),
+    AbiSchema.Param("to", "address", indexed = true),
+    AbiSchema.Param("value", "uint256", indexed = false)))
+  val TransferSig: String = Transfer.signature
   val ApprovalSig = "Approval(address,address,uint256)"
 
   /** The fixture tables are one small parquet split, so a scan feeds
@@ -100,20 +106,6 @@ object LogPipeline {
     * rendering of payloads and topics in every decode projection. */
   def hex0x(c: Column): Column = call_function("hex0x", c)
 
-  /** J4: contract-registry enrichment — the configured
-    * `map[address]ContractConfig` (`indexer.go:51-62`) as a broadcast
-    * dimension join; unknown addresses keep null contract_name (the
-    * reference's minimal-event path, parser.go:54-61). */
-  def enrichContracts(logs: DataFrame,
-                      contracts: Seq[(String, String)]): DataFrame = {
-    val spark = logs.sparkSession
-    import spark.implicits._
-    val dim = contracts.toDF("__addr", "contract_name")
-      .withColumn("__addr", lower(col("__addr")))
-    logs.join(broadcast(dim), lower(col("address")) === col("__addr"), "left")
-      .drop("__addr")
-  }
-
   /** C6: per-batch progress metrics — the reference's
     * `[OK] Block a → b | Events: n` chunk log (`indexer.go:160-161`)
     * becomes metrics observed on the decoded stream: `action` runs once
@@ -151,24 +143,6 @@ object LogPipeline {
     * reference's per-block memo cache (J1). */
   def blockTimestamps(logs: DataFrame): DataFrame =
     logs.groupBy("block_number").agg(min("ts").as("block_ts"))
-
-  /** Decode Transfer logs: plan-time topic0 filter (P1/P3), indexed
-    * topics via abi_decode_word (P5), payload via abi_decode_data (P4),
-    * metadata projection (P6), raw-hex fallback for malformed payloads
-    * (P5/P7). */
-  def decodeTransfers(logs: DataFrame): DataFrame = {
-    val t0 = Keccak.eventTopic0(TransferSig) // plan-time constant
-    logs.filter(col("topic0") === lit(t0))
-      .select(
-        col("tx_hash"), col("block_number"), col("address").as("contract"),
-        lit("Token").as("contract_name"), lit("Transfer").as("event_name"),
-        lit("1").as("chain_id"),
-        expr("abi_decode_word(topic1, 'address')").as("from_addr"),
-        expr("abi_decode_word(topic2, 'address')").as("to_addr"),
-        expr("abi_decode_data(data, 'uint256')").getField("arg0").as("value"),
-        coalesce(expr("abi_decode_data(data, 'uint256')").getField("arg0").cast("string"),
-          hex0x(col("data"))).as("value_or_hex"))
-  }
 
   /** Generic event decode: given a parsed ABI event, build the full
     * decoded projection — plan-time topic0 filter (P3), indexed params
@@ -326,7 +300,7 @@ object LogPipeline {
   /** Decoded + enriched Transfer rows (block timestamp joined broadcast). */
   def enrichedTransfers(spark: SparkSession, dir: String): DataFrame = {
     val logs = synthesizeLogs(Tables.events(spark, dir))
-    decodeTransfers(logs)
+    decodeEvent(logs, Transfer, "Token", "1")
       .join(broadcast(blockTimestamps(logs)), Seq("block_number"), "left")
   }
 

@@ -94,7 +94,7 @@ object Reorg {
     val withBucket = batch
       .withColumn("block_bucket", floor(col("block_number") / bucketBlocks))
     val buckets = withBucket.select("block_bucket").distinct()
-      .collect().map(_.getLong(0)) // bounded by the trigger window
+      .collect().map(_.getLong(0)).toIndexedSeq // bounded by the trigger window
     val dir = new java.io.File(path)
     val existing =
       if (dir.exists() && dir.listFiles() != null && dir.listFiles().nonEmpty)

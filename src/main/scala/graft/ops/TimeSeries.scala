@@ -336,7 +336,7 @@ object TimeSeries {
       col(key) === col("__bkey") && col("__bkt") === floor(col("__bts") / lookbackUs) &&
         col("__bts") >= col("__pep") - lookbackUs && col("__bts") < col("__pep"),
       "left")
-    joined.groupBy(probe.columns.map(col): _*)
+    joined.groupBy(probe.columns.toIndexedSeq.map(col): _*)
       .agg(count(col("__bval")).as(nOut), sum(col("__bval")).as(sumOut))
   }
 
@@ -377,7 +377,7 @@ object TimeSeries {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val filled = u.withColumn("__filled", last(col("__rv"), ignoreNulls = true).over(w))
     filled.filter(col("__side") === 1)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toIndexedSeq.map(col) ++
         Seq(col("__filled").getField("__rts").as(prefix + rightTs)) ++
         rightVals.map(v => col("__filled").getField(v).as(prefix + v)): _*)
   }

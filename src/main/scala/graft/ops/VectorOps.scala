@@ -280,7 +280,7 @@ object VectorOps {
       // struct-min does the argmin; (d asc, ci asc) ties pick the
       // lowest code, same tie rule as the oracle's row_number
       val sub = slice(vfd, j * dsub + 1, dsub)
-      array_min(array(book(j).zipWithIndex.map { case (c, ci) =>
+      array_min(array(book(j).toIndexedSeq.zipWithIndex.map { case (c, ci) =>
         val cd = c.map(_.toDouble)
         val cnorm = cd.map(x => x * x).sum
         struct((lit(cnorm) - lit(2.0) * dot(sub, typedLit(cd.toSeq))).as("d"),
@@ -816,7 +816,7 @@ object VectorOps {
     * `least` over structs breaks distance ties to the lowest cluster. */
   private def kmeansAssignCol(cents: Array[Array[Long]]): Column = {
     val vv = call_function("vec_dot_long", col("vq"), col("vq"))
-    least(cents.zipWithIndex.map { case (c, i) =>
+    least(cents.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       val cc = c.map(x => x * x).sum
       struct(
         (vv - lit(2L) * call_function("vec_dot_long", col("vq"),
@@ -1309,7 +1309,7 @@ object VectorOps {
     }
     // struct ordering does the argmax; negated id makes ties pick the
     // lowest centroid id
-    val scored = array(cents.map { case (cid, cv) =>
+    val scored = array(cents.toIndexedSeq.map { case (cid, cv) =>
       struct(cosTo(cv).as("cos"), lit(-cid).as("ncid"))
     }: _*)
     val assigned = base.withColumn("list_id",

@@ -34,7 +34,7 @@ object FooterStats {
         block.getColumns.forEach { cc =>
           val name = cc.getPath.toDotString
           if (wanted(name)) {
-            val st = cc.getStatistics
+            val st: org.apache.parquet.column.statistics.Statistics[_] = cc.getStatistics
             require(st != null && !st.isEmpty && st.hasNonNullValue,
               s"footerStats: $path column $name has no statistics")
             val mn = st.genericGetMin.asInstanceOf[Number].longValue()

@@ -203,7 +203,7 @@ object StreamOps {
     * consumer reads O(changes), never the full snapshot. */
   def stateChanges(prev: DataFrame, cur: DataFrame,
                    keys: Seq[String]): DataFrame = {
-    val payload = cur.columns.filterNot(keys.contains)
+    val payload = cur.columns.toIndexedSeq.filterNot(keys.contains)
     val p = prev.select(keys.map(col) :+
       struct(payload.map(col): _*).as("__old"): _*)
     val c = cur.select(keys.map(col) :+

@@ -5,8 +5,6 @@ import graft.evm.LogPipeline
 import org.apache.spark.sql.functions._
 
 class ConfigSpec extends SparkSpec {
-  import spark.implicits._
-
   private val transferAbi =
     """[{"type":"event","name":"Transfer","inputs":[
         {"indexed":true,"name":"from","type":"address"},
@@ -46,14 +44,6 @@ class ConfigSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Config.load("rpc_url: x\n", _ => transferAbi)
     }
-  }
-
-  test("contract-registry broadcast enrichment (J4)") {
-    val logs = Seq(("0xAAbb", 1L), ("0xcafe", 2L)).toDF("address", "block_number")
-    val out = LogPipeline.enrichContracts(logs,
-        Seq(("0xaabb", "USDC"))).orderBy("block_number").collect()
-    assert(out(0).getAs[String]("contract_name") == "USDC")
-    assert(out(1).isNullAt(out(1).fieldIndex("contract_name"))) // unknown kept
   }
 
   test("chunk progress metrics via Observation (C6)") {

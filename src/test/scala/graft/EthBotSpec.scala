@@ -87,14 +87,14 @@ class EthBotSpec extends SparkSpec {
 
   test("one executed swap-CSV scan per tradesZscore call") {
     // polarity, resample, common grid and consensus all ride the one scan
-    val scans = new ExecutedNodes({
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+    val (trades, m) = graft.obs.QueryMetrics.of(spark)(EthBot.tradesZscore(spark, dataDir,
+      lookback = 60, entryZ = 1.5, exitZ = 0.2, maxHold = 120).collect())
+    val scans = m.nodes.count {
+      case (f: org.apache.spark.sql.execution.FileSourceScanExec, _) =>
         f.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(dataDir))
       case _ => false
-    })
-    val trades = scans.around(spark)(EthBot.tradesZscore(spark, dataDir, lookback = 60,
-      entryZ = 1.5, exitZ = 0.2, maxHold = 120).collect())
+    }
     assert(trades.length == 60)
-    assert(scans.count.get() == 1, s"${scans.count.get()} swap-CSV scans executed")
+    assert(scans == 1, s"$scans swap-CSV scans executed")
   }
 }

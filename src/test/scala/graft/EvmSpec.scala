@@ -241,7 +241,7 @@ class EvmSqlSpec extends SparkSpec {
       graft.Tables.events(spark, "/root/testdata/sf0.001"))
     val known = Seq(Keccak.eventTopic0(LogPipeline.TransferSig))
     val unknown = LogPipeline.decodeUnknown(logs, known, "1")
-    val decoded = LogPipeline.decodeTransfers(logs)
+    val decoded = LogPipeline.decodeEvent(logs, LogPipeline.Transfer, "Token", "1")
     // nothing is dropped: every input log lands in exactly one side
     assert(unknown.count() + decoded.count() == logs.count())
     assert(unknown.count() > 0, "no unknown events in fixture")

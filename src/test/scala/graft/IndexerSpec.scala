@@ -2,6 +2,7 @@ package graft
 
 import graft.api.{Config, JobRegistry}
 import graft.evm.{Indexer, Keccak, LogPipeline}
+import graft.obs.QueryMetrics
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -236,14 +237,14 @@ class IndexerSpec extends SparkSpec {
 
     val job = Config.load(yaml, _ => tokenAbi)
     val txs = LogPipeline.synthesizeTxs(events)
-    val recoveries = new ExecutedNodes(
-      _.expressions.exists(_.exists(_.isInstanceOf[graft.evm.EcRecoverExpr])))
-    val counts = recoveries.around(spark)(Indexer.run(spark, job, dump,
+    val (counts, m) = QueryMetrics.of(spark)(Indexer.run(spark, job, dump,
       endBlock = 99, outDir = out, txs = Some(txs)))
+    val recoveries = m.nodes.count { case (p, _) =>
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.evm.EcRecoverExpr])) }
     // the sender dimension is recovered once per run, not once per pair
     assert(counts.size >= 2)
-    assert(recoveries.count.get() == 1,
-      s"${recoveries.count.get()} executed plan nodes evaluated ecrecover_sender")
+    assert(recoveries == 1,
+      s"$recoveries executed plan nodes evaluated ecrecover_sender")
 
     val back = spark.read.option("header", "true")
       .option("basePath", out).csv(out)
@@ -311,15 +312,14 @@ class IndexerSpec extends SparkSpec {
     val job = Config.load(yaml, _ => tokenAbi)
     for (emitUnknown <- Seq(false, true)) {
       val out = Files.createTempDirectory("idx_scan").toString
-      val scans = new ExecutedNodes({
-        case b: BatchScanExec => b.scan.isInstanceOf[graft.evm.LogScan]
-        case _ => false
-      })
-      val counts = scans.around(spark)(Indexer.run(spark, job, smallDump,
+      val (counts, m) = QueryMetrics.of(spark)(Indexer.run(spark, job, smallDump,
         endBlock = 99, outDir = out, emitUnknown = emitUnknown))
+      val scans = m.nodes.count {
+        case (b: BatchScanExec, _) => b.scan.isInstanceOf[graft.evm.LogScan]
+        case _ => false
+      }
       assert(counts.size == (if (emitUnknown) 5 else 3))
-      assert(scans.count.get() == 1,
-        s"${scans.count.get()} evm-logs scans executed (emitUnknown=$emitUnknown)")
+      assert(scans == 1, s"$scans evm-logs scans executed (emitUnknown=$emitUnknown)")
     }
   }
 
@@ -452,51 +452,4 @@ class IndexerSpec extends SparkSpec {
     assert(streamed.count() == batchTotal)
     assert(streamed.select("contract_name", "event_name").distinct().count() == 3)
   }
-}
-
-/** Counts the executed plan nodes that `matches`. A cached relation's
-  * plan runs inside the first execution that reads it; every later read
-  * scans the cached buffers, so each cache is walked once. */
-final class ExecutedNodes(matches: org.apache.spark.sql.execution.SparkPlan => Boolean)
-    extends org.apache.spark.sql.util.QueryExecutionListener {
-  import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
-  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-
-  val count = new java.util.concurrent.atomic.AtomicInteger
-  private val drained = new java.util.concurrent.CountDownLatch(1)
-  private val walked = java.util.Collections.newSetFromMap(
-    new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
-
-  private def nodes(p: SparkPlan): Int = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case c: CommandResultExec => nodes(c.commandPhysicalPlan)
-    case m: InMemoryTableScanExec =>
-      if (walked.add(m.relation.cacheBuilder)) nodes(m.relation.cachedPlan) else 0
-    case other =>
-      (if (matches(other)) 1 else 0) + (other.children ++ other.subqueries).map(nodes).sum
-  }
-
-  /** `body`'s result, once every query it ran has been counted: the
-    * listener bus delivers in order, so a sentinel query run after
-    * `body` is seen last. */
-  def around[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    spark.listenerManager.register(this)
-    try {
-      val result = body
-      spark.range(1).toDF(ExecutedNodes.Sentinel).collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      result
-    } finally spark.listenerManager.unregister(this)
-  }
-
-  override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-    if (qe.analyzed.output.exists(_.name == ExecutedNodes.Sentinel)) drained.countDown()
-    else count.addAndGet(nodes(qe.executedPlan))
-  override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-}
-
-object ExecutedNodes {
-  val Sentinel = "executed_nodes_sentinel"
 }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.scalatest.funsuite.AnyFunSuite
-
+import graft.obs.QueryMetrics
 import graft.ops.DataQueries
 
 /** Round 14: RankKernel's pass 2 moved to the driver — the collect job
@@ -17,36 +15,18 @@ class KernelJobShapeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("kernel offset collect job is agg-only: ≤ 2 stages per driver action") {
-    val sc = spark.sparkContext
-    val stageCounts = collection.mutable.ArrayBuffer.empty[Int]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        stageCounts.synchronized { stageCounts += j.stageInfos.size }
-    }
-    sc.addSparkListener(listener)
-    try {
-      // building the frame runs the kernel's driver actions (the narrow
-      // signal checkpoint + the offset collect); no output action yet
-      val df = DataQueries.tokenBudget(spark, sf)
-      // the bus is async; job-START events for the two synchronous
-      // driver actions are posted before the actions return, but spin
-      // briefly until the count stabilizes to be safe
-      var spins = 0
-      var last = -1
-      while (spins < 20 && stageCounts.synchronized(stageCounts.size) != last) {
-        last = stageCounts.synchronized(stageCounts.size)
-        Thread.sleep(100); spins += 1
-      }
-      val counts = stageCounts.synchronized(stageCounts.toList)
-      assert(counts.nonEmpty, "expected the kernel's driver actions to run jobs")
-      // job 1 = the localCheckpoint of the scored frame (1 stage);
-      // job 2 = the offset-table collect: scan + groupBy aggregate =
-      // exactly 2 stages. The pre-round-14 shape was 3+ (agg + the
-      // bare-stratum offset window's exchange).
-      assert(counts.forall(_ <= 2),
-        s"a kernel driver action grew past the agg-only shape: stages per job = $counts")
-      // and the prune path still yields the budgeted rows
-      assert(df.count() > 0)
-    } finally sc.removeSparkListener(listener)
+    // building the frame runs the kernel's driver actions (the narrow
+    // signal checkpoint + the offset collect); no output action yet
+    val (df, m) = QueryMetrics.of(spark)(DataQueries.tokenBudget(spark, sf))
+    val counts = m.stagesPerJob
+    assert(counts.nonEmpty, "expected the kernel's driver actions to run jobs")
+    // job 1 = the localCheckpoint of the scored frame (1 stage);
+    // job 2 = the offset-table collect: scan + groupBy aggregate =
+    // exactly 2 stages. The pre-round-14 shape was 3+ (agg + the
+    // bare-stratum offset window's exchange).
+    assert(counts.forall(_ <= 2),
+      s"a kernel driver action grew past the agg-only shape: stages per job = $counts")
+    // and the prune path still yields the budgeted rows
+    assert(df.count() > 0)
   }
 }

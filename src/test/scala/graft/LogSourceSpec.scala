@@ -180,10 +180,10 @@ class LogSourceSpec extends SparkSpec {
   test("streaming: decode pipeline over the stream equals the batch decode") {
     val dir = dumpDir
     def decoded(df: org.apache.spark.sql.DataFrame) =
-      LogPipeline.decodeTransfers(df
+      LogPipeline.decodeEvent(df
         .withColumn("topic1", unhex(col("topic1")))
         .withColumn("topic2", unhex(col("topic2")))
-        .withColumn("data", unhex(col("data"))))
+        .withColumn("data", unhex(col("data"))), LogPipeline.Transfer, "Token", "1")
     val stream = spark.readStream.format("graft.evm.LogSourceProvider")
       .option("path", dir).option("startBlock", 0).option("chunkSize", 25).load()
     val query = decoded(stream).writeStream.format("memory")

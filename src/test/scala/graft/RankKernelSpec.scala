@@ -17,6 +17,10 @@ import graft.ops.{DataQueries, RankKernel}
 class RankKernelSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
+  /** The most shuffle records one task read while `f` ran. */
+  private def measure(f: => Unit): Long =
+    graft.obs.QueryMetrics.of(spark)(f)._2.maxTaskShuffleRecords
+
   /** Adversarial fixture: stratum "en" holds ~80% of rows (the skewed
     * giant), plus tie-heavy scores (quantized to .01 so buckets and
     * intra-bucket ties both occur), a null-score row, zero-token rows,
@@ -178,7 +182,6 @@ class RankKernelSpec extends SparkSpec {
     // carries ONE exact score inside a bucket sliver that also holds
     // 100 distinct neighbor scores — mode 2 engages, and before the
     // recursion the atom's sub was one task
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val n = 200000L
     val df = spark.range(n).select(
         col("id").as("doc_id"), lit("en").as("lang"),
@@ -187,26 +190,6 @@ class RankKernelSpec extends SparkSpec {
           .otherwise(lit(0.5)).as("q"),
         lit(1L).as("n_tok"))
       .localCheckpoint(true)
-    @volatile var maxRecords = 0L
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) maxRecords = math.max(maxRecords,
-          m.shuffleReadMetrics.recordsRead)
-      }
-    }
-    def measure(f: => Unit): Long = {
-      maxRecords = 0L
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        f
-        var last = -1L; var spins = 0
-        while (last != maxRecords && spins < 20) {
-          last = maxRecords; Thread.sleep(250); spins += 1
-        }
-        maxRecords
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val partKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(coalesceKey, "true")
@@ -240,33 +223,12 @@ class RankKernelSpec extends SparkSpec {
     // the verdict's Missing #3 as a MEASUREMENT: every row of the giant
     // stratum carries ONE exact score (deduped-boilerplate shape), so
     // the primary score buckets cannot spread it — only the tie-range
-    // sub-split can. Same listener methodology as the skew test above.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    // sub-split can. Same measurement as the skew test above.
     val n = 200000L
     val df = spark.range(n).select(
         col("id").as("doc_id"), lit("en").as("lang"),
         lit(0.5).as("q"), lit(1L).as("n_tok"))
       .localCheckpoint(true)
-    @volatile var maxRecords = 0L
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) maxRecords = math.max(maxRecords,
-          m.shuffleReadMetrics.recordsRead)
-      }
-    }
-    def measure(f: => Unit): Long = {
-      maxRecords = 0L
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        f
-        var last = -1L; var spins = 0
-        while (last != maxRecords && spins < 20) {
-          last = maxRecords; Thread.sleep(250); spins += 1
-        }
-        maxRecords
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val partKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(coalesceKey, "true")
@@ -346,7 +308,6 @@ class RankKernelSpec extends SparkSpec {
     // AQE partition coalescing is disabled for the measurement — at
     // test scale (6 MB) it would legally re-merge everything into one
     // task by SIZE, which is the regime real data never sees.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val n = 200000L
     val df = spark.range(n).select(
         col("id").as("doc_id"),
@@ -355,27 +316,6 @@ class RankKernelSpec extends SparkSpec {
         (pmod(hash(col("id")), lit(1000000)).cast("double") / 1e6).as("q"),
         lit(1L).as("n_tok"))
       .localCheckpoint(true)
-    @volatile var maxRecords = 0L
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) maxRecords = math.max(maxRecords,
-          m.shuffleReadMetrics.recordsRead)
-      }
-    }
-    def measure(f: => Unit): Long = {
-      maxRecords = 0L
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        f
-        // listener events are async: poll until the max is stable
-        var last = -1L; var spins = 0
-        while (last != maxRecords && spins < 20) {
-          last = maxRecords; Thread.sleep(250); spins += 1
-        }
-        maxRecords
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val partKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(coalesceKey, "true")

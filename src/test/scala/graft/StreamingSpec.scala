@@ -146,9 +146,9 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append").start()
     try {
       // two uneven batches per side — pairs must span batch boundaries
-      pIn.addData(purch.take(50): _*); cIn.addData(clicks.take(200): _*)
+      pIn.addData(purch.take(50).toIndexedSeq: _*); cIn.addData(clicks.take(200).toIndexedSeq: _*)
       q.processAllAvailable()
-      pIn.addData(purch.drop(50): _*); cIn.addData(clicks.drop(200): _*)
+      pIn.addData(purch.drop(50).toIndexedSeq: _*); cIn.addData(clicks.drop(200).toIndexedSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
     val got = spark.table("ssj_out").collect()
