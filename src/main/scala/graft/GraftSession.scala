@@ -17,7 +17,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
-      .withExtensions(graft.evm.GraftExtensions)
+      .withExtensions(SqlFunctions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // AQE coalescePartitions.minPartitionSize stays at its 1m

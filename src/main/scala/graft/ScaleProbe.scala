@@ -125,9 +125,9 @@ object ScaleProbe {
       }, group)
       worker.setDaemon(true)
       worker.start()
-      lastWorker = worker
       val finished = done.await(TimeoutSec.toLong,
         java.util.concurrent.TimeUnit.SECONDS)
+      lastWorker = if (finished) null else worker
       try {
         if (!finished) {
           spark.sparkContext.cancelJobGroup(group)

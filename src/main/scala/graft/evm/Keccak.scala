@@ -109,7 +109,7 @@ object Keccak {
   private val Hex = java.util.HexFormat.of()
 
   /** Lowercase hex, no prefix: the one hex renderer of the EVM surface
-    * (topics, addresses, ABI words, `data_hex` via [[Hex0xExpr]]). */
+    * (topics, addresses, ABI words, `data_hex` via [[AbiRt.hex0x]]). */
   def hex(bytes: Array[Byte]): String = Hex.formatHex(bytes)
 
   /** topic0 of an event signature like "Transfer(address,address,uint256)". */

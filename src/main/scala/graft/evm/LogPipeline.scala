@@ -102,7 +102,7 @@ object LogPipeline {
     }: _*)
   }
 
-  /** "0x" + lowercase hex of a binary column ([[Hex0xExpr]]): the raw
+  /** "0x" + lowercase hex of a binary column (`hex0x`, [[AbiRt.hex0x]]): the raw
     * rendering of payloads and topics in every decode projection. */
   def hex0x(c: Column): Column = call_function("hex0x", c)
 

@@ -2,9 +2,10 @@ package graft.obs
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable.ArrayBuffer
 
@@ -24,12 +25,25 @@ final class QueryMetrics(spark: SparkSession, group: Option[String] = None) {
   private val ownStages = scala.collection.mutable.Set.empty[Int]
   private val completed = ArrayBuffer.empty[Stage]
   private val executed = ArrayBuffer.empty[SparkPlan]
+  private val executionSites = scala.collection.mutable.Map.empty[Long, String]
+  private val stageSites = scala.collection.mutable.Map.empty[Int, String]
   private var maxRecords = 0L
 
   private def owned(stageId: Int) = group.isEmpty || ownStages(stageId)
 
   private val listener = new SparkListener {
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        QueryMetrics.this.synchronized { executionSites(s.executionId) = s.details }
+      case _ =>
+    }
     override def onJobStart(j: SparkListenerJobStart): Unit = QueryMetrics.this.synchronized {
+      // under AQE a query stage's job is submitted from a Spark thread,
+      // so its own call site holds no caller frame: use its query's
+      for (id <- Option(j.properties).flatMap(p =>
+             Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)));
+           site <- executionSites.get(id.toLong))
+        j.stageIds.foreach(stageSites(_) = site)
       val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id"))
       if (group.isEmpty || g == group) {
         jobStageCounts += j.stageInfos.size
@@ -41,7 +55,8 @@ final class QueryMetrics(spark: SparkSession, group: Option[String] = None) {
         val si = e.stageInfo
         def metric(f: org.apache.spark.executor.TaskMetrics => Long) =
           Option(si.taskMetrics).fold(0L)(f)
-        if (owned(si.stageId)) completed += Stage(si.stageId, si.details, si.numTasks,
+        if (owned(si.stageId)) completed += Stage(si.stageId,
+          stageSites.getOrElse(si.stageId, si.details), si.numTasks,
           metric(_.executorRunTime), metric(_.executorCpuTime) / 1000000,
           metric(_.shuffleReadMetrics.totalBytesRead),
           metric(_.shuffleWriteMetrics.bytesWritten), metric(_.inputMetrics.bytesRead),
@@ -109,8 +124,9 @@ final class QueryMetrics(spark: SparkSession, group: Option[String] = None) {
 }
 
 object QueryMetrics {
-  /** One completed stage. Times are epoch ms; `site` is the stage's
-    * call-site stack, one frame a line. */
+  /** One completed stage. Times are epoch ms; `site` is the call-site
+    * stack, one frame a line, of the stage's SQL query (the stage's own
+    * for work outside one). */
   final case class Stage(id: Int, site: String, tasks: Int,
       runMs: Long, cpuMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
       inputBytes: Long, submitted: Long, completed: Long)

@@ -12,7 +12,7 @@ import TextOps.h64
   * cross join, so the plans scale to billions of documents.
   *
   * Fingerprints (minhash signature, simhash) are computed by one-pass
-  * custom expressions ([[MinhashSigExpr]], [[Simhash64Expr]]) during
+  * SQL functions (`minhash_sig`, `simhash64`; [[graft.SqlFunctions]]) during
   * the scan — map-only, no explode/shuffle/regroup — which is both the
   * fast local form and the only sane 100 TB form (the long-format
   * explode multiplies every shuffle by k). All derived values are
@@ -480,7 +480,7 @@ object DedupOps {
 
   /** Wide-form MinHash: (doc, sig array<long>[k]), one row per document
     * with ≥1 shingle. Map-only — the signature is computed during the
-    * scan by [[MinhashSigExpr]]; nothing shuffles until a consumer
+    * scan by `minhash_sig` ([[Hashing.minhashSig]]); nothing shuffles until a consumer
     * joins or bands. */
   def minhashSigWide(df: DataFrame, id: String, text: String, k: Int,
                      shingleN: Int = 3): DataFrame =
@@ -982,7 +982,7 @@ object DedupOps {
   /** 48-bit SimHash over tokens (with multiplicity): bit j is 1 when the
     * sum over token hashes of ±1 (by bit j of h64(token)) is positive.
     * 48 bits keeps every shift inside a positive bigint. One-pass
-    * [[Simhash64Expr]] during the scan; docs without tokens are dropped
+    * `simhash64` ([[Hashing.simhash64]]) during the scan; docs without tokens are dropped
     * (parity with the aggregate form, where they produce no groups). */
   def simhash(df: DataFrame, id: String, text: String, bits: Int = 48): DataFrame =
     df.select(col(id).as("doc"), TextOps.tokens(col(text)).as("tk"))

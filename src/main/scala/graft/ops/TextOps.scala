@@ -268,7 +268,7 @@ object TextOps {
   def langId(text: Column): Column = langIdFromTokens(tokens(text))
 
   /** h64 hashes of the distinct word n-gram shingles, one tight-loop
-    * expression ([[ShingleH64sExpr]]) — the scan-time form every dedup
+    * expression (`shingle_h64s`, [[Hashing.shingleH64s]]) — the scan-time form every dedup
     * fingerprint builds on. Bit-exact with
     * `transform(shingles(text, n), h64)`. */
   def shingleHashes(text: Column, n: Int): Column =
@@ -307,7 +307,7 @@ object TextOps {
         Ipv4Pattern, "<IP>"), lit(PhonePattern), lit(0))))
 
   /** Per-document repetition statistics (Gopher-style quality signals)
-    * in one map-side pass ([[RepStatsExpr]]): distinct-token count, the
+    * in one map-side pass (`rep_stats`, [[Hashing.repStats]]): distinct-token count, the
     * most frequent positional 2-gram and its count, and the character
     * mass inside duplicated 3-grams. The relational spelling explodes
     * every n-gram and re-groups per document — two shuffles the
@@ -318,8 +318,8 @@ object TextOps {
   /** Winnowing fingerprint set (MOSS): distinct ascending window-min
     * hashes over the POSITIONAL n-gram hash sequence with window w —
     * guarantees a shared fingerprint for any common run of ≥ w+n−1
-    * tokens. One-pass [[WinnowFpsExpr]] (shingle → hash → deque
-    * window-min), no interpreted HOFs. */
+    * tokens. One-pass `winnow_fps` ([[Hashing.winnowFps]]: shingle →
+    * hash → deque window-min), no interpreted HOFs. */
   def winnowingFingerprints(text: Column, n: Int, w: Int): Column =
     call_function("winnow_fps", tokens(text), lit(n), lit(w))
 

@@ -240,7 +240,7 @@ class IndexerSpec extends SparkSpec {
     val (counts, m) = QueryMetrics.of(spark)(Indexer.run(spark, job, dump,
       endBlock = 99, outDir = out, txs = Some(txs)))
     val recoveries = m.nodes.count { case (p, _) =>
-      p.expressions.exists(_.exists(_.isInstanceOf[graft.evm.EcRecoverExpr])) }
+      p.expressions.exists(_.exists(_.prettyName == "ecrecover_sender")) }
     // the sender dimension is recovered once per run, not once per pair
     assert(counts.size >= 2)
     assert(recoveries == 1,

@@ -186,7 +186,7 @@ class PlanQualitySpec extends SparkSpec {
     // ecrecover_sender were the expression surface's last
     // CodegenFallbacks — one of them in the ingest decode projection
     // evicted every sibling decode column from whole-stage codegen
-    // (the HashExpressions.scala eviction rule, on the indexer's hot
+    // (the CodegenFallback eviction rule, on the indexer's hot
     // path). All three now ride static twins in AbiRt.
     import graft.evm.{Keccak, Secp256k1}
     import java.math.BigInteger
@@ -261,7 +261,8 @@ class PlanQualitySpec extends SparkSpec {
     val inputs: Seq[Array[Byte]] =
       Seq(null, Array.emptyByteArray, Array.tabulate[Byte](256)(_.toByte)) ++
         Seq.fill(300)(Array.fill(rnd.nextInt(100))(rnd.nextInt(256).toByte))
-    val e = graft.evm.Hex0xExpr(BoundReference(0, BinaryType, nullable = true))
+    val e = SqlFunctions.table.find(_.name == "hex0x").get
+      .build(Seq(BoundReference(0, BinaryType, nullable = true)))
     val interpreted = inputs.map(b => Option(e.eval(InternalRow(b))).map(_.toString).orNull)
     val generated = GenerateUnsafeProjection.generate(Seq(e))
     val viaCodegen = inputs.map { b =>

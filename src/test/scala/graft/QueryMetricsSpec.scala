@@ -29,6 +29,17 @@ class QueryMetricsSpec extends SparkSpec {
     assert(st.forall(s => s.tasks > 0 && s.completed >= s.submitted && s.submitted > 0), st)
   }
 
+  test("under AQE every stage's site holds the graft frame that ran the query") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val (rows, m) = QueryMetrics.of(spark)(
+      spark.range(1000).repartition(3).groupBy(col("id") % 10).count().collect())
+    assert(rows.length == 10)
+    val st = m.stages
+    assert(st.size >= 2, st)
+    assert(st.forall(_.site.linesIterator.exists(_.startsWith("graft."))),
+      st.map(_.site).mkString("\n---\n"))
+  }
+
   test("a cached frame's scan counts once across two actions; an uncached one twice") {
     val plain = spark.range(100).filter(col("id") % 2 === 0)
     assert(ranges(QueryMetrics.of(spark) { plain.count(); plain.collect() }._2) == 2)

@@ -77,6 +77,20 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(r.nonEmpty && r.head.getInt(2) == 1)
   }
 
+  test("a wrong argument count names the function and its signature") {
+    val sigs = Seq(
+      "hex0x(bytes binary) -> string" -> Seq("hex0x()", "hex0x(b, b)"),
+      "shingle_h64s(tokens array<string>, n const int) -> array<bigint>" ->
+        Seq("shingle_h64s(t)", "shingle_h64s(t, 2, 3)"),
+      "kmv_distinct(hash bigint, k const int) -> double" ->
+        Seq("kmv_distinct(k)", "kmv_distinct(k, 8, 9)"))
+    for ((sig, calls) <- sigs; call <- calls) {
+      val e = intercept[Exception](spark.sql(
+        s"SELECT $call FROM VALUES (X'00', array('a'), 1L) AS v(b, t, k)").collect())
+      assert(e.getMessage.contains(sig), s"$call: ${e.getMessage}")
+    }
+  }
+
   test("literal evm_topic0/keccak256 constant-fold at plan time") {
     val df = spark.sql(
       "SELECT evm_topic0('Transfer(address,address,uint256)') AS t")
